@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Diagnostic main: times the q_crawl_e2e flagship in isolation (per-round
-  * action times via SPARK_GRAFT_DEBUG_TIMING). Not part of the driver
-  * contract — a tuning tool.
+/** Diagnostic main: times the q_crawl_e2e flagship in isolation (total
+  * seconds per pass, printed to stderr). Not part of the driver contract —
+  * a tuning tool.
   *
   * With SPARK_GRAFT_E2E_AB=1 it instead runs an interleaved A/B over the
   * loop's session-conf variants (shuffle partitions × AQE), reporting the

@@ -97,10 +97,10 @@ object PlanDump {
     val round = crawl.FrontierRound.run(spark, 0, frontier, seen, pages, robotsCache, resolved, cfg)
     dump("One crawl round (results output)",
       "Want: broadcast of the robots cache; the pages `html` column read only in " +
-        "the extraction branch (column pruning elsewhere); status-row splits as " +
-        "filters over a shared cached subtree (InMemoryTableScan).",
+        "the extraction branch (column pruning elsewhere); the gates as columns " +
+        "of one linear plan over the checkpointed schedule and round leaves.",
       round.results)
-    round.unpersist()
+    round.release()
 
     // 8. corpus ops: boilerplate-line removal, hash split, pii scrub
     // formatted (physical-tree-first): the extended dump's analyzed/optimized

@@ -171,7 +171,7 @@ object ScratchProbe {
         val t0 = System.nanoTime()
         val res = graft.crawl.FrontierRound.resolveRedirects(spark, redirects, c)
         val s = (System.nanoTime() - t0) / 1e9
-        res.unpersist()
+        graft.crawl.FrontierRound.release(res)
         t(name) = s :: t(name)
         System.err.println(f"CLOSURE rep=$rep $name%-8s $s%7.3f")
       }

@@ -3,7 +3,7 @@ package graft.crawl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.io.TableIO
+import graft.io.{RoundManifest, TableIO}
 import graft.model._
 
 /** The batch-iterative crawl driver (reference lifecycle: SURVEY.md §3.1 →
@@ -62,13 +62,10 @@ object CrawlJob {
 
     val io = new TableIO(spark, stateDir)
     val runId = resolveRunId(seeds, cfg)
-    // static per-job tables, localCheckpointed (not just cached): the
-    // redirect closure's logical plan is a maxRedirects-deep join/union
-    // tree, and WITHOUT truncation every round's plan embeds it and pays
-    // its Catalyst analysis again — checkpointing collapses it to a
-    // LogicalRDD leaf once (resolveRedirects checkpoints internally so its
-    // hop-table cache is released as soon as the closure materializes)
-    val robotsCache = FrontierRound.buildRobotsCache(robots).localCheckpoint(true)
+    // static per-job tables as checkpointed leaves (not just cached), so
+    // every round's plan embeds a LogicalRDD leaf instead of re-analyzing
+    // their plans (resolveRedirects checkpoints internally)
+    val robotsCache = staticLeaf(FrontierRound.buildRobotsCache(robots))
     val resolved = FrontierRound.resolveRedirects(spark, redirects, cfg)
 
     var round = 0
@@ -106,9 +103,7 @@ object CrawlJob {
       // the manifest carries the cumulative count — a resume must not pay a
       // full seen-table scan for a number the commit already knew (older
       // checkpoints without the field fall back to the one-time count)
-      seenTotal = io.readManifest(last)
-        .flatMap("\"seen_total\":(\\d+)".r.findFirstMatchIn(_))
-        .map(_.group(1).toLong)
+      seenTotal = io.readManifest(last).flatMap(RoundManifest.seenTotal)
         .getOrElse(seen.count())
       if (cfg.useBloomSeen) {
         bloomCap = SeenFilter.sizedFor(cfg.bloomExpectedPerBucket,
@@ -167,32 +162,32 @@ object CrawlJob {
       val cuckoo = cuckooDir.filter(_ => cuckooOn(frontierCount)).map(d =>
         FrontierFilter.broadcastFileCuckoos(spark, cfg.seenBuckets, d))
       val out = FrontierRound.run(spark, round, frontier, seen, pages, robotsCache, resolved, cfg, blooms, megaHosts, cuckoo)
+      // ONE action materializes results, next frontier, new-seen and the
+      // cuckoo delta slices and returns every count the commit needs; each
+      // write below reads that leaf, never the round tree
+      val m = FrontierRound.materialize(out)
+      out.release()
 
       // persist first, commit manifest last (atomic) — exact-resume contract
-      val stamped = FrontierRound.stampTimings(out.results, round, cfg)
+      val stamped = FrontierRound.stampTimings(m.results, round, cfg)
         .withColumn("run_id", lit(runId))
       io.writeResults(round, stamped)
       if (cfg.exportJsonl)
         io.writeResultsJsonl(round, stamped,
           Some(FrontierRound.exportLinks(stamped, pages)))
-      io.writeSeen(round, out.newSeen
+      io.writeSeen(round, m.newSeen
         .withColumn("bucket", pmod(xxhash64(col("url")), lit(cfg.seenBuckets))))
-      io.writeFrontier(round, out.newFrontier)
+      io.writeFrontier(round, m.frontier)
 
-      // read checkpoints back: truncates lineage AND makes each round's
-      // input immutable on disk (snapshot isolation per round)
+      // the next round reads the written checkpoints (frontier here, seen
+      // after compaction below): truncates lineage AND makes each round's
+      // input immutable on disk (snapshot isolation per round). The counts
+      // come from the action — the cumulative seen table is never rescanned
+      // for a metric.
       frontier = io.readFrontier(round)
-      seen = io.readSeen(round).map(_.select("url")).getOrElse(emptySeen(spark))
-      frontierCount = frontier.count()
+      frontierCount = m.frontierCount
+      seenTotal += m.newSeenCount
 
-      // this round's new-seen slice: counted once (the cumulative seen
-      // table is NEVER rescanned for a metric) and folded into the blooms.
-      // A round CAN produce zero new-seen rows (every scheduled url became
-      // seen mid-round, e.g. as another url's redirect target) — TableIO
-      // probes the bucket dirs through the Hadoop FS API (HDFS/object-store
-      // safe) and returns None for an empty slice.
-      val newSeenSlice = io.readSeenSlice(round).getOrElse(emptySeen(spark))
-      seenTotal += newSeenSlice.count()
       if (cfg.useBloomSeen) {
         val cap = SeenFilter.sizedFor(cfg.bloomExpectedPerBucket,
           seenTotal / math.max(cfg.seenBuckets, 1))
@@ -201,12 +196,12 @@ object CrawlJob {
           // load crossed capacity: rebuild ALL filters wider from the full
           // seen table (amortized by doubling; merge needs equal widths)
           bloomCap = cap
-          SeenFilter.writeMergedBlooms(seen.select("url"), cfg.seenBuckets,
-            bloomCap, None, dir)
+          SeenFilter.writeMergedBlooms(io.readSeen(round).get.select("url"),
+            cfg.seenBuckets, bloomCap, None, dir)
         } else {
           // incremental: this round's slice folded into the previous round's
           // files (merge + copy-forward, all executor-side / streamed)
-          SeenFilter.writeMergedBlooms(newSeenSlice, cfg.seenBuckets,
+          SeenFilter.writeMergedBlooms(m.newSeen, cfg.seenBuckets,
             bloomCap, bloomDir, dir)
         }
         bloomDir = Some(dir)
@@ -233,7 +228,7 @@ object CrawlJob {
         } else {
           // incremental: O(|delta|), never a frontier scan — insert this
           // round's enqueued urls, delete its scheduled ones
-          FrontierFilter.writeDeltas(out.entered, out.departed,
+          FrontierFilter.writeDeltas(m.entered, m.departed,
             cfg.seenBuckets, cuckooCap, cuckooDir.get, dir)
         }
         cuckooDir = Some(dir)
@@ -241,34 +236,16 @@ object CrawlJob {
       blooms.foreach(_.unpersist(false))
       cuckoo.foreach(_.unpersist(false))
 
-      val results = spark.read.parquet(s"$stateDir/results/round=$round")
-      val agg = results.agg(
-        count(lit(1)).as("scheduled"),
-        sum(when(col("crawl_status") === CrawlStatus.Fetched, 1L).otherwise(0L)).as("fetched"),
-        sum(when(col("n_links") >= 0, col("n_links").cast("long")).otherwise(0L)).as("new_links"),
-        // plain column aggregate — host is carried on every ResultRow from
-        // the frontier entry; re-deriving it per row with a UDF is the
-        // UDF-where-a-column-exists anti-pattern the north rule bans
-        countDistinct(col("host")).as("hosts")
-      ).collect()(0)
-      val scheduledN = agg.getAs[Long]("scheduled")
-      val fetchedN = Option(agg.getAs[Long]("fetched")).getOrElse(0L)
-      val metricsDf = Seq(RoundMetrics(
-        round, scheduledN, fetchedN, scheduledN - fetchedN,
-        Option(agg.getAs[Long]("new_links")).getOrElse(0L),
-        frontierCount, seenTotal, agg.getAs[Long]("hosts"))).toDF()
-      out.unpersist()
-      io.writeMetrics(round, metricsDf)
-      io.commitRound(round,
-        s"""{"round":$round,"scheduled":$scheduledN,"fetched":$fetchedN,"frontier":$frontierCount,"seen_total":$seenTotal}""")
+      val metrics = m.metrics(round, seenTotal)
+      io.writeMetrics(round, Seq(metrics).toDF())
+      io.commitRound(round, RoundManifest.encode(metrics))
+      m.release()
 
       // periodic seen compaction — strictly AFTER the commit marker (only
       // committed rounds may be folded in; a crash mid-compaction must
-      // leave a resumable layout). The live `seen` plan referenced the
-      // now-deleted per-round dirs, so re-read it from the compacted snapshot.
+      // leave a resumable layout)
       if (cfg.seenCompactEvery > 0 && (round + 1) % cfg.seenCompactEvery == 0) {
         io.compactSeen(round)
-        seen = io.readSeen(round).map(_.select("url")).getOrElse(emptySeen(spark))
         // results/metrics are append-only: fold the tail rounds into one
         // committed range dir (bounds the small-files listing the same way
         // seen compaction does, without re-copying history)
@@ -284,13 +261,14 @@ object CrawlJob {
         io.gcFilterDirsBelow("cuckoo", round, ".cf")
         io.gcManifestsBelow(round)
       }
+      seen = io.readSeen(round).map(_.select("url")).getOrElse(emptySeen(spark))
 
       roundSecs += (System.nanoTime() - roundT0) / 1e9
       round += 1
     }
 
-    robotsCache.unpersist()
-    resolved.unpersist()
+    FrontierRound.release(robotsCache)
+    FrontierRound.release(resolved)
     // zero rounds executed AND nothing committed earlier (fresh run with an
     // empty seed list): nothing was ever written, so the append-table reads
     // would throw. Return the empty-but-correctly-shaped tables instead —
@@ -332,35 +310,15 @@ object CrawlJob {
       robots: DataFrame,
       redirects: DataFrame,
       cfg: CrawlConfig): DataFrame = {
-    import spark.implicits._
-    val dbgT = sys.env.contains("SPARK_GRAFT_DEBUG_TIMING")
-    var t0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbgT) {
-      System.err.println(f"E2ESETUP $tag=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
-    // localCheckpoint (not cache): collapse the static plans to LogicalRDD
-    // leaves so the per-round Catalyst work doesn't grow with maxRedirects,
-    // and embedded LocalRelation fixtures don't ride inside every plan
-    // (resolveRedirects checkpoints internally).
-    // coalesce(1) first: a LocalRelation fixture parallelizes ~one PARTITION
-    // PER ROW, and the checkpointed leaf keeps that granularity — every one
-    // of the loop's ~90 stages then dispatches ~30 one-row tasks (measured:
-    // 1784 → 493 tasks per flagship run; wall-neutral on local[32], where
-    // the one-row tasks dispatched in parallel anyway, but 3.6× less
-    // scheduler traffic). The embedded loop is fixture-bounded by contract
-    // (driver smoke query, tests, bench); the persistent loop keeps
-    // parquet-native partitioning.
-    val robotsCache = FrontierRound.buildRobotsCache(robots).coalesce(1).localCheckpoint(true)
-    lap("robots_ckpt")
+    // static inputs as checkpointed leaves, so the per-round Catalyst work
+    // doesn't re-analyze their plans (resolveRedirects checkpoints
+    // internally)
+    val robotsCache = staticLeaf(FrontierRound.buildRobotsCache(robots))
     val resolved = FrontierRound.resolveRedirects(spark, redirects, cfg)
-    lap("redirect_closure")
-    val pagesCk = pages.coalesce(1).localCheckpoint(true)
-    lap("pages_ckpt")
+    val pagesCk = staticLeaf(pages)
     val runId = resolveRunId(seeds, cfg)
     var frontier = seedFrontier(spark, seeds).coalesce(1).persist()
     var seen = emptySeen(spark).persist()
-    lap("seed_persist")
     // per-round result leaves, unioned ONCE after the loop: results are
     // never read mid-loop, and an incremental union would re-analyze an
     // O(round)-leaf plan every round (quadratic total Catalyst work)
@@ -368,7 +326,6 @@ object CrawlJob {
     var round = 0
     var bloomBytes: Map[Int, Array[Byte]] = Map.empty
     var frontierCount = frontier.count()
-    lap("first_count")
     while (frontierCount > 0 && round < cfg.maxRounds) {
       val blooms =
         if (cfg.useBloomSeen)
@@ -378,59 +335,20 @@ object CrawlJob {
         if (frontierCount > cfg.megaHostThreshold)
           Some(FrontierRound.findMegaHostsDf(frontier, cfg.megaHostThreshold))
         else None
-      val tb = System.nanoTime()
       val out = FrontierRound.run(spark, round, frontier, seen, pagesCk, robotsCache, resolved, cfg, blooms, megaHosts)
-      val tr = System.nanoTime()
-      // localCheckpoint (lazy) truncates the iterative lineage. Each lazy
-      // checkpoint costs a full Catalyst optimize+codegen pass over the
-      // round tree, so the round takes exactly ONE: results, next frontier
-      // AND the new-seen delta all ride the same checkpoint as a tagged
-      // union (missing columns null-filled), split back into leaves
-      // afterwards. newSeen references the round tree's results subtree a
-      // second time, but that subtree hangs off the round's persisted
-      // intermediates, so execution pays a cache scan, not a re-join — and
-      // folding it here removes the per-round second checkpoint pass plus
-      // the separate three-leg counts plan the loop used to build (r4
-      // verdict #3: the flagship's cost is per-round fixed driver work).
-      // `round` is attached ABOVE the leaf: a changing literal inside the
-      // (identically-shaped) round tree would bust the generated-code cache
-      // and re-compile every stage every round.
-      val unifiedPre = out.results.withColumn("__kind", lit("r"))
-        .unionByName(out.newFrontier.withColumn("__kind", lit("f")),
-          allowMissingColumns = true)
-        .unionByName(FrontierRound.newSeenOf(out.results, seen)
-          .withColumn("__kind", lit("s")), allowMissingColumns = true)
-      val unified = unifiedPre.localCheckpoint(false)
-      if (sys.env.contains("SPARK_GRAFT_DEBUG_TIMING"))
-        System.err.println("E2EPHASES " + unifiedPre.queryExecution.tracker.phases
-          .map { case (k, v) => s"$k=${v.endTimeMs - v.startTimeMs}ms" }.mkString(" "))
-      if (round == 1 && sys.env.contains("SPARK_GRAFT_DEBUG_PLAN"))
-        System.err.println("E2EPLAN round=1\n" +
-          unifiedPre.queryExecution.executedPlan.treeString)
-      val resultCols = out.results.columns
-      val frontierCols = out.newFrontier.columns
-      val t0 = System.nanoTime()
-      // the ONE action of the round: materializes the checkpoint and
-      // returns all three leg counts
-      val counts = unified.groupBy(col("__kind")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val tc1 = System.nanoTime()
+      // the round's ONE action (same fold as the persistent loop); the
+      // leaves stay live — results are unioned after the loop, and the next
+      // round reads the frontier and new-seen legs
+      val m = FrontierRound.materialize(out)
+      out.release()
       // round + absolute timings attach ABOVE the checkpoint leaf (changing
       // literals inside the round tree would bust the codegen cache)
-      val newResults = FrontierRound.stampTimings(
-        unified.filter(col("__kind") === "r").select(resultCols.map(col): _*),
-        round, cfg).withColumn("run_id", lit(runId))
+      val newResults = FrontierRound.stampTimings(m.results, round, cfg)
+        .withColumn("run_id", lit(runId))
         .withColumn("round", lit(round))
-      val newFrontier = unified.filter(col("__kind") === "f")
-        .select(frontierCols.map(col): _*)
-      val newSeenRows = unified.filter(col("__kind") === "s").select(col("url"))
-      if (sys.env.contains("SPARK_GRAFT_DEBUG_TIMING"))
-        System.err.println(f"E2EROUND round=$round build=${(tr - tb) / 1e9}%.2fs ckpt+action=${(tc1 - t0) / 1e9}%.2fs")
-      out.unpersist()
       if (cfg.useBloomSeen) {
         bloomBytes = SeenFilter.merge(bloomBytes,
-          SeenFilter.buildBlooms(newSeenRows.select("url"),
-            cfg.seenBuckets, cfg.bloomExpectedPerBucket))
+          SeenFilter.buildBlooms(m.newSeen, cfg.seenBuckets, cfg.bloomExpectedPerBucket))
       }
       blooms.foreach(_.unpersist(false))
       frontier.unpersist(); seen.unpersist()
@@ -440,19 +358,31 @@ object CrawlJob {
       // rounds over a tiny table; the persistent loop truncates via
       // parquet). The checkpoint already stores the partitions, so no
       // .persist() on top — that would hold the rows twice.
-      val grownSeen = seen.union(newSeenRows)
+      val grownSeen = seen.union(m.newSeen)
       seen = if ((round + 1) % 8 == 0) grownSeen.localCheckpoint(false)
              else grownSeen.persist()
-      frontier = newFrontier
+      frontier = m.frontier
       resultRounds += newResults
-      frontierCount = counts.getOrElse("f", 0L)
+      frontierCount = m.frontierCount
       round += 1
     }
-    robotsCache.unpersist(); resolved.unpersist()
+    FrontierRound.release(robotsCache); FrontierRound.release(resolved)
     // empty case carries the same schema as the non-empty one (ResultRow
     // columns + the per-round `round` literal appended by the loop)
     if (resultRounds.isEmpty) emptyResults(spark)
     else resultRounds.reduce(_ union _)
+  }
+
+  /** A static input as a checkpointed leaf. An embedded fixture (every
+    * leaf of its analyzed plan is a LocalRelation) parallelizes
+    * ~one partition per row, and the leaf would keep that granularity —
+    * every stage of every round then dispatches one near-empty task per
+    * row — so it is coalesced to one partition first. The check reads the
+    * plan and runs no job; a table scan keeps its own partitioning. */
+  private[crawl] def staticLeaf(df: DataFrame): DataFrame = {
+    val embedded = df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    (if (embedded) df.coalesce(1) else df).localCheckpoint(true)
   }
 
   /** Canonical result ordering for parity checks: a contiguous global rank

@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, SparkSession, Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.canon.{UrlCanon, LinkExtract, UriScope}
@@ -108,12 +108,23 @@ object FrontierRound {
         col("r.allowAll").as("allow_all"), col("r.body").as("robots_body"))
   }
 
+  /** Output schema of [[resolveRedirects]]. */
+  private val closureSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "start_url string, final_url string, n_redirects int, terminal_is_redirect boolean, " +
+      s"terminal_status int, redirects $chainType")
+
   /** Transitive closure of the redirects fixture, bounded by maxRedirects —
     * computed ONCE per job (redirect chains are static), so each round pays a
     * single join instead of maxRedirects+1 iterative ones
     * (reference follows redirects recursively per request,
     * fetch_header_command.rs:31-69; location headers are canonicalized
     * against the CURRENT hop's scheme/host, :73-90).
+    *
+    * Semi-naive fixpoint: each hop left-joins only the chains STILL
+    * redirecting (one materialized leaf) against the hop table, so every hop
+    * adds a constant-size plan, and the walk stops as soon as that leaf is
+    * empty — the number of hops follows the longest real chain, not
+    * maxRedirects, and an empty hop table builds no hop at all.
     *
     * Output: (start_url, final_url, n_redirects, terminal_is_redirect,
     * terminal_status, redirects). final_url = last followed destination
@@ -124,7 +135,6 @@ object FrontierRound {
     * following it).
     */
   def resolveRedirects(spark: SparkSession, redirects: DataFrame, cfg: CrawlConfig): DataFrame = {
-    import spark.implicits._
     // hop headers: optional fixture column (keys lowercased on ingestion —
     // F9, same rule as page headers); absent/null rows get the minimal
     // faithful map — a followed redirect response always carried at least
@@ -143,22 +153,32 @@ object FrontierRound {
       .cache()
 
     // Exact hop-table size, known up front (the count materializes `r`'s
-    // cache, which the first hop would have paid anyway): small tables get
-    // (a) broadcast hop joins below and (b) a single-partition closure leaf
-    // — a LocalRelation-fed closure otherwise checkpoints at ~one partition
-    // per row, and every round's redirect join then dispatches that many
-    // near-empty tasks.
-    val smallHopTable = r.count() <= cfg.redirectBroadcastMaxRows
-
-    // Collapse the finished closure to a LogicalRDD leaf HERE (eager
-    // checkpoint): the closure is a maxRedirects-deep join/union tree that
-    // every round's plan would otherwise embed and re-analyze, and
-    // materializing inside lets `r`'s cache — which exists only to dedupe
-    // the hop joins of this one build — be released immediately instead of
-    // lingering for the job's lifetime.
-    def finish(plan: DataFrame): DataFrame = {
-      val out = (if (smallHopTable) plan.coalesce(1) else plan).localCheckpoint(true)
+    // cache, which the hops read anyway): small tables get (a) broadcast hop
+    // joins and (b) single-partition leaves — a LocalRelation-fed closure
+    // otherwise checkpoints at ~one partition per row, and every round's
+    // redirect join then dispatches that many near-empty tasks.
+    val nHops = r.count()
+    val smallHopTable = nHops <= cfg.redirectBroadcastMaxRows
+    // an empty hop table has nothing to materialize: an empty local
+    // relation lets every round's optimizer drop the redirect join outright
+    if (nHops == 0) {
       r.unpersist()
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), closureSchema)
+    }
+
+    // Collapse a plan to a LogicalRDD leaf (eager checkpoint): the hop
+    // leaves keep each hop's plan constant-size, and the finished closure
+    // is ONE leaf that every round's plan embeds instead of the hop tree.
+    def leaf(plan: DataFrame): DataFrame =
+      (if (smallHopTable) plan.coalesce(1) else plan).localCheckpoint(true)
+    val hopLeaves = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // the finished closure: materialized inside, so `r`'s cache and the hop
+    // leaves — which exist only for this build — are released at once
+    // instead of lingering for the job's lifetime
+    def finish(plan: DataFrame): DataFrame = {
+      val out = leaf(plan)
+      r.unpersist()
+      hopLeaves.foreach(release)
       out
     }
 
@@ -176,59 +196,52 @@ object FrontierRound {
       struct(source.as("source"), destination.as("destination"), status.as("status"),
         headers.as("headers"))
 
-    // Join-strategy choice for the per-hop joins: a small hop table takes a
-    // broadcast hint, so all maxRedirects hop joins become map-side
-    // BroadcastHashJoins over ONE reused broadcast exchange — no per-hop
-    // shuffle or sort. A big hop table keeps the shuffle joins (broadcast
-    // would be the scale-killer). Either path computes the identical
-    // closure.
-    val hopSide = if (smallHopTable) broadcast(r) else r
+    // Join strategy for the hop joins: a small hop table takes a broadcast
+    // hint (a map-side BroadcastHashJoin per hop, no shuffle or sort of the
+    // live chains); a big one keeps shuffle joins (broadcast would be the
+    // scale-killer). Either path computes the identical closure.
+    val hopSide = {
+      val h = r.select(col("src_url").as("j_src"), col("dest").as("j_dest"),
+        col("status").as("j_status"), col("hop_headers").as("j_headers"))
+      if (smallHopTable) broadcast(h) else h
+    }
+    def walk(live: DataFrame): DataFrame =
+      live.join(hopSide, col("cur_url") === col("j_src"), "left")
+    def out(df: DataFrame, terminalIsRedirect: Column, terminalStatus: Column): DataFrame =
+      df.select(col("start_url"), col("cur_url").as("final_url"), col("n_redirects"),
+        terminalIsRedirect.as("terminal_is_redirect"),
+        terminalStatus.as("terminal_status"), col("chain").as("redirects"))
 
-    var resolved = r.select(
+    // every start url follows its first hop; `live` = chains whose current
+    // url may redirect again. Terminal legs are filters over the hop
+    // leaves, unioned ONCE at the end (an incremental union would
+    // re-analyze an O(hops)-leg tree on every hop).
+    var live = r.select(
       col("src_url").as("start_url"), col("dest").as("cur_url"),
-      lit(1).as("n_redirects"), col("status").as("last_status"),
+      lit(1).as("n_redirects"),
       array(hop(col("src_url"), col("dest"), col("status"), col("hop_headers"))).as("chain"))
-    // terminal legs are BUFFERED and unioned once after the loop: an
-    // incremental `done.union(leg)` would re-analyze an O(hops)-leg union
-    // tree on every hop — quadratic total Catalyst work in maxRedirects
-    // (same fix as the in-memory loop's resultRounds buffer)
+    var liveNonEmpty = true
     val doneLegs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var hops = 1
     // follow while n_redirects < maxRedirects allows another hop
-    while (hops < cfg.maxRedirects) {
-      val joined = resolved.join(hopSide.select(col("src_url").as("j_src"), col("dest").as("j_dest"),
-        col("status").as("j_status"), col("hop_headers").as("j_headers")),
-        resolved("cur_url") === col("j_src"), "left")
-      val terminal = joined.filter(col("j_src").isNull)
-        .select(col("start_url"), col("cur_url"), col("n_redirects"), col("last_status"), col("chain"))
-      val continuing = joined.filter(col("j_src").isNotNull)
+    while (liveNonEmpty && hops < cfg.maxRedirects) {
+      val step = leaf(walk(live))
+      hopLeaves += step
+      doneLegs += out(step.filter(col("j_src").isNull), lit(false), lit(0))
+      live = step.filter(col("j_src").isNotNull)
         .select(col("start_url"), col("j_dest").as("cur_url"),
-          (col("n_redirects") + 1).as("n_redirects"), col("j_status").as("last_status"),
+          (col("n_redirects") + 1).as("n_redirects"),
           concat(col("chain"), array(hop(col("cur_url"), col("j_dest"), col("j_status"),
             col("j_headers")))).as("chain"))
-      doneLegs += terminal
-      resolved = continuing
+      liveNonEmpty = !live.isEmpty
       hops += 1
     }
-    val done: DataFrame = doneLegs.reduceOption(_ union _).orNull
-    // whatever is still redirecting at the budget: terminal 3xx head on cur
-    val exhausted = resolved.join(hopSide.select(col("src_url").as("j_src"), col("status").as("j_status")),
-      resolved("cur_url") === col("j_src"), "left")
-    val exhaustedRedirect = exhausted.filter(col("j_src").isNotNull)
-      .select(col("start_url"), col("cur_url").as("final_url"), col("n_redirects"),
-        lit(true).as("terminal_is_redirect"), col("j_status").as("terminal_status"),
-        col("chain").as("redirects"))
-    val exhaustedClean = exhausted.filter(col("j_src").isNull)
-      .select(col("start_url"), col("cur_url").as("final_url"), col("n_redirects"),
-        lit(false).as("terminal_is_redirect"), lit(0).as("terminal_status"),
-        col("chain").as("redirects"))
-    val tail = exhaustedRedirect.union(exhaustedClean)
-    finish(
-      if (done == null) tail
-      else done.select(col("start_url"), col("cur_url").as("final_url"),
-        col("n_redirects"), lit(false).as("terminal_is_redirect"), lit(0).as("terminal_status"),
-        col("chain").as("redirects"))
-        .union(tail))
+    // chains still live at the budget: a terminal 3xx head on cur_url
+    if (liveNonEmpty) {
+      val redirecting = col("j_src").isNotNull
+      doneLegs += out(walk(live), redirecting, when(redirecting, col("j_status")).otherwise(0))
+    }
+    finish(doneLegs.reduce(_ union _))
   }
 
   // ---------- the round ----------
@@ -259,14 +272,78 @@ object FrontierRound {
                               // fetch_offset_ms in place of the absolute
                               // fetch_start/end_ms — see [[stampTimings]]
       newSeen: DataFrame,     // (url)
-      newFrontier: DataFrame, // FrontierEntry schema (frontier for next round)
+      deferred: DataFrame,    // FrontierEntry schema — stays queued
+      entered: DataFrame,     // FrontierEntry schema — enqueued this round
+                              // (cuckoo INSERTS, CrawlJob)
       departed: DataFrame,    // (url) — left the frontier this round (the
-                              // scheduled slice; cuckoo DELETES, CrawlJob)
-      entered: DataFrame,     // (url) — enqueued this round (cuckoo INSERTS)
-      cached: Seq[DataFrame]) // round-scoped persisted intermediates
+                              // scheduled slice; cuckoo DELETES)
+      leaves: Seq[DataFrame]) // round-scoped checkpointed intermediates
   {
-    /** Release the round's persisted intermediates once outputs are written. */
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+    /** Release the round's intermediate leaves once the round's outputs
+      * are materialized ([[materialize]]). */
+    def release(): Unit = leaves.foreach(FrontierRound.release)
+  }
+
+  /** Drop the blocks behind a checkpointed leaf (the DataFrame a
+    * `localCheckpoint` returned). `Dataset.unpersist` does not: a checkpoint
+    * is not a cache entry. Only for leaves that nothing will read again;
+    * any other plan is left alone. */
+  def release(leaf: DataFrame): Unit = leaf.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
+  /** A round's outputs materialized by ONE action (see [[materialize]]):
+    * every leg is a filter over the same checkpointed leaf, and the counts
+    * come from the action that materialized it. */
+  final class Materialized private[FrontierRound] (leaf: DataFrame,
+      resultCols: Seq[String], frontierCols: Seq[String], stats: Map[String, Row]) {
+    private def leg(kind: String): DataFrame = leaf.filter(col("__kind") === kind)
+    /** [[RoundOutput.results]] (round-relative timings). */
+    def results: DataFrame = leg("r").select(resultCols.map(col): _*)
+    def frontier: DataFrame = leg("f").select(frontierCols.map(col): _*)
+    def newSeen: DataFrame = leg("s").select(col("url"))
+    def entered: DataFrame = leg("f").filter(col("__entered")).select(col("url"))
+    def departed: DataFrame = leg("d").select(col("url"))
+    private def stat(kind: String, name: String): Long =
+      stats.get(kind).map(_.getAs[Long](name)).getOrElse(0L)
+    def frontierCount: Long = stat("f", "n")
+    def newSeenCount: Long = stat("s", "n")
+    def metrics(round: Int, seenTotal: Long): RoundMetrics = {
+      val scheduled = stat("r", "n")
+      val fetched = stat("r", "fetched")
+      RoundMetrics(round, scheduled, fetched, scheduled - fetched,
+        stat("r", "new_links"), frontierCount, seenTotal, stat("r", "hosts"))
+    }
+    def release(): Unit = FrontierRound.release(leaf)
+  }
+
+  /** Materialize a round's outputs with ONE action. Results, the next
+    * frontier, the new-seen delta and the departed (scheduled) urls ride
+    * one lazily checkpointed leaf as a tagged union (`__kind`; missing
+    * columns null-filled), and every writer reads that leaf instead of
+    * re-running the round. The one action is a grouped aggregate over the
+    * leaf: every leg's count plus the [[graft.model.RoundMetrics]]
+    * aggregates of the results leg. The caller may drop the round's
+    * intermediate leaves ([[RoundOutput.release]]) right after. */
+  def materialize(out: RoundOutput): Materialized = {
+    def tagged(df: DataFrame, kind: String) = df.withColumn("__kind", lit(kind))
+    // the frontier leg flags its entered rows, so the cuckoo inserts ride
+    // it instead of re-planning the enqueue gate as a leg of their own
+    val legs = Seq(tagged(out.results, "r"),
+      tagged(out.deferred, "f").withColumn("__entered", lit(false)),
+      tagged(out.entered, "f").withColumn("__entered", lit(true)),
+      tagged(out.newSeen, "s"), tagged(out.departed, "d"))
+    val leaf = legs.reduce(_.unionByName(_, allowMissingColumns = true))
+      .localCheckpoint(false)
+    val stats = leaf.groupBy(col("__kind")).agg(count(lit(1)).as("n"),
+      sum(when(col("crawl_status") === CrawlStatus.Fetched, 1L).otherwise(0L)).as("fetched"),
+      sum(when(col("n_links") >= 0, col("n_links").cast("long")).otherwise(0L)).as("new_links"),
+      // host rides every result row from its frontier entry — a plain
+      // column aggregate, no UDF re-derivation
+      countDistinct(col("host")).as("hosts"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    new Materialized(leaf, out.results.columns.toSeq, out.deferred.columns.toSeq, stats)
   }
 
   private val prioOrder: Seq[Column] = Seq(col("depth"), col("priority"), col("url"))
@@ -275,9 +352,8 @@ object FrontierRound {
     * requested url + every successful fetch's final url enter the seen set
     * (page_loader_service.rs:192-201 — status rows included, because
     * consume_crawl_result runs for them too), minus already-seen. The ONE
-    * definition of the seen-update rule — both the persistent loop
-    * ([[graft.crawl.CrawlJob.run]] via RoundOutput) and the in-memory loop
-    * (which re-plans it over a checkpointed results leaf) use it. */
+    * definition of the seen-update rule ([[RoundOutput.newSeen]], which
+    * both loops materialize). */
   def newSeenOf(results: DataFrame, seen: DataFrame): DataFrame =
     results.select(col("url"))
       .union(results.filter(col("final_url").isNotNull).select(col("final_url").as("url")))
@@ -382,19 +458,19 @@ object FrontierRound {
     normal.unionByName(surv).unionByName(rest)
   }
 
-  /** [[scheduleFlagged]] materialized once and split into (scheduled,
-    * deferred, cached). The single persist exists because callers act on
-    * both branches; callers that only need one pass over the flagged rows
-    * should use [[scheduleFlagged]] directly (zero persists). Caller must
-    * unpersist `cached` when done. */
+  /** [[scheduleFlagged]] materialized once (an eager checkpoint leaf) and
+    * split into (scheduled, deferred, leaf). The one materialization exists
+    * because callers act on both branches; callers that only need one pass
+    * over the flagged rows should use [[scheduleFlagged]] directly. Caller
+    * must [[release]] the leaf when done. */
   def schedule(frontier: DataFrame, cfg: CrawlConfig,
-      megaHosts: Option[DataFrame] = None): (DataFrame, DataFrame, Seq[DataFrame]) = {
+      megaHosts: Option[DataFrame] = None): (DataFrame, DataFrame, DataFrame) = {
     val flagged = megaHosts.map(scheduleFlagged(frontier, cfg, _))
       .getOrElse(scheduleSingle(frontier, cfg))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     (flagged.filter(col("is_scheduled")).drop("is_scheduled"),
       flagged.filter(!col("is_scheduled")).drop("is_scheduled", "host_slot"),
-      Seq(flagged))
+      flagged)
   }
 
   /** Run one round. `pages` must expose (url, html, text); `seen` is (url)
@@ -422,21 +498,22 @@ object FrontierRound {
     }
 
     // 1. politeness top-k per host
-    val (scheduled0, deferred, schedCached) = schedule(frontier, cfg, megaHosts)
+    val (scheduled0, deferred, flagged) = schedule(frontier, cfg, megaHosts)
 
     // 2. dequeue-time AlreadyKnown gate — SILENT skip, no result row
     //    (page_crawl_command.rs:82-85 returns Ok(None); urls can become seen
     //    while queued, e.g. as someone else's redirect target)
     val scheduled = antiSeen(scheduled0)
 
-    // 3. depth gate → status rows (page_crawl_command.rs:73-77; 0 = unlimited)
+    // 3.-6. every gate is a COLUMN of one linear plan, so results, the
+    //    new-seen delta and the children all read ONE materialized row set —
+    //    no filter/union branches that each re-run the joins. A row's
+    //    status is the first gate it fails, in the reference's order.
+    //
+    // depth gate (page_crawl_command.rs:73-77; 0 = unlimited)
     val depthGate = lit(cfg.maxDepth) > 0 && col("depth") >= cfg.maxDepth
-    val depthRejected = scheduled.filter(depthGate)
-    val underDepth = scheduled.filter(!depthGate)
-
-    // 4. robots gate → status rows (page_crawl_command.rs:92-95;
-    //    decision robots_service.rs:46-52; missing cache row = default allow)
-    val withRobots = underDepth.join(broadcast(robotsCache), Seq("host"), "left")
+    // robots gate (page_crawl_command.rs:92-95; decision
+    // robots_service.rs:46-52; missing cache row = default allow)
     val allowed =
       if (!cfg.respectRobots) lit(true)
       else canAccessUdf(
@@ -444,20 +521,12 @@ object FrontierRound {
         coalesce(col("allow_all"), lit(false)),
         coalesce(col("robots_body"), lit("")),
         lit(cfg.userAgent), col("url"))
-    val robotsRejected = withRobots.filter(!allowed).drop("disallow_all", "allow_all", "robots_body")
-    val crawlable = withRobots.filter(allowed).drop("disallow_all", "allow_all", "robots_body")
-
-    // 5. redirect resolution (one static-closure join) + page lookup.
-    //    A url in the redirects fixture answers 3xx; otherwise a url in
-    //    pages answers its http_status (default 200) with its headers
-    //    (default: text/html when html is present, octet-stream otherwise);
-    //    otherwise the HEAD fails → ConnectionError
-    //    (page_crawl_command.rs:116-135).
-    val withRedirects = crawlable
-      .join(resolvedRedirects, crawlable("url") === resolvedRedirects("start_url"), "left")
-      .withColumn("target", coalesce(col("final_url"), col("url")))
-      .drop("start_url", "final_url")
-    // optional fixture columns: headers (keys lowercased on ingestion — F9,
+    // redirect resolution (one static-closure join) + page lookup. A url in
+    // the redirects fixture answers 3xx; otherwise a url in pages answers
+    // its http_status (default 200) with its headers (default: text/html
+    // when html is present, octet-stream otherwise); otherwise the HEAD
+    // fails → ConnectionError (page_crawl_command.rs:116-135).
+    // Optional fixture columns: headers (keys lowercased on ingestion — F9,
     // http_utils.rs:7-12) and per-page http_status; a bare input_hint table
     // (url, warc_ts, html, text, lang) gets the synthesized defaults
     val hasHeaders = pages.columns.contains("headers")
@@ -467,23 +536,26 @@ object FrontierRound {
       (if (hasHeaders) transform_keys(col("headers"), (k, _) => lower(k))
        else lit(null).cast("map<string,string>")).as("pg_headers"),
       (if (hasStatus) coalesce(col("http_status"), lit(200)) else lit(200)).as("pg_status"))
-    // persisted: results + seen + frontier all hang off this subtree, and the
-    // caller writes each separately — without the persist every write would
-    // re-run the joins (3× the round cost)
-    val headed = withRedirects
+    val connError = col("is_redirect_terminal") === false && col("pg_url").isNull
+    val isFetched = col("crawl_status") === CrawlStatus.Fetched
+    val headed = scheduled
+      .join(broadcast(robotsCache), Seq("host"), "left")
+      .join(resolvedRedirects, col("url") === resolvedRedirects("start_url"), "left")
+      .withColumn("target", coalesce(col("final_url"), col("url")))
+      .drop("start_url", "final_url")
       .join(pagesMeta, col("target") === col("pg_url"), "left")
       .withColumn("n_redirects", coalesce(col("n_redirects"), lit(0)))
       .withColumn("is_redirect_terminal", coalesce(col("terminal_is_redirect"), lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val connError = col("is_redirect_terminal") === false && col("pg_url").isNull
-    val headOk = !connError
-
-    // 6. download + link extraction, gated by should_download
-    //    (page_crawl_command.rs:157-166): (HTTP success OR an `x-cache`
-    //    header containing "cloudfront" — a CDN-cached error page still
-    //    serves a body) AND content-type contains text/html (F5+F6)
-    val fetchedCols = headed.filter(headOk)
+      .withColumn("crawl_status",
+        when(depthGate, lit(CrawlStatus.MaximumCrawlDepthReached))
+          .when(!allowed, lit(CrawlStatus.RestrictedByRobotsTxt))
+          .when(connError, lit(CrawlStatus.ConnectionError))
+          .otherwise(lit(CrawlStatus.Fetched)))
+      .drop("disallow_all", "allow_all", "robots_body")
+      // download + link extraction, gated by should_download
+      // (page_crawl_command.rs:157-166): (HTTP success OR an `x-cache`
+      // header containing "cloudfront" — a CDN-cached error page still
+      // serves a body) AND content-type contains text/html (F5+F6)
       .withColumn("http_code", when(col("is_redirect_terminal"), col("terminal_status")).otherwise(col("pg_status")))
       // the final response's header map (keys already lowercased in
       // pagesMeta — F9). The synthesized single-entry default applies ONLY
@@ -498,30 +570,31 @@ object FrontierRound {
               when(col("pg_has_html"), lit("text/html"))
                 .otherwise(lit("application/octet-stream"))))))
       .withColumn("content_type", element_at(col("resp_headers"), "content-type"))
-      .withColumn("should_download",
+      .withColumn("should_download", isFetched &&
         col("is_redirect_terminal") === false &&
           (col("http_code").between(200, 299) ||
             coalesce(element_at(col("pg_headers"), "x-cache").contains("cloudfront"), lit(false))) &&
           coalesce(col("content_type").contains("text/html"), lit(false)))
 
     // re-join the fat html column only for rows that will parse it — the
-    // pages scan for everyone else never reads html (column pruning)
+    // pages scan for everyone else never reads html (column pruning).
+    // Materialized AFTER the html is consumed by the extraction UDF and
+    // dropped: the fat bytes live only inside this one join stage, never in
+    // the leaf or any later shuffle (SURVEY.md §7.4). Results, new-seen and
+    // the children all read this one leaf inside the round's one action
+    // ([[materialize]]): a checkpoint leaf, not a cache, so no scan of it
+    // ever schedules a cache-materialization stage of its own.
     val pagesBody = pages.select(col("url").as("pb_url"), col("html").as("pb_html"))
-    // persisted AFTER the html is consumed by the extraction UDF and dropped:
-    // the fat bytes live only inside this one join stage, never in the cache
-    // or any later shuffle (SURVEY.md §7.4)
-    val fetched = fetchedCols
+    val crawled = headed
       .join(pagesBody, col("should_download") && col("target") === col("pb_url"), "left")
       .withColumn("pl",
         when(col("should_download"),
           extractChildrenUdf(col("protocol"), col("host"), col("pb_html"), col("url")))
           .otherwise(lit(null)))
       .drop("pb_url", "pb_html")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
 
     // ---------- results ----------
-    val nullChain = lit(null).cast(chainType)
-    val nullHeaders = lit(null).cast("map<string,string>")
     // round-relative start of the row's politeness slot on the virtual
     // fetch calendar: slot s of a host fires at (s−1)·(delay+1) after the
     // round opens (+1 = the reference's strictly-greater gate, is_blocked
@@ -531,48 +604,25 @@ object FrontierRound {
     // codegen-cached) round tree.
     val fetchOffset = ((col("host_slot") - 1).cast("long") *
       (cfg.crawlDelayMs.toLong + 1L)).as("fetch_offset_ms")
-
-    val statusResults = depthRejected
-      .withColumn("crawl_status", lit(CrawlStatus.MaximumCrawlDepthReached))
-      .unionByName(robotsRejected.withColumn("crawl_status", lit(CrawlStatus.RestrictedByRobotsTxt)))
-      .select(col("url"), col("raw_url"), col("host"),
-        lit(null).cast("string").as("final_url"), lit(-1).as("http_code"),
-        lit(null).cast("string").as("status_label"),
-        lit(null).cast("string").as("content_type"),
-        nullHeaders.as("headers"), col("crawl_status"),
-        col("depth"), col("priority"), lit(0).as("n_redirects"),
-        nullChain.as("redirects"),
-        lit(-1).as("n_links"), lit(null).cast("string").as("text"),
-        fetchOffset)
-
-    val connResults = headed.filter(connError)
-      .select(col("url"), col("raw_url"), col("host"),
-        lit(null).cast("string").as("final_url"), lit(-1).as("http_code"),
-        lit(null).cast("string").as("status_label"),
-        lit(null).cast("string").as("content_type"),
-        nullHeaders.as("headers"),
-        lit(CrawlStatus.ConnectionError).as("crawl_status"),
-        col("depth"), col("priority"), lit(0).as("n_redirects"),
-        nullChain.as("redirects"),
-        lit(-1).as("n_links"), lit(null).cast("string").as("text"),
-        fetchOffset)
-
-    val fetchResults = fetched
-      .select(col("url"), col("raw_url"), col("host"),
-        col("target").as("final_url"), col("http_code"),
-        StatusCodes.labelCol(col("http_code")).as("status_label"),
-        col("content_type"),
-        col("resp_headers").as("headers"),
-        lit(CrawlStatus.Fetched).as("crawl_status"),
-        col("depth"), col("priority"), col("n_redirects"),
-        // a successful HEAD always carries a (possibly empty) chain
-        // (head_response.rs:9-17: redirects is a Vec, never absent)
-        coalesce(col("redirects"), array().cast(chainType)).as("redirects"),
-        coalesce(col("pl.n_links"), lit(-1)).as("n_links"),
-        when(col("should_download"), col("pg_text")).otherwise(lit(null).cast("string")).as("text"),
-        fetchOffset)
-
-    val results = statusResults.unionByName(connResults).unionByName(fetchResults)
+    // status rows (depth / robots / connection error) carry no HTTP
+    // response: no final url, http_code -1, no headers, chain or links
+    def ifFetched(c: Column, otherwise: Column): Column = when(isFetched, c).otherwise(otherwise)
+    val results = crawled.select(col("url"), col("raw_url"), col("host"),
+      ifFetched(col("target"), lit(null).cast("string")).as("final_url"),
+      ifFetched(col("http_code"), lit(-1)).as("http_code"),
+      ifFetched(StatusCodes.labelCol(col("http_code")), lit(null).cast("string")).as("status_label"),
+      ifFetched(col("content_type"), lit(null).cast("string")).as("content_type"),
+      ifFetched(col("resp_headers"), lit(null).cast("map<string,string>")).as("headers"),
+      col("crawl_status"),
+      col("depth"), col("priority"),
+      ifFetched(col("n_redirects"), lit(0)).as("n_redirects"),
+      // a successful HEAD always carries a (possibly empty) chain
+      // (head_response.rs:9-17: redirects is a Vec, never absent)
+      ifFetched(coalesce(col("redirects"), array().cast(chainType)),
+        lit(null).cast(chainType)).as("redirects"),
+      ifFetched(coalesce(col("pl.n_links"), lit(-1)), lit(-1)).as("n_links"),
+      when(col("should_download"), col("pg_text")).otherwise(lit(null).cast("string")).as("text"),
+      fetchOffset)
 
     // ---------- seen update ----------
     val newSeen = newSeenOf(results, seen)
@@ -580,7 +630,7 @@ object FrontierRound {
     // ---------- children → next frontier ----------
     // enqueue gate: parent depth <= maxDepth (page_loader_service.rs:142 —
     // note this makes maxDepth=0 enqueue only the seeds' children)
-    val kids = fetched
+    val kids = crawled
       .filter(col("pl").isNotNull && col("depth") <= cfg.maxDepth)
       .select(col("depth"), col("priority"), explode(col("pl.children")).as("c"))
       .select(col("c.url").as("url"), col("c.raw_url").as("raw_url"),
@@ -605,7 +655,7 @@ object FrontierRound {
     // (through the previous round), the cuckoo probe covers the frontier
     // (⊇ deferred), and each probe's filter-rejected kids skip the exact
     // join entirely.
-    val newEntries0 = ((seenBlooms, frontierProbe) match {
+    val newEntries = ((seenBlooms, frontierProbe) match {
       case (None, None) =>
         kidsDeduped.join(
           seen.select("url").union(newSeen.select("url"))
@@ -621,24 +671,9 @@ object FrontierRound {
           deferred.select("url"), p)
     }).select("url", "raw_url", "host", "protocol", "depth", "priority")
 
-    // when a cuckoo gate is configured, the round's `entered` slice is
-    // consumed a second time by the delta writer (CrawlJob) AFTER the
-    // frontier write already materialized it — persist so the delta job
-    // reads the cache instead of re-running the whole enqueue-gate join
-    // chain (measured: DeepCrawlProbe --cuckoo median round 8.0 s vs 4.4 s
-    // control before this; the persist is skipped entirely when no gate is
-    // configured, so the bench/flagship path is untouched)
-    val newEntries =
-      if (cfg.useCuckooFrontier || cfg.cuckooAutoEnableAt > 0)
-        newEntries0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else newEntries0
-
-    val newFrontier = deferred.select("url", "raw_url", "host", "protocol", "depth", "priority")
-      .unionByName(newEntries)
-
-    RoundOutput(results, newSeen, newFrontier,
-      scheduled0.select("url"), newEntries.select("url"),
-      schedCached ++ Seq(headed, fetched) ++
-        (if (newEntries ne newEntries0) Seq(newEntries) else Seq.empty))
+    RoundOutput(results, newSeen,
+      deferred.select("url", "raw_url", "host", "protocol", "depth", "priority"),
+      newEntries, scheduled0.select("url"),
+      Seq(flagged, crawled))
   }
 }

@@ -322,16 +322,6 @@ final class TableIO(spark: SparkSession, root: String) {
   private def hasBuckets(dir: HPath): Boolean =
     fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("bucket="))
 
-  /** One round's new-seen slice (url only); None when the round produced
-    * no rows — partitionBy writes no part files for an empty DataFrame and
-    * schema inference on the bare dir would fail. Probed via the Hadoop
-    * FileSystem API (works on HDFS/object stores, not just local disk). */
-  def readSeenSlice(round: Int): Option[DataFrame] = {
-    if (!hasBuckets(hp("seen", s"round=$round"))) None
-    else Some(spark.read.option("basePath", p("seen"))
-      .parquet(p("seen", s"round=$round")).select("url"))
-  }
-
   /** Rewrite every seen slice ≤ `upToRound` (including any previous
     * compaction snapshot) into ONE bucket-partitioned dir, then publish the
     * `_watermark` atomically and drop the superseded per-round dirs. Must
@@ -552,4 +542,29 @@ final class TableIO(spark: SparkSession, root: String) {
   def readResults(): DataFrame = readAppendTable("results")
 
   def readMetrics(): DataFrame = readAppendTable("metrics")
+}
+
+/** The per-round commit manifest (`manifest/round=N.json`, written LAST by
+  * [[TableIO.commitRound]]): one JSON object of the round's counts. Written
+  * and read with Jackson, so a reader keys on field names — never on field
+  * order or spacing. */
+object RoundManifest {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  def encode(m: graft.model.RoundMetrics): String =
+    mapper.writeValueAsString(mapper.createObjectNode()
+      .put("round", m.round).put("scheduled", m.scheduled).put("fetched", m.fetched)
+      .put("frontier", m.newFrontier).put("seen_total", m.seenTotal))
+
+  /** The manifest's top-level integer fields; empty if it does not parse. */
+  def fields(json: String): Map[String, Long] =
+    scala.util.Try(mapper.readTree(json)).toOption.filter(_.isObject).map { n =>
+      import scala.jdk.CollectionConverters._
+      n.properties().asScala.collect {
+        case e if e.getValue.canConvertToLong && e.getValue.isIntegralNumber =>
+          e.getKey -> e.getValue.asLong
+      }.toMap
+    }.getOrElse(Map.empty)
+
+  def seenTotal(json: String): Option[Long] = fields(json).get("seen_total")
 }

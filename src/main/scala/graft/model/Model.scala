@@ -82,13 +82,13 @@ final case class CrawlConfig(
     bloomExpectedPerBucket: Long = 4096L,
     /** Redirect-closure join strategy threshold: when the redirects fixture
       * holds at most this many rows (known exactly — the closure build
-      * materializes its hop cache anyway), every per-hop join takes a
-      * broadcast hint, so the whole maxRedirects-deep closure collapses to
-      * map-side BroadcastHashJoins sharing ONE reused broadcast of the hop
-      * table — no per-hop shuffle, no per-hop sort. Above it the hops keep
-      * shuffle joins (a huge redirects table must never be broadcast).
-      * Purely a join-strategy heuristic: either path computes the same
-      * closure. */
+      * counts its hop cache anyway), each hop of the closure's semi-naive
+      * walk joins the still-redirecting chains against a broadcast of the
+      * hop table (one broadcast per hop, each its own job): a map-side
+      * BroadcastHashJoin, no shuffle or sort of the chains. Above it the
+      * hops keep shuffle joins (a huge redirects table must never be
+      * broadcast). Purely a join-strategy heuristic: either path computes
+      * the same closure. */
     redirectBroadcastMaxRows: Long = 1L << 20,
     /** Accelerate the enqueue-time still-queued anti-join with per-bucket
       * CUCKOO filters mirroring the frontier (north_rule "Bloom/cuckoo" —

@@ -707,15 +707,8 @@ object Queries {
   /** The flagship: a full depth-bounded crawl of the synthesized web
     * (pages/robots/redirects fixtures), returning the ordered results table. */
   def crawlE2E(s: SparkSession, dir: String): DataFrame = {
-    val dbgT = sys.env.contains("SPARK_GRAFT_DEBUG_TIMING")
-    var dbgT0 = System.nanoTime()
-    def lap(tag: String): Unit = if (dbgT) {
-      System.err.println(f"E2EQUERY $tag=${(System.nanoTime() - dbgT0) / 1e9}%.2fs")
-      dbgT0 = System.nanoTime()
-    }
     val g = Synth.graph(42L, hosts = 3, pagesPerHost = 10)
     val (pages, robots, redirects) = Synth.toDfs(s, g)
-    lap("synth")
     // blooms off: at 30 urls the per-round bloom build jobs cost more than
     // they save (the bloom path is covered by SeenFilterSpec + CrawlE2ESpec).
     // Shuffle partitions scaled to the data for the loop's internal actions
@@ -763,14 +756,12 @@ object Queries {
           case None => s.conf.unset("spark.sql.optimizer.excludedRules")
         }
       }
-    lap("run_in_memory")
     // driver-output rule: every column SCALAR — the driver harness
     // canonicalizes with a pandas sort that cannot hash array/map/binary
     // cells (the r2 q_crawl_e2e crash), so the typed `redirects` chain and
     // `headers` map are serialized to JSON strings here and only here
     // (ResultRow/parquet keep the typed columns; `priority` stays dropped)
     val ordered = CrawlJob.orderedResults(results)
-    lap("ordered_plan")
     ordered
       .select(col("schedule_rank"), col("round"), col("url"), col("host"),
         col("final_url"), col("http_code"), col("status_label"),

@@ -1,0 +1,122 @@
+package graft.crawl
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+import graft.SparkTestBase
+import graft.io.{RoundManifest, TableIO}
+import graft.model._
+import graft.synth.Synth
+
+/** The persistent loop's one-action commit: every round's metrics row and
+  * manifest come from the action that materializes the round, so they are
+  * pinned here against the tables the round committed. Also the manifest
+  * decoder and the static-input leaf gate. */
+class RoundCommitSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+
+  /** Run a persistent crawl one round per call (each call resumes the
+    * previous one), checking each round right after its commit — with
+    * compaction every round only the latest frontier snapshot survives.
+    * `beforeResume` may rewrite the committed state between calls. */
+  private def crawlCheckingEveryRound(g: Synth.Graph, cfg: CrawlConfig, tag: String,
+      beforeResume: (TableIO, Int) => Unit = (_, _) => ()): Int = {
+    val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
+    val dir = java.nio.file.Files.createTempDirectory(s"commit-$tag").toString
+    val io = new TableIO(spark, dir)
+    var round = 0
+    var more = true
+    while (more) {
+      if (round > 0) beforeResume(io, round - 1)
+      val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
+        cfg.copy(maxRounds = round + 1), dir, resume = round > 0)
+      more = job.rounds == round + 1
+      if (more) {
+        assert(io.lastCommittedRound() == round)
+        val m = io.readMetrics().filter(col("round") === round).collect()
+        assert(m.length == 1, s"$tag round $round: one metrics row")
+        val row = m.head
+        def metric(name: String) = row.getAs[Long](name)
+        val res = io.readResults().filter(col("round") === round)
+        val agg = res.agg(count(lit(1)), sum(when(col("crawl_status") === CrawlStatus.Fetched, 1L)
+          .otherwise(0L)), sum(when(col("n_links") >= 0, col("n_links").cast("long"))
+          .otherwise(0L)), countDistinct(col("host"))).collect().head
+        val want = Map(
+          "scheduled" -> agg.getLong(0),
+          "fetched" -> Option(agg.get(1)).fold(0L)(_.asInstanceOf[Long]),
+          "newLinks" -> Option(agg.get(2)).fold(0L)(_.asInstanceOf[Long]),
+          "distinctHosts" -> agg.getLong(3),
+          "newFrontier" -> io.readFrontier(round).count(),
+          "seenTotal" -> io.readSeen(round).fold(0L)(_.count()))
+        want.foreach { case (k, v) => assert(metric(k) == v, s"$tag round $round: $k") }
+        assert(metric("statusRows") == want("scheduled") - want("fetched"))
+        val manifest = RoundManifest.fields(io.readManifest(round).get)
+        assert(manifest == Map("round" -> round.toLong, "scheduled" -> metric("scheduled"),
+          "fetched" -> metric("fetched"), "frontier" -> metric("newFrontier"),
+          "seen_total" -> metric("seenTotal")), s"$tag round $round: manifest")
+        round += 1
+      }
+    }
+    round
+  }
+
+  /** The benchmark's deep-crawl web in miniature: per host a chain
+    * /c/0 → /c/1 and a linkless leaf /d/0, both seeds, so a
+    * per-host quota of 1 defers a row of every host. */
+  private def deepCrawlWeb(hosts: Int): Synth.Graph = {
+    val g = Synth.chainGraph(hosts, chainLen = 2)
+    val leaves = (0 until hosts).map(h => Page(s"https://${Synth.host(h)}/d/0",
+      new java.sql.Timestamp(1600000000000L), "<html><body>leaf</body></html>".getBytes("UTF-8"),
+      s"leaf $h", "en"))
+    g.copy(pages = g.pages ++ leaves, seeds = g.seeds ++ leaves.map(_.url))
+  }
+
+  test("metrics and manifest equal the committed tables, every round (deep-crawl shape)") {
+    // every resume reads a manifest whose fields are reordered, spaced and
+    // padded with an extra nested `seen_total` ahead of the real one: only
+    // a field-name decoder resumes to the right cumulative count
+    val rewrite = (io: TableIO, last: Int) => {
+      val f = RoundManifest.fields(io.readManifest(last).get)
+      io.commitRound(last,
+        s"""{ "note": {"seen_total":999999}, "seen_total" : ${f("seen_total")},
+           |  "frontier": ${f("frontier")}, "extra": [1, 2], "fetched": ${f("fetched")},
+           |  "scheduled": ${f("scheduled")}, "round": $last }""".stripMargin)
+    }
+    val rounds = crawlCheckingEveryRound(deepCrawlWeb(3),
+      CrawlConfig(maxDepth = 8, hostQuotaPerRound = 1, useCuckooFrontier = true,
+        seenCompactEvery = 1, runId = "commit-deep"), "deep", rewrite)
+    assert(rounds == 3)
+  }
+
+  test("metrics and manifest equal the committed tables, every round (blooms off)") {
+    val rounds = crawlCheckingEveryRound(Synth.graph(42L, hosts = 2, pagesPerHost = 8),
+      CrawlConfig(maxDepth = 3, hostQuotaPerRound = 3, useBloomSeen = false,
+        runId = "commit-nobloom"), "nobloom")
+    assert(rounds >= 3)
+  }
+
+  test("manifest decoder keys on field names, not order or spacing") {
+    val m = RoundMetrics(4, 12L, 9L, 3L, 40L, 17L, 123L, 5L)
+    val json = RoundManifest.encode(m)
+    assert(json == """{"round":4,"scheduled":12,"fetched":9,"frontier":17,"seen_total":123}""")
+    assert(RoundManifest.seenTotal(json).contains(123L))
+    assert(RoundManifest.seenTotal(
+      """{"x": {"seen_total": 7}, "frontier":1, "seen_total" : 123, "y": "z"}""").contains(123L))
+    assert(RoundManifest.seenTotal("""{"round":4}""").isEmpty)
+    assert(RoundManifest.seenTotal("not json").isEmpty)
+  }
+
+  test("static leaves: an embedded fixture is coalesced, a table keeps its partitions") {
+    import spark.implicits._
+    val g = Synth.graph(42L, hosts = 2, pagesPerHost = 8)
+    val local = g.pages.toDF()
+    assert(CrawlJob.staticLeaf(local).rdd.getNumPartitions == 1)
+    val dir = java.nio.file.Files.createTempDirectory("static-leaf").toString
+    local.repartition(3).write.mode("overwrite").parquet(dir)
+    val table = spark.read.parquet(dir)
+    val parts = table.rdd.getNumPartitions
+    assert(parts > 1)
+    val leaf = CrawlJob.staticLeaf(table)
+    assert(leaf.rdd.getNumPartitions == parts)
+    assert(leaf.count() == g.pages.size)
+  }
+}

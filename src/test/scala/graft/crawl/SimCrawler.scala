@@ -43,6 +43,43 @@ object SimCrawler {
   private val prioOrd: Ordering[SimEntry] =
     Ordering.by((e: SimEntry) => (e.depth, e.priority, e.url))
 
+  /** Where a HEAD on `start` ends: the final url, the followed hop count,
+    * the status of a budget-terminal (or ignored) 3xx, and the followed
+    * hops. */
+  final case class Walk(finalUrl: String, nRedirects: Int,
+      terminal3xx: Option[Int], chain: Vector[SimHop])
+
+  /** Dynamic per-request redirect walk (fetch_header_command.rs:31-69),
+    * recording one hop per followed redirect (:73-90) with the hop
+    * response's lowercased headers (:73-90 clones the map); fixture rows
+    * without headers get the minimal faithful map (the location header
+    * that was followed). */
+  def walkRedirects(start: String, redirectMap: Map[String, RedirectRow],
+      cfg: CrawlConfig): Walk = {
+    var cur = start
+    var n = 0
+    var terminal3xx: Option[Int] = None
+    var chain = Vector.empty[SimHop]
+    var walking = true
+    while (walking) {
+      redirectMap.get(cur) match {
+        case Some(r) if !cfg.ignoreRedirects && n < cfg.maxRedirects =>
+          val dest = UrlCanon.formFullUrl(
+            UrlCanon.protocolOf(cur).getOrElse("https"), r.location,
+            UrlCanon.hostOf(cur).getOrElse(""), Some(cur))
+          val hopHdrs = Option(r.headers)
+            .map(_.map { case (k, v) => k.toLowerCase -> v })
+            .getOrElse(Map("location" -> r.location))
+          chain :+= ((cur, dest, r.status, hopHdrs))
+          cur = dest; n += 1
+        case Some(r) =>
+          terminal3xx = Some(r.status); walking = false
+        case None => walking = false
+      }
+    }
+    Walk(cur, n, terminal3xx, chain)
+  }
+
   def run(pages: Seq[Page], robotsRows: Seq[RobotsRow], redirectRows: Seq[RedirectRow],
       seeds: Seq[String], cfg: CrawlConfig): SimOutput = {
 
@@ -99,32 +136,7 @@ object SimCrawler {
                 t0, t0)
               newSeen += e.url
             } else {
-              // dynamic redirect walk (fetch_header_command.rs:31-69),
-              // recording one hop per followed redirect (:73-90) with the
-              // hop response's lowercased headers (:73-90 clones the map);
-              // fixture rows without headers get the minimal faithful map
-              // (the location header that was followed)
-              var cur = e.url
-              var n = 0
-              var terminal3xx: Option[Int] = None
-              var chain = Vector.empty[SimHop]
-              var walking = true
-              while (walking) {
-                redirectMap.get(cur) match {
-                  case Some(r) if !cfg.ignoreRedirects && n < cfg.maxRedirects =>
-                    val dest = UrlCanon.formFullUrl(
-                      UrlCanon.protocolOf(cur).getOrElse("https"), r.location,
-                      UrlCanon.hostOf(cur).getOrElse(""), Some(cur))
-                    val hopHdrs = Option(r.headers)
-                      .map(_.map { case (k, v) => k.toLowerCase -> v })
-                      .getOrElse(Map("location" -> r.location))
-                    chain :+= ((cur, dest, r.status, hopHdrs))
-                    cur = dest; n += 1
-                  case Some(r) =>
-                    terminal3xx = Some(r.status); walking = false
-                  case None => walking = false
-                }
-              }
+              val Walk(cur, n, terminal3xx, chain) = walkRedirects(e.url, redirectMap, cfg)
               val page = if (terminal3xx.isEmpty) pageMap.get(cur) else None
               if (terminal3xx.isEmpty && page.isEmpty) {
                 results += SimResult(round, e.url, e.rawUrl, e.host, None, -1, None, None,

@@ -142,7 +142,7 @@ object PlanDump {
         "partitions where every task churns arbitrary bucket files through " +
         "the bounded executor cache); the definitely-new branch map-only " +
         "after the probe (no join); only bloom-positives reach the exact " +
-        "LeftAnti join; the broadcast is the O(100 B) FileBlooms handle — NO " +
+        "LeftAnti join; the broadcast is the O(100 B) FileProbe handle — NO " +
         "filter bytes in the plan, the driver, or the broadcast, regardless " +
         "of seen-set size. The static dump below shows the Exchange twice " +
         "(once per union branch) — at runtime AQE stage-reuse replaces the " +
@@ -156,9 +156,9 @@ object PlanDump {
         seenUrls, fileProbe))
 
     // 10. frontier cuckoo probe (the deletable "Bloom/cuckoo" half, r5):
-    // same two-lane plan as the seen-Bloom — the probe handle is a
-    // FileCuckoos directory reference, and the filter files it points at
-    // were maintained by O(delta) insert/delete updates, not rebuilt
+    // same two-lane plan as the seen-Bloom — the probe handle is the same
+    // FileProbe directory reference over the cuckoo codec, and the filter
+    // files it points at were maintained by O(delta) insert/delete updates
     val ckDir = Files.createTempDirectory("plandump_cuckoo").toString
     crawl.FrontierFilter.writeFromUrls(seenUrls, buckets = 8,
       expectedPerBucket = 1024L, outDir = ckDir)
@@ -166,9 +166,9 @@ object PlanDump {
     dumpFormatted("Frontier cuckoo probe, file-backed (F3/J1 still-queued gate at 10^10)",
       "Want: structurally IDENTICAL to the seen-Bloom probe plan above — " +
         "same fenced probe Filter above the bucket Exchange, same map-only " +
-        "definitely-new branch, same O(100 B) broadcast handle (FileCuckoos) " +
-        "— because the probe rides the same BloomProbe trait. The difference " +
-        "is off-plan: the cuckoo bucket files support DELETION, so the " +
+        "definitely-new branch, same O(100 B) broadcast handle (FileProbe) " +
+        "— because it is the same probe class over the cuckoo codec. The " +
+        "difference is off-plan: the cuckoo bucket files support DELETION, so the " +
         "non-monotone frontier is maintained with O(delta)/round updates " +
         "instead of the O(|frontier|) rebuild a Bloom would force.",
       crawl.SeenFilter.bloomAntiJoin(

@@ -61,6 +61,7 @@ object CrawlJob {
     import spark.implicits._
 
     val io = new TableIO(spark, stateDir)
+    val conf = spark.sparkContext.hadoopConfiguration
     val runId = resolveRunId(seeds, cfg)
     // static per-job tables as checkpointed leaves (not just cached), so
     // every round's plan embeds a LogicalRDD leaf instead of re-analyzing
@@ -108,9 +109,9 @@ object CrawlJob {
       if (cfg.useBloomSeen) {
         bloomCap = SeenFilter.sizedFor(cfg.bloomExpectedPerBucket,
           seenTotal / math.max(cfg.seenBuckets, 1))
-        bloomDir = Some(io.bloomsDir(last)).filter(_ => io.hasBlooms(last))
+        bloomDir = Some(io.bloomsDir(last)).filter(FilterInventory.exists(_, conf))
         // exact-resume guard: a checkpoint written pre-bloom (or partially
-        // restored) has seen rows but no bloom files — rebuild the filter
+        // restored) has seen rows but no bloom inventory — rebuild the filter
         // files from the seen table (distributed; no driver bytes). A
         // missing-file probe falls back to the exact join, so this guard is
         // an accelerator repair, never a correctness one.
@@ -124,8 +125,8 @@ object CrawlJob {
       // round runs the exact join, then the round-end write rebuilds them
       // from the full frontier (the cuckooDir.isEmpty branch below)
       if (cuckooConfigured) {
-        cuckooDir = Some(io.cuckooDir(last)).filter(_ => io.hasCuckoo(last))
-        // derive the resumed cap from the checkpointed files' actual width:
+        cuckooDir = Some(io.cuckooDir(last)).filter(FilterInventory.exists(_, conf))
+        // derive the resumed cap from the live files' actual width:
         // the pre-crash run may have GROWN past the config default, and a
         // reset cap would size new (previously-empty) buckets too small —
         // avoidable dead buckets until the next growth rebuild (ADVICE r5)
@@ -200,7 +201,7 @@ object CrawlJob {
             cfg.seenBuckets, bloomCap, None, dir)
         } else {
           // incremental: this round's slice folded into the previous round's
-          // files (merge + copy-forward, all executor-side / streamed)
+          // files (touched buckets merged executor-side, the rest referenced)
           SeenFilter.writeMergedBlooms(m.newSeen, cfg.seenBuckets,
             bloomCap, bloomDir, dir)
         }
@@ -251,14 +252,13 @@ object CrawlJob {
         // seen compaction does, without re-copying history)
         io.compactResults(round)
         io.compactMetrics(round)
-        // frontier/bloom snapshots are superseded WHOLE each round (only
-        // the latest committed round is ever read back) — GC the history
-        // on the same cadence so their dir listings stay bounded too
+        // frontier snapshots are superseded WHOLE each round (only the
+        // latest committed round is ever read back) — GC the history on the
+        // same cadence so the dir listing stays bounded too
         io.gcRoundDirsBelow("frontier", round)
         // filter tables are inventory-manifested: keep exactly the files the
-        // live round's manifest references, sweep the rest
-        io.gcFilterDirsBelow("blooms", round, ".bloom")
-        io.gcFilterDirsBelow("cuckoo", round, ".cf")
+        // live round's inventories reference (none when a filter is off)
+        io.gcFiltersBelow(round)
         io.gcManifestsBelow(round)
       }
       seen = io.readSeen(round).map(_.select("url")).getOrElse(emptySeen(spark))

@@ -1,8 +1,7 @@
 package graft.crawl
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.SerializableHadoopConf
 
@@ -14,10 +13,11 @@ import graft.util.SerializableHadoopConf
   * still-queued frontier and skip the exact anti-join against it — the
   * overwhelming majority once the crawl widens. Same two-lane mechanism as
   * the seen-Bloom ([[SeenFilter.bloomAntiJoin]], reused verbatim via the
-  * [[SeenFilter.BloomProbe]] trait), same file-backed shipping (the
-  * broadcast is a directory path + bucket count, constant-size at any
-  * frontier scale; executors lazily load only the bucket files their tasks
-  * probe).
+  * [[SeenFilter.BloomProbe]] trait), and the same file-backed filter store
+  * ([[FilterInventory]]): the same probe class over the cuckoo codec, the
+  * same per-bucket writer step, inventory and GC. The broadcast is a
+  * directory path + bucket count, constant-size at any frontier scale;
+  * executors lazily load only the bucket files their tasks probe.
   *
   * Why cuckoo and not a second Bloom: the frontier is NOT monotone — every
   * scheduled url LEAVES it. A Bloom can only grow, so mirroring the frontier
@@ -32,256 +32,102 @@ import graft.util.SerializableHadoopConf
   * inserted-minus-deleted items — so filter-rejected kids are truly absent
   * and probe-positives take the exact anti-join. A bucket whose filter
   * SATURATED (insert failure — see [[CuckooFilter]]'s saturation contract)
-  * is marked with a `.dead` file and its `.cf` file removed; missing files
-  * probe all-true, degrading that bucket to the exact join, never to a wrong
-  * answer. The delete-safety precondition (deletes ⊆ live inserts) holds by
-  * construction: departed urls are exactly the scheduled slice of the
-  * frontier, every member of which was inserted when it was enqueued (or at
-  * the init build).
+  * is written as a `.dead` marker instead of a `.cf` file and left out of
+  * the inventory; it probes all-true, degrading that bucket to the exact
+  * join, never to a wrong answer. The delete-safety precondition
+  * (deletes ⊆ live inserts) holds by construction: departed urls are
+  * exactly the scheduled slice of the frontier, every member of which was
+  * inserted when it was enqueued (or at the init build).
   *
   * Budget at the 10^10-url design point: the frontier is the CRAWLABLE
   * HORIZON, typically 1–2 orders below the cumulative seen set — at 10^9
   * queued urls and 4096 outer buckets, ~2.4 bytes/url ⇒ ~0.6 MB per bucket
   * file, 64-entry executor cache ≈ 38 MB. The per-round update writes only
-  * touched buckets and stream-copies the rest forward, all executor-side —
-  * the driver handles bucket IDS only, never filter bytes.
+  * touched buckets and references the rest through the inventory, all
+  * executor-side — the driver handles bucket IDS only, never filter bytes.
   */
 object FrontierFilter {
 
-  /** File-backed probe over per-bucket cuckoo files — the frontier twin of
-    * [[SeenFilter.FileBlooms]] (same executor-side bounded cache, same
-    * missing-file = probe-true fallback, same bucket co-partitioning
-    * request). */
-  final class FileCuckoos(val dir: String, val buckets: Int,
-      conf: SerializableHadoopConf, val maxCached: Int = 64)
-      extends SeenFilter.BloomProbe {
-    override def wantsBucketPartitioning: Boolean = true
-
-    @transient private lazy val cache =
-      new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
-    private object Missing extends Serializable
-
-    // inventory-resolved like [[SeenFilter.FileBlooms]]: untouched buckets'
-    // files live in earlier round dirs; absent/dead/lost buckets probe true
-    @transient private lazy val inventory: Map[Int, String] =
-      FilterInventory.resolve(dir, conf.value, ".cf")
-
-    private def load(bucket: Int): AnyRef =
-      inventory.get(bucket) match {
-        case None => Missing
-        case Some(path) =>
-          val p = new HPath(path)
-          val fs = p.getFileSystem(conf.value)
-          if (!fs.exists(p)) Missing
-          else {
-            val in = fs.open(p)
-            try CuckooFilter.readFrom(in) finally in.close()
-          }
-      }
-
-    def mightContain(bucket: Int, hash: Long): Boolean = {
-      var f = cache.get(bucket)
-      if (f == null) {
-        if (cache.size >= maxCached) graft.util.BoundedEvict.evictOne(cache)
-        f = cache.computeIfAbsent(bucket, load _)
-      }
-      f match {
-        case cf: CuckooFilter => cf.mightContain(hash)
-        case _ => true // missing or dead bucket: exact-join fallback
-      }
-    }
-  }
-
-  private def filterPath(dir: String, bucket: Int) = new HPath(dir, s"bucket=$bucket.cf")
-  private def deadPath(dir: String, bucket: Int) = new HPath(dir, s"bucket=$bucket.dead")
-
   /** Hashed-and-bucketed view: (bucket, h) in the same bucket space as the
     * seen table ([[SeenFilter.bucketOf]]) so one `repartition(bucket)`
-    * co-locates each outer bucket's whole delta in one task. */
-  private def hashed(urls: DataFrame, buckets: Int): DataFrame =
+    * co-locates each outer bucket's whole delta in one task. `op` tags the
+    * row: 0 = delete, 1 = insert. */
+  private def hashed(urls: DataFrame, buckets: Int, op: Int): DataFrame =
     urls.select(SeenFilter.bucketOf(col("url"), buckets).as("bucket"),
-      xxhash64(col("url")).as("h"))
+      xxhash64(col("url")).as("h"), lit(op).as("op"))
+
+  /** One shuffle on bucket, each bucket's rows sorted (op, h): deletes
+    * before inserts as the protocol requires, and the h tie-break makes the
+    * applied sequence — hence the filter bytes — a pure function of the
+    * delta SETS, not of shuffle arrival order. */
+  private def byBucket(ops: DataFrame): DataFrame =
+    ops.repartition(col("bucket")).sortWithinPartitions(col("bucket"), col("op"), col("h"))
+
+  /** The cuckoo build kernel shared by both writers, inside the store's
+    * writer step: apply a bucket's ops to its previous filter, or to a
+    * fresh one sized `expectedPerBucket`; a failed insert kills the bucket. */
+  private def applyOps(expectedPerBucket: Long, prev: FilterInventory.Prev, outDir: String,
+      conf: SerializableHadoopConf)(rows: Iterator[Row]): Iterator[(Int, Boolean)] =
+    FilterInventory.writeBuckets(FilterCodec.Cuckoo, prev, outDir, conf, rows) { (last, r) =>
+      val f = last.getOrElse(CuckooFilter.create(expectedPerBucket))
+      if (r.getInt(2) == 0) { f.delete(r.getLong(1)); Some(f) }
+      else Some(f).filter(_.insert(r.getLong(1)))
+    }
 
   /** Build per-bucket cuckoo files from the FULL url set — fresh init,
-    * resume repair, and capacity-growth rebuild. One shuffle on bucket;
-    * each file is written from the task that sorted its bucket; the driver
-    * collects touched bucket ids (ints), never filter bytes. Returns the
-    * touched-bucket count. */
+    * resume repair, and capacity-growth rebuild. Each file is written from
+    * the task that sorted its bucket; the driver collects touched bucket ids
+    * (ints), never filter bytes. Returns the touched-bucket count. */
   def writeFromUrls(urls: DataFrame, buckets: Int, expectedPerBucket: Long,
       outDir: String): Int = {
-    val spark = urls.sparkSession
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    mkdirsOrThrow(spark, outDir)
-    // sorted by (bucket, h) — not just bucket — so the filter bytes are a
-    // pure function of the url SET, independent of shuffle arrival order:
-    // the class-doc byte-identity claim holds for the distributed writer too
-    val touched = hashed(urls, buckets)
-      .repartition(col("bucket")).sortWithinPartitions(col("bucket"), col("h"))
-      .rdd.mapPartitions { rows =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
-        var cur = -1L
-        var filter: CuckooFilter = null
-        var dead = false
-        def flush(): Unit = if (cur >= 0) {
-          writeBucket(outDir, cur.toInt, if (dead) None else Some(filter), conf)
-          out += ((cur.toInt, dead))
-        }
-        rows.foreach { r =>
-          val b = r.getLong(0)
-          if (b != cur) {
-            flush()
-            cur = b
-            filter = CuckooFilter.create(expectedPerBucket)
-            dead = false
-          }
-          if (!dead && !filter.insert(r.getLong(1))) dead = true
-        }
-        flush()
-        out.iterator
-      }.collect()
-    FilterInventory.write(outDir, conf.value, touched.collect {
-      case (b, false) => b -> filterPath(outDir, b).toString
-    }.toMap)
-    touched.length
+    val conf = new SerializableHadoopConf(urls.sparkSession.sparkContext.hadoopConfiguration)
+    val prev = FilterInventory.previous(None, conf.value)
+    val touched = byBucket(hashed(urls, buckets, 1)).rdd
+      .mapPartitions(applyOps(expectedPerBucket, prev, outDir, conf)).collect()
+    FilterInventory.commit(outDir, conf.value, FilterCodec.Cuckoo, prev, touched)
   }
 
-  /** Apply one round's frontier delta to the previous round's filter
-    * inventory: per touched bucket, load its live filter (resolved through
-    * `prevDir`'s inventory — the file may live in an earlier round's dir;
-    * a bucket with no entry was empty and gets a fresh filter sized
-    * `expectedPerBucket`), DELETE the departed hashes first (freeing
-    * slots), then insert the entered ones, and write the result under
-    * `outDir`. A bucket already `.dead` in `prevDir` stays dead (its lost
-    * memberships are unrecoverable from deltas); a bucket that saturates
-    * HERE goes dead; a bucket whose referenced file is LOST goes dead too
-    * (a fresh filter would fabricate false negatives). Untouched buckets
-    * are REFERENCED by the new `_inventory`, never copied ([[FilterInventory]]
-    * — the r5-verdict #2 fix); only the zero-byte `.dead` markers carry
-    * physically (rare, and the next writer's prev-dir lookup needs them).
-    * O(|inserts| + |deletes|) work and bytes — never a frontier scan, never
-    * a full-inventory copy. Returns the touched-bucket count. */
+  /** Apply one round's frontier delta to the previous round's filters: per
+    * touched bucket, open its live filter through `prevDir`'s inventory (the
+    * file may live in an earlier round's dir; a bucket with no entry was
+    * empty and gets a fresh filter sized `expectedPerBucket`), DELETE the
+    * departed hashes first (freeing slots), then insert the entered ones,
+    * and write the result under `outDir`. A bucket already `.dead` in
+    * `prevDir` stays dead (its lost memberships are unrecoverable from
+    * deltas); a bucket that saturates HERE goes dead; a bucket whose
+    * referenced file is LOST goes dead too (a fresh filter would fabricate
+    * false negatives). Untouched buckets are REFERENCED by the new
+    * inventory, never copied; only the zero-byte `.dead` markers carry
+    * physically. O(|inserts| + |deletes|) work and bytes — never a frontier
+    * scan, never a full-inventory copy. Returns the touched-bucket count. */
   def writeDeltas(inserts: DataFrame, deletes: DataFrame, buckets: Int,
       expectedPerBucket: Long, prevDir: String, outDir: String): Int = {
-    val spark = inserts.sparkSession
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    mkdirsOrThrow(spark, outDir)
-    val prevLive: Map[Int, String] = FilterInventory.resolve(prevDir, conf.value, ".cf")
-    val prevDeadSet: Set[Int] = {
-      val p = new HPath(prevDir)
-      val fs = p.getFileSystem(conf.value)
-      if (!fs.exists(p)) Set.empty
-      else {
-        val rx = "bucket=(\\d+)\\.dead".r
-        fs.listStatus(p).flatMap(_.getPath.getName match {
-          case rx(b) => Some(b.toInt)
-          case _ => None
-        }).toSet
-      }
-    }
-    // op 0 = delete, 1 = insert; the within-bucket sort runs deletes first
-    val tagged = hashed(deletes, buckets).withColumn("op", lit(0))
-      .unionByName(hashed(inserts, buckets).withColumn("op", lit(1)))
-    // (bucket, op, h): deletes before inserts as the protocol requires, and
-    // the h tie-break makes the applied sequence — hence the filter bytes —
-    // a pure function of the delta SETS, not of shuffle arrival order
-    val touched: Array[(Int, Boolean)] = tagged
-      .repartition(col("bucket")).sortWithinPartitions(col("bucket"), col("op"), col("h"))
-      .rdd.mapPartitions { rows =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
-        var cur = -1L
-        var filter: CuckooFilter = null
-        var dead = false
-        def open(bucket: Int): Unit = {
-          dead = false; filter = null
-          if (prevDeadSet.contains(bucket)) dead = true
-          else prevLive.get(bucket) match {
-            case None => filter = CuckooFilter.create(expectedPerBucket)
-            case Some(path) =>
-              val p = new HPath(path)
-              val fs = p.getFileSystem(conf.value)
-              if (!fs.exists(p)) dead = true // referenced file lost
-              else {
-                val in = fs.open(p)
-                try filter = CuckooFilter.readFrom(in) finally in.close()
-              }
-          }
-        }
-        def flush(): Unit = if (cur >= 0) {
-          writeBucket(outDir, cur.toInt, if (dead) None else Some(filter), conf)
-          out += ((cur.toInt, dead))
-        }
-        rows.foreach { r =>
-          val b = r.getLong(0)
-          if (b != cur) { flush(); cur = b; open(b.toInt) }
-          if (!dead) {
-            if (r.getInt(2) == 0) filter.delete(r.getLong(1))
-            else if (!filter.insert(r.getLong(1))) dead = true
-          }
-        }
-        flush()
-        out.iterator
-      }.collect()
-    val touchedSet = touched.map(_._1).toSet
-    // untouched dead buckets: carry the zero-byte marker forward
-    val fsDriver = new HPath(outDir).getFileSystem(conf.value)
-    (prevDeadSet -- touchedSet).foreach(b => fsDriver.create(deadPath(outDir, b), true).close())
-    val entries = (prevLive -- touchedSet -- prevDeadSet) ++ touched.collect {
-      case (b, false) => b -> filterPath(outDir, b).toString
-    }
-    FilterInventory.write(outDir, conf.value, entries)
-    touched.length
-  }
-
-  /** Some(filter) ⇒ write `bucket=B.cf`; None ⇒ the bucket is dead, write
-    * the `.dead` marker instead (probe-true / exact-join fallback, and the
-    * next delta writer knows not to resurrect it from a partial delta). */
-  private def writeBucket(dir: String, bucket: Int, filter: Option[CuckooFilter],
-      conf: SerializableHadoopConf): Unit = {
-    filter match {
-      case Some(f) =>
-        val dst = filterPath(dir, bucket)
-        val fs = dst.getFileSystem(conf.value)
-        val os = fs.create(dst, true)
-        try f.writeTo(os) finally os.close()
-      case None =>
-        val dst = deadPath(dir, bucket)
-        val fs = dst.getFileSystem(conf.value)
-        fs.create(dst, true).close()
-    }
-  }
-
-  private def mkdirsOrThrow(spark: SparkSession, dir: String): Unit = {
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.mkdirs(p)) throw new java.io.IOException(s"mkdirs failed: $p")
+    val conf = new SerializableHadoopConf(inserts.sparkSession.sparkContext.hadoopConfiguration)
+    val prev = FilterInventory.previous(Some(prevDir), conf.value)
+    val touched = byBucket(hashed(deletes, buckets, 0).unionByName(hashed(inserts, buckets, 1)))
+      .rdd.mapPartitions(applyOps(expectedPerBucket, prev, outDir, conf)).collect()
+    FilterInventory.commit(outDir, conf.value, FilterCodec.Cuckoo, prev, touched)
   }
 
   /** Per-bucket capacity implied by a checkpointed inventory: reads ONE
-    * bucket file's header (8 bytes — never a table) and inverts
-    * [[CuckooFilter.create]]'s sizing, so a resume derives the cap the
-    * pre-crash run had GROWN to instead of resetting to the config default
-    * (which would make [[writeDeltas]] create undersized filters for
-    * previously-empty buckets — extra dead buckets, an ADVICE r5 perf
-    * regression). None when the dir holds no live `.cf` file. */
-  def resumedCap(dir: String, spark: SparkSession): Option[Long] = {
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).find(_.getPath.getName.endsWith(".cf")).map { st =>
-      val in = new java.io.DataInputStream(fs.open(st.getPath))
-      try {
-        in.readInt() // version (readFrom validates; the header shape is ours)
-        val numBuckets = in.readInt()
-        (numBuckets.toLong * CuckooFilter.SlotsPerBucket * CuckooFilter.TargetLoad).toLong
-      } finally in.close()
+    * live bucket file's header (8 bytes — never a table), resolved through
+    * the inventory, and inverts [[CuckooFilter.create]]'s sizing, so a
+    * resume derives the cap the pre-crash run had GROWN to instead of
+    * resetting to the config default (which would make [[writeDeltas]]
+    * create undersized filters for previously-empty buckets — extra dead
+    * buckets, an ADVICE r5 perf regression). None when the inventory holds
+    * no live file. */
+  def resumedCap(dir: String, spark: SparkSession): Option[Long] =
+    FilterInventory.readLive(dir, spark.sparkContext.hadoopConfiguration,
+      FilterCodec.Cuckoo.suffix) { in =>
+      in.readInt() // version (readFrom validates; the header shape is ours)
+      val numBuckets = in.readInt()
+      (numBuckets.toLong * CuckooFilter.SlotsPerBucket * CuckooFilter.TargetLoad).toLong
     }
-  }
 
   /** Broadcast a file-backed frontier probe: constant-size on the wire no
     * matter how large the frontier. */
   def broadcastFileCuckoos(spark: SparkSession, buckets: Int, dir: String,
       maxCached: Int = 64): Broadcast[SeenFilter.BloomProbe] =
-    spark.sparkContext.broadcast(new FileCuckoos(dir, buckets,
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
-      maxCached): SeenFilter.BloomProbe)
+    FilterInventory.broadcastProbe(spark, buckets, dir, FilterCodec.Cuckoo, maxCached)
 }

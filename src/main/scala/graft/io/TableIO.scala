@@ -24,6 +24,8 @@ import org.apache.spark.sql.functions.col
   *                                           _SUCCESS marker exists)
   *   frontier/round=N/  part-*.parquet      (full snapshot per round)
   *   metrics/round=N/   part-*.parquet
+  *   blooms/round=N/, cuckoo/round=N/       (per-bucket filter files; the
+  *                                           layout of graft.crawl.FilterInventory)
   *   manifest/round=N.json                  (commit marker, written LAST)
   * }}}
   * A round is committed iff its manifest exists; resume reads the highest
@@ -177,61 +179,15 @@ final class TableIO(spark: SparkSession, root: String) {
   def writeMetrics(round: Int, df: DataFrame): Unit =
     df.drop("round").write.mode(SaveMode.Overwrite).parquet(p("metrics", s"round=$round"))
 
-  /** The round's per-bucket seen-Bloom filter directory (cumulative through
-    * the round; one binary file per bucket, written executor-side by
-    * [[graft.crawl.SeenFilter.writeMergedBlooms]]). */
+  /** The round's seen-Bloom filter dir (cumulative through the round),
+    * written executor-side by [[graft.crawl.SeenFilter.writeMergedBlooms]];
+    * its layout is the filter store's ([[graft.crawl.FilterInventory]]). */
   def bloomsDir(round: Int): String = p("blooms", s"round=$round")
 
-  /** Does the round have a committed filter inventory (its `_inventory`
-    * manifest — which may reference files in earlier round dirs — or, for
-    * pre-inventory layouts, at least one bucket file of its own)? */
-  def hasBlooms(round: Int): Boolean = {
-    val dir = hp("blooms", s"round=$round")
-    fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      val n = st.getPath.getName
-      n == graft.crawl.FilterInventory.FileName || n.endsWith(".bloom")
-    }
-  }
-
-  /** The round's per-bucket frontier cuckoo-filter directory (mirrors the
-    * frontier AFTER the round; one `.cf` file — or `.dead` marker — per
-    * populated bucket, written executor-side by
-    * [[graft.crawl.FrontierFilter]]). */
+  /** The round's frontier cuckoo-filter dir (mirrors the frontier AFTER the
+    * round), written executor-side by [[graft.crawl.FrontierFilter]]; its
+    * layout is the filter store's ([[graft.crawl.FilterInventory]]). */
   def cuckooDir(round: Int): String = p("cuckoo", s"round=$round")
-
-  /** Does the round have at least one committed cuckoo bucket entry
-    * (inventory manifest, filter file or dead marker)? */
-  def hasCuckoo(round: Int): Boolean = {
-    val dir = hp("cuckoo", s"round=$round")
-    fs.exists(dir) && fs.listStatus(dir).exists { st =>
-      val n = st.getPath.getName
-      n == graft.crawl.FilterInventory.FileName || n.endsWith(".cf") || n.endsWith(".dead")
-    }
-  }
-
-  /** Driver-side map write — test/embedded convenience only; the persistent
-    * loop writes filters executor-side via
-    * [[graft.crawl.SeenFilter.writeMergedBlooms]]. */
-  def writeBlooms(round: Int, blooms: Map[Int, Array[Byte]]): Unit = {
-    val dir = hp("blooms", s"round=$round")
-    fs.mkdirs(dir)
-    blooms.foreach { case (bucket, bytes) =>
-      val out = fs.create(new HPath(dir, s"bucket=$bucket.bloom"), true)
-      try out.write(bytes) finally out.close()
-    }
-  }
-
-  def readBlooms(round: Int): Map[Int, Array[Byte]] = {
-    val dir = hp("blooms", s"round=$round")
-    if (!fs.exists(dir)) return Map.empty
-    val rx = "bucket=(\\d+)\\.bloom".r
-    fs.listStatus(dir).flatMap { st =>
-      st.getPath.getName match {
-        case rx(b) => Some(b.toInt -> readBytes(st.getPath))
-        case _ => None
-      }
-    }.toMap
-  }
 
   /** Atomic commit marker: write to a temp file, then rename into place. */
   def commitRound(round: Int, manifestJson: String): Unit =
@@ -478,10 +434,10 @@ final class TableIO(spark: SparkSession, root: String) {
 
   /** GC per-round dirs of `table` strictly below `keepRound` — for tables
     * where only the LATEST committed round is ever read back (frontier
-    * snapshots, cumulative bloom files): older rounds are superseded whole,
-    * so this is pure garbage collection, run on the compaction cadence to
-    * bound the dir listing. Crash-safe trivially: resume reads only
-    * `round=lastCommitted`, which is ≥ `keepRound` at every call site. */
+    * snapshots): older rounds are superseded whole, so this is pure garbage
+    * collection, run on the compaction cadence to bound the dir listing.
+    * Crash-safe trivially: resume reads only `round=lastCommitted`, which is
+    * ≥ `keepRound` at every call site. */
   def gcRoundDirsBelow(table: String, keepRound: Int): Unit = {
     val dir = hp(table)
     if (!fs.exists(dir)) return
@@ -493,51 +449,12 @@ final class TableIO(spark: SparkSession, root: String) {
     }
   }
 
-  /** GC for the inventory-manifested filter tables (blooms / cuckoo):
-    * untouched buckets are REFERENCED across round dirs instead of copied
-    * forward ([[graft.crawl.FilterInventory]]), so plain
-    * [[gcRoundDirsBelow]] would delete files the live round still resolves
-    * through. This variant reads `keepRound`'s manifest, deletes every
-    * UNREFERENCED filter file below it, and drops round dirs that end up
-    * holding nothing live — total retained bytes stay = the live inventory,
-    * and the dir listing is bounded by min(buckets, rounds) + the
-    * compaction cadence, never by total rounds. Zero-byte `.dead` markers
-    * below keepRound are swept with their dirs (the live round carries its
-    * own). Falls back to [[gcRoundDirsBelow]] when keepRound has no
-    * manifest (pre-inventory layout). */
-  def gcFilterDirsBelow(table: String, keepRound: Int, suffix: String): Unit = {
-    val dir = hp(table)
-    if (!fs.exists(dir)) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val inv = graft.crawl.FilterInventory.read(p(table, s"round=$keepRound"), conf)
-    inv match {
-      case None => gcRoundDirsBelow(table, keepRound)
-      case Some(entries) =>
-        val referenced: Set[String] =
-          entries.values.map(new HPath(_).toUri.getPath).toSet
-        fs.listStatus(dir).foreach { st =>
-          st.getPath.getName match {
-            case roundRx(r) if r.toInt < keepRound =>
-              val files = fs.listStatus(st.getPath)
-              val keptNames = files.map(_.getPath).collect {
-                case f if f.getName.endsWith(suffix) &&
-                  referenced.contains(f.toUri.getPath) => f.getName
-              }.toSet
-              if (keptNames.isEmpty) fs.delete(st.getPath, true)
-              else files.foreach { f =>
-                val name = f.getPath.getName
-                // keep referenced filter files and their checksum sidecars
-                // (the local/checksum FS pairs every file with .name.crc)
-                val keep = keptNames.contains(name) ||
-                  (name.startsWith(".") && name.endsWith(".crc") &&
-                    keptNames.contains(name.stripPrefix(".").stripSuffix(".crc")))
-                if (!keep) fs.delete(f.getPath, false)
-              }
-            case _ =>
-          }
-        }
-    }
-  }
+  /** GC the blooms and cuckoo filter tables below `keepRound`: keep exactly
+    * the files `keepRound`'s inventories reference
+    * ([[graft.crawl.FilterInventory.gcBelow]]). */
+  def gcFiltersBelow(keepRound: Int): Unit =
+    Seq("blooms", "cuckoo").foreach(t =>
+      graft.crawl.FilterInventory.gcBelow(p(t), keepRound, spark.sparkContext.hadoopConfiguration))
 
   def readResults(): DataFrame = readAppendTable("results")
 

@@ -104,7 +104,7 @@ class CuckooFilterSpec extends AnyFunSuite {
         .select("url").as[String].collect().sorted.toSeq
       assert(accel == plain, s"round $r parity")
       // the filter must be doing work: departed urls now probe mostly false
-      val f = new FrontierFilter.FileCuckoos(out, 8,
+      val f = new FilterInventory.FileProbe(out, 8, FilterCodec.Cuckoo,
         new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
       val falseCnt = urlsDf(departed)
         .select(SeenFilter.bucketOf(col("url"), 8).as("b"), xxhash64(col("url")).as("h"))
@@ -179,7 +179,7 @@ class CuckooFilterSpec extends AnyFunSuite {
     // GC below round 1 must keep the round-0 files round 1 still references
     // and drop the SUPERSEDED round-0 copies of the touched buckets
     val io = new graft.io.TableIO(spark, base)
-    io.gcFilterDirsBelow("cuckoo", 1, ".cf")
+    io.gcFiltersBelow(1)
     val kept0 = cfFiles(s"$base/cuckoo/round=0")
     assert(kept0.size == 8 - touched, s"round-0 must keep exactly the referenced files, kept $kept0")
     parity() // still exact over the swept layout
@@ -216,7 +216,8 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(nAuto == nOff)
     assert(rAuto == rOff)
     val io = new graft.io.TableIO(spark, dirAuto)
-    val states = (0 until nAuto).map(io.hasCuckoo)
+    val states = (0 until nAuto).map(r => FilterInventory.exists(io.cuckooDir(r),
+      spark.sparkContext.hadoopConfiguration))
     assert(states.exists(identity), "the gate must have engaged mid-crawl")
     assert(!states.head || !states.last,
       "the gate must have been off at the narrow end(s) of the crawl")
@@ -250,7 +251,8 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(sOn == sOff)
     // the accelerator actually ran: filter state exists for the last rounds
     val io = new graft.io.TableIO(spark, dirOn)
-    assert((0 until nOn).exists(io.hasCuckoo), "no cuckoo state written")
+    assert((0 until nOn).exists(r => FilterInventory.exists(io.cuckooDir(r),
+      spark.sparkContext.hadoopConfiguration)), "no cuckoo state written")
   }
 
   test("capacity-growth rebuild triggers mid-crawl and keeps row identity") {

@@ -59,17 +59,6 @@ class RoundCommitSpec extends AnyFunSuite {
     round
   }
 
-  /** The benchmark's deep-crawl web in miniature: per host a chain
-    * /c/0 → /c/1 and a linkless leaf /d/0, both seeds, so a
-    * per-host quota of 1 defers a row of every host. */
-  private def deepCrawlWeb(hosts: Int): Synth.Graph = {
-    val g = Synth.chainGraph(hosts, chainLen = 2)
-    val leaves = (0 until hosts).map(h => Page(s"https://${Synth.host(h)}/d/0",
-      new java.sql.Timestamp(1600000000000L), "<html><body>leaf</body></html>".getBytes("UTF-8"),
-      s"leaf $h", "en"))
-    g.copy(pages = g.pages ++ leaves, seeds = g.seeds ++ leaves.map(_.url))
-  }
-
   test("metrics and manifest equal the committed tables, every round (deep-crawl shape)") {
     // every resume reads a manifest whose fields are reordered, spaced and
     // padded with an extra nested `seen_total` ahead of the real one: only
@@ -81,7 +70,7 @@ class RoundCommitSpec extends AnyFunSuite {
            |  "frontier": ${f("frontier")}, "extra": [1, 2], "fetched": ${f("fetched")},
            |  "scheduled": ${f("scheduled")}, "round": $last }""".stripMargin)
     }
-    val rounds = crawlCheckingEveryRound(deepCrawlWeb(3),
+    val rounds = crawlCheckingEveryRound(SimCrawler.deepCrawlWeb(3),
       CrawlConfig(maxDepth = 8, hostQuotaPerRound = 1, useCuckooFrontier = true,
         seenCompactEvery = 1, runId = "commit-deep"), "deep", rewrite)
     assert(rounds == 3)

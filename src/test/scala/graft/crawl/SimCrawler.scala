@@ -49,6 +49,17 @@ object SimCrawler {
   final case class Walk(finalUrl: String, nRedirects: Int,
       terminal3xx: Option[Int], chain: Vector[SimHop])
 
+  /** The benchmark's deep-crawl web in miniature: per host a chain
+    * /c/0 → /c/1 and a linkless leaf /d/0, both seeds, so a
+    * per-host quota of 1 defers a row of every host. */
+  def deepCrawlWeb(hosts: Int): graft.synth.Synth.Graph = {
+    val g = graft.synth.Synth.chainGraph(hosts, chainLen = 2)
+    val leaves = (0 until hosts).map(h => Page(s"https://${graft.synth.Synth.host(h)}/d/0",
+      new java.sql.Timestamp(1600000000000L), "<html><body>leaf</body></html>".getBytes("UTF-8"),
+      s"leaf $h", "en"))
+    g.copy(pages = g.pages ++ leaves, seeds = g.seeds ++ leaves.map(_.url))
+  }
+
   /** Dynamic per-request redirect walk (fetch_header_command.rs:31-69),
     * recording one hop per followed redirect (:73-90) with the hop
     * response's lowercased headers (:73-90 clones the map); fixture rows

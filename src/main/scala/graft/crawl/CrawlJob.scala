@@ -11,6 +11,8 @@ import graft.model._
   * only sequential control. State (frontier / seen / results / metrics) is
   * checkpointed per round through [[TableIO]]; resume picks up from the last
   * committed manifest and produces output identical to an uninterrupted run.
+  * [[run]] is the one crawl loop: every caller, the embedded flagship query
+  * included, runs it over a state dir.
   */
 object CrawlJob {
 
@@ -271,17 +273,17 @@ object CrawlJob {
     FrontierRound.release(resolved)
     // zero rounds executed AND nothing committed earlier (fresh run with an
     // empty seed list): nothing was ever written, so the append-table reads
-    // would throw. Return the empty-but-correctly-shaped tables instead —
-    // same contract as [[runInMemory]]. A RESUME that finds no new work
-    // still lands in the readers branch (round = lastCommitted + 1 > 0).
+    // would throw. Return the empty-but-correctly-shaped tables instead. A
+    // RESUME that finds no new work still lands in the readers branch
+    // (round = lastCommitted + 1 > 0).
     if (round == 0) JobResult(0, emptyResults(spark), emptyMetrics(spark), Nil)
     else JobResult(round, io.readResults(), io.readMetrics(), roundSecs.toSeq)
   }
 
   /** Empty results table in the exact shape a populated run yields: the
-    * [[ResultRow]] data columns with `round` moved LAST (both runners
-    * attach `round` after the round tree — as the parquet partition column
-    * or as the per-round literal — so it trails the data columns). */
+    * [[ResultRow]] data columns with `round` moved LAST (the loop attaches
+    * `round` after the round tree as the parquet partition column, so it
+    * trails the data columns). */
   private def emptyResults(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val base = spark.emptyDataset[ResultRow].toDF()
@@ -298,79 +300,6 @@ object CrawlJob {
     val base = spark.emptyDataset[RoundMetrics].toDF()
     val dataCols = base.columns.filter(_ != "round").map(col)
     base.select(dataCols.toIndexedSeq :+ col("round").cast("int").as("round"): _*)
-  }
-
-  /** Checkpoint-free variant for embedded use (driver smoke query, tests,
-    * bench): same round pipeline, state held as persisted Datasets instead of
-    * parquet checkpoints. Returns the full results table. */
-  def runInMemory(
-      spark: SparkSession,
-      seeds: Seq[String],
-      pages: DataFrame,
-      robots: DataFrame,
-      redirects: DataFrame,
-      cfg: CrawlConfig): DataFrame = {
-    // static inputs as checkpointed leaves, so the per-round Catalyst work
-    // doesn't re-analyze their plans (resolveRedirects checkpoints
-    // internally)
-    val robotsCache = staticLeaf(FrontierRound.buildRobotsCache(robots))
-    val resolved = FrontierRound.resolveRedirects(spark, redirects, cfg)
-    val pagesCk = staticLeaf(pages)
-    val runId = resolveRunId(seeds, cfg)
-    var frontier = seedFrontier(spark, seeds).coalesce(1).persist()
-    var seen = emptySeen(spark).persist()
-    // per-round result leaves, unioned ONCE after the loop: results are
-    // never read mid-loop, and an incremental union would re-analyze an
-    // O(round)-leaf plan every round (quadratic total Catalyst work)
-    val resultRounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var round = 0
-    var bloomBytes: Map[Int, Array[Byte]] = Map.empty
-    var frontierCount = frontier.count()
-    while (frontierCount > 0 && round < cfg.maxRounds) {
-      val blooms =
-        if (cfg.useBloomSeen)
-          Some(SeenFilter.broadcastBlooms(spark, cfg.seenBuckets, bloomBytes))
-        else None
-      val megaHosts =
-        if (frontierCount > cfg.megaHostThreshold)
-          Some(FrontierRound.findMegaHostsDf(frontier, cfg.megaHostThreshold))
-        else None
-      val out = FrontierRound.run(spark, round, frontier, seen, pagesCk, robotsCache, resolved, cfg, blooms, megaHosts)
-      // the round's ONE action (same fold as the persistent loop); the
-      // leaves stay live — results are unioned after the loop, and the next
-      // round reads the frontier and new-seen legs
-      val m = FrontierRound.materialize(out)
-      out.release()
-      // round + absolute timings attach ABOVE the checkpoint leaf (changing
-      // literals inside the round tree would bust the codegen cache)
-      val newResults = FrontierRound.stampTimings(m.results, round, cfg)
-        .withColumn("run_id", lit(runId))
-        .withColumn("round", lit(round))
-      if (cfg.useBloomSeen) {
-        bloomBytes = SeenFilter.merge(bloomBytes,
-          SeenFilter.buildBlooms(m.newSeen, cfg.seenBuckets, cfg.bloomExpectedPerBucket))
-      }
-      blooms.foreach(_.unpersist(false))
-      frontier.unpersist(); seen.unpersist()
-      // the seen union chain grows one plan node per round — collapse it to
-      // a LogicalRDD leaf periodically so a deep in-memory run never pays
-      // Catalyst analysis linear in rounds (one extra optimize pass per 8
-      // rounds over a tiny table; the persistent loop truncates via
-      // parquet). The checkpoint already stores the partitions, so no
-      // .persist() on top — that would hold the rows twice.
-      val grownSeen = seen.union(m.newSeen)
-      seen = if ((round + 1) % 8 == 0) grownSeen.localCheckpoint(false)
-             else grownSeen.persist()
-      frontier = m.frontier
-      resultRounds += newResults
-      frontierCount = m.frontierCount
-      round += 1
-    }
-    FrontierRound.release(robotsCache); FrontierRound.release(resolved)
-    // empty case carries the same schema as the non-empty one (ResultRow
-    // columns + the per-round `round` literal appended by the loop)
-    if (resultRounds.isEmpty) emptyResults(spark)
-    else resultRounds.reduce(_ union _)
   }
 
   /** A static input as a checkpointed leaf. An embedded fixture (every

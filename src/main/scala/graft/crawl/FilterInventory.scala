@@ -45,9 +45,11 @@ object FilterCodec {
   * holds no filter: the crawl loop rebuilds it from its table.
   *
   * The store owns:
-  *   - the executor-side probe, [[FileProbe]], over a [[FilterCodec]];
-  *   - the per-bucket writer step, [[writeBuckets]] + [[commit]], that every
-  *     writer runs around its own build kernel;
+  *   - the executor-side probe, [[FileProbe]], over a [[FilterCodec]] — the
+  *     one probe type of the crawl loop, for the Bloom and cuckoo filters
+  *     alike;
+  *   - the per-bucket writer step, [[begin]] + [[writeBuckets]] +
+  *     [[commit]], that every writer runs around its own build kernel;
   *   - the has-filter check [[exists]], live-file lookup for a resumed
   *     capacity ([[readLive]]), and reachability GC ([[gcBelow]]).
   *
@@ -58,7 +60,8 @@ object FilterCodec {
   * fresh, which would drop its members (false negatives); a dead bucket
   * stays dead until a full build over the whole url set. The manifest is
   * written last, via temp file + rename, so a torn write leaves no
-  * manifest and hence no filter.
+  * manifest and hence no filter; the next write into that dir clears it
+  * first, so none of the torn write's files or markers survive.
   */
 object FilterInventory {
   val FileName = "_inventory"
@@ -158,9 +161,7 @@ object FilterInventory {
     * maybe-seen (true): its rows fall back to the exact join. */
   final class FileProbe[F <: AnyRef](val dir: String, val buckets: Int,
       codec: FilterCodec[F], conf: SerializableHadoopConf, val maxCached: Int = 64)
-      extends SeenFilter.BloomProbe {
-    override def wantsBucketPartitioning: Boolean = true
-
+      extends Serializable {
     // Missing caches a file-less bucket, so it is looked up once per
     // executor, not once per row
     @transient private lazy val cache =
@@ -183,10 +184,10 @@ object FilterInventory {
 
   /** Broadcast a [[FileProbe]] over `dir`. */
   def broadcastProbe[F <: AnyRef](spark: SparkSession, buckets: Int, dir: String,
-      codec: FilterCodec[F], maxCached: Int): Broadcast[SeenFilter.BloomProbe] =
+      codec: FilterCodec[F], maxCached: Int): Broadcast[FileProbe[_]] =
     spark.sparkContext.broadcast(new FileProbe(dir, buckets, codec,
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
-      maxCached): SeenFilter.BloomProbe)
+      maxCached): FileProbe[_])
 
   // ---------- the writer step ----------
 
@@ -194,20 +195,30 @@ object FilterInventory {
     * buckets. */
   final case class Prev(live: Map[Int, String], dead: Set[Int])
 
-  /** The state in `dir`, or nothing for a full build (None). A previous dir
-    * must hold a manifest: without one its filter is unknown, and starting
-    * its buckets fresh would drop their members. */
-  def previous(dir: Option[String], conf: Configuration): Prev = dir match {
-    case None => Prev(Map.empty, Set.empty)
-    case Some(d) =>
-      val live = read(d, conf).getOrElse(
-        throw new IllegalStateException(s"no filter inventory in $d"))
-      val p = new HPath(d)
-      val dead = p.getFileSystem(conf).listStatus(p).flatMap(_.getPath.getName match {
-        case DeadMarker(b) => Some(b.toInt)
-        case _ => None
-      }).toSet
-      Prev(live, dead)
+  /** Start a write into `outDir`: clear whatever an earlier, uncommitted
+    * attempt left there (a stale `.dead` marker would read as a dead bucket
+    * once this write commits), then return the state in `prevDir`, or
+    * nothing for a full build (None). Nothing references `outDir`'s files
+    * yet: it belongs to a round not yet committed, or — the resume repair —
+    * to one whose manifest is missing. A previous dir must hold a manifest:
+    * without one its filter is unknown, and starting its buckets fresh
+    * would drop their members. */
+  def begin(prevDir: Option[String], outDir: String, conf: Configuration): Prev = {
+    val out = new HPath(outDir)
+    val fs = out.getFileSystem(conf)
+    if (fs.exists(out)) fs.delete(out, true)
+    prevDir match {
+      case None => Prev(Map.empty, Set.empty)
+      case Some(d) =>
+        val live = read(d, conf).getOrElse(
+          throw new IllegalStateException(s"no filter inventory in $d"))
+        val p = new HPath(d)
+        val dead = p.getFileSystem(conf).listStatus(p).flatMap(_.getPath.getName match {
+          case DeadMarker(b) => Some(b.toInt)
+          case _ => None
+        }).toSet
+        Prev(live, dead)
+    }
   }
 
   /** The per-bucket writer step, run by a writer's task over its rows

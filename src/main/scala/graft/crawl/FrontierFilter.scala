@@ -12,10 +12,10 @@ import graft.util.SerializableHadoopConf
   * (SURVEY §2.4 F3/J1): kids the filter rejects are DEFINITELY not in the
   * still-queued frontier and skip the exact anti-join against it — the
   * overwhelming majority once the crawl widens. Same two-lane mechanism as
-  * the seen-Bloom ([[SeenFilter.bloomAntiJoin]], reused verbatim via the
-  * [[SeenFilter.BloomProbe]] trait), and the same file-backed filter store
-  * ([[FilterInventory]]): the same probe class over the cuckoo codec, the
-  * same per-bucket writer step, inventory and GC. The broadcast is a
+  * the seen-Bloom ([[SeenFilter.bloomAntiJoin]], reused verbatim), and the
+  * same file-backed filter store ([[FilterInventory]]): the same probe
+  * class [[FilterInventory.FileProbe]] over the cuckoo codec, the same
+  * per-bucket writer step, inventory and GC. The broadcast is a
   * directory path + bucket count, constant-size at any frontier scale;
   * executors lazily load only the bucket files their tasks probe.
   *
@@ -81,7 +81,7 @@ object FrontierFilter {
   def writeFromUrls(urls: DataFrame, buckets: Int, expectedPerBucket: Long,
       outDir: String): Int = {
     val conf = new SerializableHadoopConf(urls.sparkSession.sparkContext.hadoopConfiguration)
-    val prev = FilterInventory.previous(None, conf.value)
+    val prev = FilterInventory.begin(None, outDir, conf.value)
     val touched = byBucket(hashed(urls, buckets, 1)).rdd
       .mapPartitions(applyOps(expectedPerBucket, prev, outDir, conf)).collect()
     FilterInventory.commit(outDir, conf.value, FilterCodec.Cuckoo, prev, touched)
@@ -103,7 +103,7 @@ object FrontierFilter {
   def writeDeltas(inserts: DataFrame, deletes: DataFrame, buckets: Int,
       expectedPerBucket: Long, prevDir: String, outDir: String): Int = {
     val conf = new SerializableHadoopConf(inserts.sparkSession.sparkContext.hadoopConfiguration)
-    val prev = FilterInventory.previous(Some(prevDir), conf.value)
+    val prev = FilterInventory.begin(Some(prevDir), outDir, conf.value)
     val touched = byBucket(hashed(deletes, buckets, 0).unionByName(hashed(inserts, buckets, 1)))
       .rdd.mapPartitions(applyOps(expectedPerBucket, prev, outDir, conf)).collect()
     FilterInventory.commit(outDir, conf.value, FilterCodec.Cuckoo, prev, touched)
@@ -128,6 +128,6 @@ object FrontierFilter {
   /** Broadcast a file-backed frontier probe: constant-size on the wire no
     * matter how large the frontier. */
   def broadcastFileCuckoos(spark: SparkSession, buckets: Int, dir: String,
-      maxCached: Int = 64): Broadcast[SeenFilter.BloomProbe] =
+      maxCached: Int = 64): Broadcast[FilterInventory.FileProbe[_]] =
     FilterInventory.broadcastProbe(spark, buckets, dir, FilterCodec.Cuckoo, maxCached)
 }

@@ -248,11 +248,10 @@ object FrontierRound {
 
   /** Convert the round-relative `fetch_offset_ms` emitted by [[run]] into
     * the absolute virtual-clock stamps of [[graft.model.ResultRow]]
-    * (`fetch_start_ms`/`fetch_end_ms`). Applied by the drivers ABOVE the
-    * round's plan (the in-memory loop applies it above its checkpoint
-    * leaf): `round` is a changing literal, and embedding it inside the
-    * otherwise identically-shaped round tree would bust the generated-code
-    * cache every round. */
+    * (`fetch_start_ms`/`fetch_end_ms`). Applied by the crawl loop ABOVE the
+    * round's materialized leaf ([[materialize]]): `round` is a changing
+    * literal, and embedding it inside the otherwise identically-shaped
+    * round tree would bust the generated-code cache every round. */
   def stampTimings(results: DataFrame, round: Int, cfg: CrawlConfig): DataFrame = {
     val slotMs = cfg.crawlDelayMs.toLong + 1L
     val roundBase = cfg.virtualEpochMs + round.toLong * cfg.hostQuotaPerRound * slotMs
@@ -325,7 +324,9 @@ object FrontierRound {
     * re-running the round. The one action is a grouped aggregate over the
     * leaf: every leg's count plus the [[graft.model.RoundMetrics]]
     * aggregates of the results leg. The caller may drop the round's
-    * intermediate leaves ([[RoundOutput.release]]) right after. */
+    * intermediate leaves ([[RoundOutput.release]]) right after. The crawl
+    * loop ([[CrawlJob.run]]) writes every table and filter of the round
+    * from this leaf. */
   def materialize(out: RoundOutput): Materialized = {
     def tagged(df: DataFrame, kind: String) = df.withColumn("__kind", lit(kind))
     // the frontier leg flags its entered rows, so the cuckoo inserts ride
@@ -352,8 +353,8 @@ object FrontierRound {
     * requested url + every successful fetch's final url enter the seen set
     * (page_loader_service.rs:192-201 — status rows included, because
     * consume_crawl_result runs for them too), minus already-seen. The ONE
-    * definition of the seen-update rule ([[RoundOutput.newSeen]], which
-    * both loops materialize). */
+    * definition of the seen-update rule ([[RoundOutput.newSeen]], which the
+    * crawl loop materializes). */
   def newSeenOf(results: DataFrame, seen: DataFrame): DataFrame =
     results.select(col("url"))
       .union(results.filter(col("final_url").isNotNull).select(col("final_url").as("url")))
@@ -362,22 +363,17 @@ object FrontierRound {
 
   /** Hosts whose pending count exceeds the salting threshold — the ONLY
     * hosts routed through the two-phase salted top-k, as a (host) DataFrame
-    * that is never collected to the driver: the production path
-    * ([[run]] via the DataFrame [[scheduleFlagged]] overload) folds it into
-    * the round plan as a broadcast semi/anti join, so even a pathological
-    * frontier with thousands of mega hosts stays a small broadcast relation
-    * instead of a thousands-long `isin` literal in the plan. Mega-ness is a
+    * that is never collected to the driver: [[run]] (via
+    * [[scheduleFlagged]]) folds it into the round plan as a broadcast
+    * semi/anti join, so even a pathological frontier with thousands of mega
+    * hosts stays a small broadcast relation instead of a thousands-long
+    * `isin` literal in the plan. Mega-ness is a
     * pure performance heuristic (any choice yields the same exact top-k), so
     * the caller may also feed stale/raw counts (e.g. last round's metrics). */
   def findMegaHostsDf(frontier: DataFrame, threshold: Long): DataFrame =
     frontier.groupBy(col("host")).agg(count(lit(1)).as("__n"))
       .filter(col("__n") > threshold)
       .select(col("host"))
-
-  /** [[findMegaHostsDf]] collected to a host list — test/fixture
-    * convenience for the literal [[scheduleFlagged]] overload. */
-  def findMegaHosts(frontier: DataFrame, threshold: Long): Seq[String] =
-    findMegaHostsDf(frontier, threshold).collect().map(_.getString(0)).toSeq
 
   /** Politeness scheduler: exact per-host top-k by canonical priority
     * (north_rule: "host-keyed priority queue", "salted-key skew handling for
@@ -387,34 +383,21 @@ object FrontierRound {
     * Non-mega hosts (the overwhelming majority): a single per-host
     * row_number window — one shuffle+sort, exact top-k.
     *
-    * Mega hosts (pending > cfg.megaHostThreshold, passed in by the caller):
-    * phase 1 ranks within (host, salt) so no sort task ever sees more than
-    * ~pending/saltBuckets rows of one host; phase 2 ranks only the
-    * ≤ saltBuckets·k phase-1 survivors per host. Rows with rn1 > k are
-    * deferred without touching phase 2.
+    * Mega hosts (pending > cfg.megaHostThreshold, passed in by the caller
+    * as a (host) DataFrame): phase 1 ranks within (host, salt) so no sort
+    * task ever sees more than ~pending/saltBuckets rows of one host; phase
+    * 2 ranks only the ≤ saltBuckets·k phase-1 survivors per host. Rows with
+    * rn1 > k are deferred without touching phase 2. The split is a pair of
+    * broadcast LEFT ANTI / LEFT SEMI joins: they never duplicate probe rows
+    * (safe even if the mega set has dup hosts) and add no columns. The
+    * mega relation is tiny by construction (hosts over the threshold);
+    * `broadcast` keeps the split shuffle-free on the frontier side.
     */
-  def scheduleFlagged(frontier: DataFrame, cfg: CrawlConfig,
-      megaHosts: Seq[String] = Seq.empty): DataFrame =
-    if (megaHosts.isEmpty) scheduleSingle(frontier, cfg)
-    else {
-      // literal isin flag — test/fixture overload for hand-picked host
-      // lists; the production path is the DataFrame overload below
-      val isMega = col("host").isin(megaHosts: _*)
-      scheduleSplit(frontier.filter(!isMega), frontier.filter(isMega), cfg)
-    }
-
-  /** Production overload: mega hosts as a (host) DataFrame, split via
-    * broadcast LEFT ANTI / LEFT SEMI joins. Semi/anti joins never duplicate
-    * probe rows (safe even if the mega set has dup hosts) and add no
-    * columns, so the output schema is identical to the literal overload.
-    * The mega relation is tiny by construction (hosts over the threshold);
-    * `broadcast` keeps the split shuffle-free on the frontier side. */
   def scheduleFlagged(frontier: DataFrame, cfg: CrawlConfig,
       megaHostsDf: DataFrame): DataFrame = {
     val mega = broadcast(megaHostsDf.select(col("host")))
     // using-column semi/anti joins move the join key first; the trailing
-    // projection restores the frontier's column order so both overloads
-    // emit the identical schema
+    // projection restores the frontier's column order
     scheduleSplit(
       frontier.join(mega, Seq("host"), "left_anti"),
       frontier.join(mega, Seq("host"), "left_semi"), cfg)
@@ -485,9 +468,9 @@ object FrontierRound {
       robotsCache: DataFrame,
       resolvedRedirects: DataFrame,
       cfg: CrawlConfig,
-      seenBlooms: Option[org.apache.spark.broadcast.Broadcast[SeenFilter.BloomProbe]] = None,
+      seenBlooms: Option[org.apache.spark.broadcast.Broadcast[FilterInventory.FileProbe[_]]] = None,
       megaHosts: Option[DataFrame] = None,
-      frontierProbe: Option[org.apache.spark.broadcast.Broadcast[SeenFilter.BloomProbe]] = None): RoundOutput = {
+      frontierProbe: Option[org.apache.spark.broadcast.Broadcast[FilterInventory.FileProbe[_]]] = None): RoundOutput = {
 
     // bloom-accelerated exact anti-join vs the seen set (when blooms cover
     // exactly `seen`): definitely-new urls skip the join; bloom-positives

@@ -67,8 +67,8 @@ final case class CrawlConfig(
     megaHostThreshold: Long = 100000L,
     /** Hash-bucket count for the partitioned seen table. */
     seenBuckets: Int = 64,
-    /** Pre-filter the seen anti-join with broadcast per-bucket Bloom filters
-      * (exactness preserved: bloom-positives take the exact join). */
+    /** Pre-filter the seen anti-join with the file-backed per-bucket Bloom
+      * filters (exactness preserved: bloom-positives take the exact join). */
     useBloomSeen: Boolean = true,
     /** Also export each round's results as JSONL (S5 parity path). */
     exportJsonl: Boolean = false,
@@ -93,9 +93,9 @@ final case class CrawlConfig(
     /** Accelerate the enqueue-time still-queued anti-join with per-bucket
       * CUCKOO filters mirroring the frontier (north_rule "Bloom/cuckoo" —
       * the deletable half: urls leave the frontier when scheduled, which a
-      * Bloom cannot express without a full per-round rebuild). Persistent
-      * loop only; exactness preserved (probe-positives take the exact join;
-      * saturated/missing bucket files probe all-true). See
+      * Bloom cannot express without a full per-round rebuild). Exactness
+      * preserved (probe-positives take the exact join; saturated/missing
+      * bucket files probe all-true). See
       * [[graft.crawl.FrontierFilter]]. */
     useCuckooFrontier: Boolean = false,
     /** Auto-engage the cuckoo frontier gate when the driver-known frontier

@@ -705,10 +705,14 @@ object Queries {
       |FROM f WHERE frame_no % 2 = 0 ORDER BY media_id, frame_no""".stripMargin
 
   /** The flagship: a full depth-bounded crawl of the synthesized web
-    * (pages/robots/redirects fixtures), returning the ordered results table. */
+    * (pages/robots/redirects fixtures) through the crawl loop
+    * ([[CrawlJob.run]]) over a temporary state dir, returning the ordered
+    * results table. The output is materialized before the dir is deleted,
+    * so the query leaves no state behind. */
   def crawlE2E(s: SparkSession, dir: String): DataFrame = {
     val g = Synth.graph(42L, hosts = 3, pagesPerHost = 10)
     val (pages, robots, redirects) = Synth.toDfs(s, g)
+    val stateDir = java.nio.file.Files.createTempDirectory("crawl-e2e").toString
     // blooms off: at 30 urls the per-round bloom build jobs cost more than
     // they save (the bloom path is covered by SeenFilterSpec + CrawlE2ESpec).
     // Shuffle partitions scaled to the data for the loop's internal actions
@@ -720,56 +724,63 @@ object Queries {
     val prevConstr = s.conf.get("spark.sql.constraintPropagation.enabled")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     val prevExcl = s.conf.getOption("spark.sql.optimizer.excludedRules")
-    val results =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "1")
-        s.conf.set("spark.sql.codegen.wholeStage", "false")
-        s.conf.set("spark.sql.constraintPropagation.enabled", "false")
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        // ConvertToLocalRelation eagerly evaluates projections over the
-        // embedded fixture LocalRelations ON THE DRIVER during every
-        // optimizer pass (UDF canonicalization included) — measured ~1.1 s
-        // of rule time per flagship run for zero plan benefit here, since
-        // the fixtures are checkpointed to RDD leaves right away anyway.
-        // Semantics are unaffected (optimizer rules are semantics-
-        // preserving; exclusion only skips the fold).
-        s.conf.set("spark.sql.optimizer.excludedRules",
-          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-        // shuffle.partitions=1: a 30-row loop wants exactly one task per
-        // shuffle stage, statically. AQE OFF: with the round folded into
-        // ONE action (results ∪ frontier ∪ newSeen tagged-union checkpoint,
-        // r5), AQE's per-exchange stage-materialization jobs are the
-        // dominant remaining driver cost on a high-dispatch-latency host —
-        // E2EProbe interleaved A/B (4 reps, min/median): parts=1+AQE
-        // 9.7/9.9 s vs parts=1 no-AQE 7.3/7.3 s, parts=4 no-AQE 7.1/7.5 s.
-        // parts=1 no-AQE is chosen for the best median (most stable).
-        CrawlJob.runInMemory(s, g.seeds, pages, robots, redirects,
-          CrawlConfig(maxDepth = 3, hostQuotaPerRound = 4, maxRounds = 12,
-            useBloomSeen = false))
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
-        s.conf.set("spark.sql.constraintPropagation.enabled", prevConstr)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-        prevExcl match {
-          case Some(v) => s.conf.set("spark.sql.optimizer.excludedRules", v)
-          case None => s.conf.unset("spark.sql.optimizer.excludedRules")
+    try {
+      val results =
+        try {
+          s.conf.set("spark.sql.shuffle.partitions", "1")
+          s.conf.set("spark.sql.codegen.wholeStage", "false")
+          s.conf.set("spark.sql.constraintPropagation.enabled", "false")
+          s.conf.set("spark.sql.adaptive.enabled", "false")
+          // ConvertToLocalRelation eagerly evaluates projections over the
+          // embedded fixture LocalRelations ON THE DRIVER during every
+          // optimizer pass (UDF canonicalization included) — measured ~1.1 s
+          // of rule time per flagship run for zero plan benefit on a 30-row
+          // fixture. Semantics are unaffected (optimizer rules are
+          // semantics-preserving; exclusion only skips the fold).
+          s.conf.set("spark.sql.optimizer.excludedRules",
+            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+          // shuffle.partitions=1: a 30-row loop wants exactly one task per
+          // shuffle stage, statically. AQE OFF: with the round folded into
+          // ONE action (results ∪ frontier ∪ newSeen tagged-union
+          // checkpoint, r5), AQE's per-exchange stage-materialization jobs
+          // are the dominant remaining driver cost on a high-dispatch-latency
+          // host — an interleaved A/B of this fixture's crawl (4 reps,
+          // min/median, taken on the checkpoint-only loop this query ran
+          // before): parts=1+AQE 9.7/9.9 s vs parts=1 no-AQE 7.3/7.3 s,
+          // parts=4 no-AQE 7.1/7.5 s. parts=1 no-AQE is chosen for the best
+          // median (most stable).
+          CrawlJob.run(s, g.seeds, pages, robots, redirects,
+            CrawlConfig(maxDepth = 3, hostQuotaPerRound = 4, maxRounds = 12,
+              useBloomSeen = false), stateDir).results
+        } finally {
+          s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          s.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
+          s.conf.set("spark.sql.constraintPropagation.enabled", prevConstr)
+          s.conf.set("spark.sql.adaptive.enabled", prevAqe)
+          prevExcl match {
+            case Some(v) => s.conf.set("spark.sql.optimizer.excludedRules", v)
+            case None => s.conf.unset("spark.sql.optimizer.excludedRules")
+          }
         }
-      }
-    // driver-output rule: every column SCALAR — the driver harness
-    // canonicalizes with a pandas sort that cannot hash array/map/binary
-    // cells (the r2 q_crawl_e2e crash), so the typed `redirects` chain and
-    // `headers` map are serialized to JSON strings here and only here
-    // (ResultRow/parquet keep the typed columns; `priority` stays dropped)
-    val ordered = CrawlJob.orderedResults(results)
-    ordered
-      .select(col("schedule_rank"), col("round"), col("url"), col("host"),
-        col("final_url"), col("http_code"), col("status_label"),
-        col("crawl_status"), col("depth"), col("n_redirects"),
-        to_json(col("redirects")).as("redirects"),
-        to_json(col("headers")).as("headers"),
-        col("n_links"), col("text"),
-        col("fetch_start_ms"), col("fetch_end_ms"))
+      // driver-output rule: every column SCALAR — the driver harness
+      // canonicalizes with a pandas sort that cannot hash array/map/binary
+      // cells (the r2 q_crawl_e2e crash), so the typed `redirects` chain and
+      // `headers` map are serialized to JSON strings here and only here
+      // (ResultRow/parquet keep the typed columns; `priority` stays
+      // dropped). Checkpointed eagerly: the rows must outlive the state dir.
+      CrawlJob.orderedResults(results)
+        .select(col("schedule_rank"), col("round"), col("url"), col("host"),
+          col("final_url"), col("http_code"), col("status_label"),
+          col("crawl_status"), col("depth"), col("n_redirects"),
+          to_json(col("redirects")).as("redirects"),
+          to_json(col("headers")).as("headers"),
+          col("n_links"), col("text"),
+          col("fetch_start_ms"), col("fetch_end_ms"))
+        .localCheckpoint(true)
+    } finally {
+      val root = new org.apache.hadoop.fs.Path(stateDir)
+      root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
+    }
   }
 
   /** ONE assembly of the full corpus as

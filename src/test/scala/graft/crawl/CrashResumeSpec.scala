@@ -68,7 +68,8 @@ object CrashFs {
   * each table, each filter write and inventory, the commit manifest, each
   * compaction and GC step — and lost filter files between rounds. After
   * every one, a resume must equal the uninterrupted run: rows, the
-  * `orderedResults` order, the final seen set and the JSONL export. */
+  * `orderedResults` order, the final seen set, the JSONL export and the
+  * metrics table. */
 class CrashResumeSpec extends AnyFunSuite {
   private lazy val spark = {
     val s = SparkTestBase.spark
@@ -99,7 +100,8 @@ class CrashResumeSpec extends AnyFunSuite {
       strings(CrawlJob.orderedResults(job.results).orderBy("schedule_rank")
         .select(col("schedule_rank"), col("url"))),
       strings(io.readSeen(job.rounds - 1).get.select("url")).sorted,
-      strings(spark.read.text(s"crashfs://$root/results_jsonl")).sorted)
+      strings(spark.read.text(s"crashfs://$root/results_jsonl")).sorted,
+      strings(job.metrics).sorted)
   }
 
   private lazy val reference = {
@@ -164,9 +166,10 @@ class CrashResumeSpec extends AnyFunSuite {
   crashAt("seen compaction", "create", "seen_compacted/upto=1/")
   crashAt("the folded seen slice GC", "delete", "seen/round=1")
   crashAt("the old seen snapshot GC", "delete", "seen_compacted/upto=0")
-  // metrics compaction runs this same compactAppendTable, on its own table
   crashAt("results compaction", "create", "results_compacted/range=1-1/")
   crashAt("the folded results GC", "delete", "results/round=1")
+  crashAt("metrics compaction", "create", "metrics_compacted/range=1-1/")
+  crashAt("the folded metrics GC", "delete", "metrics/round=1")
   crashAt("the frontier GC", "delete", "frontier/round=0")
   crashAt("the bloom GC", "delete", "blooms/round=0/")
   crashAt("the cuckoo GC", "delete", "cuckoo/round=0/")
@@ -188,5 +191,5 @@ class CrashResumeSpec extends AnyFunSuite {
 
 object CrashResumeSpec {
   final case class Outcome(rows: Seq[String], order: Seq[String], seen: Seq[String],
-      jsonl: Seq[String])
+      jsonl: Seq[String], metrics: Seq[String])
 }

@@ -97,8 +97,8 @@ class CrawlE2ESpec extends AnyFunSuite {
   test("larger graph with all status classes exercised (5 hosts)") {
     val g = Synth.graph(seed = 7L, hosts = 5, pagesPerHost = 15)
     val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 2)
-    val (results, sim) = runBothInMemory(g, cfg)
-    val sRows = sparkRows(results)
+    val (job, sim, _) = runBoth(g, cfg, "large")
+    val sRows = sparkRows(job.results)
     val oRows = simRows(sim.results)
     assert(sRows == oRows)
     // every status class appears (fixture designed to exercise them)
@@ -114,8 +114,8 @@ class CrawlE2ESpec extends AnyFunSuite {
   test("redirect chains, status labels, and the cloudfront download branch") {
     val g = Synth.graph(seed = 7L, hosts = 5, pagesPerHost = 15)
     val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 2)
-    val (results, sim) = runBothInMemory(g, cfg)
-    val sRows = sparkRows(results)
+    val (job, sim, _) = runBoth(g, cfg, "redirects")
+    val sRows = sparkRows(job.results)
     assert(sRows == simRows(sim.results)) // chains + labels differentially pinned
 
     // R1: a multi-hop chain is materialized per hop with statuses
@@ -172,15 +172,6 @@ class CrawlE2ESpec extends AnyFunSuite {
     }
   }
 
-  /** Checkpoint-free differential run for pure output-parity tests (the
-    * resume/seen tests above still cover the TableIO path). */
-  private def runBothInMemory(g: Synth.Graph, cfg: CrawlConfig) = {
-    val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val results = CrawlJob.runInMemory(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg)
-    val sim = SimCrawler.run(g.pages, g.robots, g.redirects, g.seeds, cfg)
-    (results, sim)
-  }
-
   test("differential fuzz: full row parity across fresh seeds and config shapes") {
     val cases = Seq(
       (101L, 3, 9, CrawlConfig(maxDepth = 2, hostQuotaPerRound = 3, maxRounds = 10, useBloomSeen = false)),
@@ -197,8 +188,8 @@ class CrawlE2ESpec extends AnyFunSuite {
       (808L, 6, 9, CrawlConfig(maxDepth = 3, hostQuotaPerRound = 3, maxRounds = 10, respectRobots = false, useBloomSeen = false)))
     cases.foreach { case (seed, hosts, per, cfg) =>
       val g = Synth.graph(seed, hosts, per)
-      val (results, sim) = runBothInMemory(g, cfg)
-      val sRows = sparkRows(results)
+      val (job, sim, _) = runBoth(g, cfg, s"fuzz-$seed")
+      val sRows = sparkRows(job.results)
       assert(sRows == simRows(sim.results), s"seed=$seed hosts=$hosts per=$per")
       // the off-default configs must actually EXERCISE their target path —
       // parity alone passes trivially if the fixture never reaches it
@@ -224,7 +215,7 @@ class CrawlE2ESpec extends AnyFunSuite {
   test("robots compliance: no fetch from a disallow_all host; rules enforced") {
     val g = Synth.graph(seed = 11L, hosts = 6, pagesPerHost = 10)
     val cfg = CrawlConfig(maxDepth = 3, hostQuotaPerRound = 4)
-    val (results, _) = runBothInMemory(g, cfg)
+    val results = runBoth(g, cfg, "robots")._1.results
     // host1.test has robots status 403 → disallow_all
     val host1Fetches = results.filter(
       col("crawl_status") === CrawlStatus.Fetched &&
@@ -244,7 +235,8 @@ class CrawlE2ESpec extends AnyFunSuite {
   test("depth gate: children at maxDepth yield status rows, never fetches") {
     val g = Synth.graph(seed = 42L, hosts = 2, pagesPerHost = 12)
     val cfg = CrawlConfig(maxDepth = 2, hostQuotaPerRound = 8)
-    val (results, sim) = runBothInMemory(g, cfg)
+    val (job, sim, _) = runBoth(g, cfg, "depth")
+    val results = job.results
     assert(sparkRows(results) == simRows(sim.results))
     val overDepth = results.filter(col("depth") >= 2)
     assert(overDepth.filter(col("crawl_status") =!= CrawlStatus.MaximumCrawlDepthReached).count() == 0)
@@ -454,9 +446,9 @@ class CrawlE2ESpec extends AnyFunSuite {
     // (page_loader_service.rs:142) only lets depth-0 pages enqueue
     val g = Synth.graph(seed = 42L, hosts = 2, pagesPerHost = 8)
     val cfg = CrawlConfig(maxDepth = 0, hostQuotaPerRound = 8)
-    val (results, sim) = runBothInMemory(g, cfg)
-    assert(sparkRows(results) == simRows(sim.results))
-    assert(results.agg(max("depth")).collect()(0).getInt(0) <= 1)
+    val (job, sim, _) = runBoth(g, cfg, "depth0")
+    assert(sparkRows(job.results) == simRows(sim.results))
+    assert(job.results.agg(max("depth")).collect()(0).getInt(0) <= 1)
   }
 
   test("differential parity THROUGH the compaction cadence (persistent, seenCompactEvery=2)") {
@@ -479,7 +471,7 @@ class CrawlE2ESpec extends AnyFunSuite {
     assert(sparkSeen == sim.seen)
   }
 
-  test("zero seeds: both runners return an empty, correctly-shaped results table") {
+  test("zero seeds: empty results and metrics tables, shaped like a populated run") {
     val g = Synth.graph(seed = 42L, hosts = 2, pagesPerHost = 8)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
     val cfg = CrawlConfig(maxDepth = 2, hostQuotaPerRound = 3)
@@ -487,22 +479,18 @@ class CrawlE2ESpec extends AnyFunSuite {
     val job = CrawlJob.run(spark, Seq.empty, pagesDf, robotsDf, redirectsDf, cfg, dir)
     assert(job.rounds == 0)
     assert(job.results.count() == 0L && job.metrics.count() == 0L)
-    val inMem = CrawlJob.runInMemory(spark, Seq.empty, pagesDf, robotsDf, redirectsDf, cfg)
-    assert(inMem.count() == 0L)
-    // schema parity with a real run (names AND order), so downstream code
-    // written against a populated crawl works unchanged on an empty one
-    val populated = CrawlJob.runInMemory(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
-      CrawlConfig(maxDepth = 1, hostQuotaPerRound = 1))
-    assert(inMem.columns.toSeq == populated.columns.toSeq)
-    assert(job.results.columns.toSeq == populated.columns.toSeq)
-    // metrics shape parity too: the populated persistent path drops `round`
-    // at write and re-materializes it LAST from the partition dir — the
-    // zero-round branch must emit the same order (ADVICE r4)
-    val popDir = java.nio.file.Files.createTempDirectory("crawl-popmet").toString
+    // schema parity with a real run (names, order and types), so downstream
+    // code written against a populated crawl works unchanged on an empty
+    // one. The populated path drops `round` at write and re-materializes it
+    // LAST from the partition dir — the zero-round branch must emit the same
+    // order (ADVICE r4)
+    val popDir = java.nio.file.Files.createTempDirectory("crawl-pop").toString
     val popJob = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       CrawlConfig(maxDepth = 1, hostQuotaPerRound = 1, maxRounds = 1), popDir)
-    assert(popJob.metrics.count() > 0)
-    assert(job.metrics.columns.toSeq == popJob.metrics.columns.toSeq)
-    assert(job.metrics.schema.map(_.dataType) == popJob.metrics.schema.map(_.dataType))
+    assert(popJob.results.count() > 0 && popJob.metrics.count() > 0)
+    for ((empty, populated) <- Seq(job.results -> popJob.results, job.metrics -> popJob.metrics)) {
+      assert(empty.columns.toSeq == populated.columns.toSeq)
+      assert(empty.schema.map(_.dataType.catalogString) == populated.schema.map(_.dataType.catalogString))
+    }
   }
 }

@@ -196,27 +196,40 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(CuckooFilter.create(cap).numBuckets == CuckooFilter.create(5000L).numBuckets)
   }
 
+  /** A gated crawl against the independent sequential oracle
+    * ([[SimCrawler]]): rows, round count and, with `seenDir`, the final
+    * seen set. The gate only short-circuits the exact join, so the oracle
+    * stands for the same crawl with the gate off. */
+  private def assertMatchesSim(g: Synth.Graph, cfg: CrawlConfig, job: CrawlJob.JobResult,
+      seenDir: Option[String] = None): Unit = {
+    val sim = SimCrawler.run(g.pages, g.robots, g.redirects, g.seeds, cfg)
+    val rows = job.results
+      .select("round", "url", "final_url", "http_code", "crawl_status", "depth", "n_links")
+      .collect().map(r => (r.getInt(0), r.getString(1), Option(r.getString(2)), r.getInt(3),
+        r.getString(4), r.getInt(5), r.getInt(6))).sorted.toSeq
+    val simRows = sim.results.map(r => (r.round, r.url, r.finalUrl, r.httpCode, r.status,
+      r.depth, r.nLinks)).sorted
+    assert(job.rounds == sim.rounds)
+    assert(rows == simRows)
+    seenDir.foreach { dir =>
+      val seen = new graft.io.TableIO(spark, dir).readSeen(job.rounds - 1).get
+        .select("url").as[String].collect().toSet
+      assert(seen == sim.seen)
+    }
+  }
+
   test("auto-enable gate: engages above the frontier threshold, disengages below, rows identical") {
     val g = Synth.graph(seed = 55L, hosts = 3, pagesPerHost = 14)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    def runWith(auto: Long) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"ck-auto-$auto").toString
-      val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
-        cuckooAutoEnableAt = auto)
-      val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
-      val rows = job.results
-        .select("round", "url", "final_url", "http_code", "crawl_status", "depth", "n_links")
-        .collect().map(_.toString).sorted.toSeq
-      (rows, job.rounds, dir)
-    }
+    val dir = java.nio.file.Files.createTempDirectory("ck-auto").toString
     // threshold 4: off for the seed rounds (frontier = 3), on as the BFS
     // widens, off again as the frontier collapses at the end
-    val (rAuto, nAuto, dirAuto) = runWith(4L)
-    val (rOff, nOff, _) = runWith(0L)
-    assert(nAuto == nOff)
-    assert(rAuto == rOff)
-    val io = new graft.io.TableIO(spark, dirAuto)
-    val states = (0 until nAuto).map(r => FilterInventory.exists(io.cuckooDir(r),
+    val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
+      cuckooAutoEnableAt = 4L)
+    val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
+    assertMatchesSim(g, cfg, job)
+    val io = new graft.io.TableIO(spark, dir)
+    val states = (0 until job.rounds).map(r => FilterInventory.exists(io.cuckooDir(r),
       spark.sparkContext.hadoopConfiguration))
     assert(states.exists(identity), "the gate must have engaged mid-crawl")
     assert(!states.head || !states.last,
@@ -226,51 +239,34 @@ class CuckooFilterSpec extends AnyFunSuite {
   test("persistent crawl with the cuckoo frontier gate is row-identical to without") {
     val g = Synth.graph(seed = 99L, hosts = 3, pagesPerHost = 14)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    def runWith(cuckoo: Boolean) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"crawl-ck-$cuckoo").toString
-      val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
-        useCuckooFrontier = cuckoo,
-        // tiny per-bucket capacity on the ON side so saturation/dead-bucket
-        // handling runs INSIDE the loop (the init full build and the
-        // per-round delta branch both execute here; the capacity-growth
-        // rebuild is pinned by its own test below)
-        cuckooExpectedPerBucket = if (cuckoo) 2L else 4096L)
-      val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
-      val rows = job.results
-        .select("round", "url", "final_url", "http_code", "crawl_status", "depth", "n_links")
-        .collect().map(_.toString).sorted.toSeq
-      val io = new graft.io.TableIO(spark, dir)
-      val seen = io.readSeen(job.rounds - 1).get.select("url")
-        .as[String].collect().sorted.toSeq
-      (rows, seen, job.rounds, dir)
-    }
-    val (rOn, sOn, nOn, dirOn) = runWith(true)
-    val (rOff, sOff, nOff, _) = runWith(false)
-    assert(nOn == nOff)
-    assert(rOn == rOff)
-    assert(sOn == sOff)
+    val dir = java.nio.file.Files.createTempDirectory("crawl-ck").toString
+    val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
+      useCuckooFrontier = true,
+      // tiny per-bucket capacity so saturation/dead-bucket handling runs
+      // INSIDE the loop (the init full build and the per-round delta branch
+      // both execute here; the capacity-growth rebuild is pinned by its own
+      // test below)
+      cuckooExpectedPerBucket = 2L)
+    val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
+    assertMatchesSim(g, cfg, job, seenDir = Some(dir))
     // the accelerator actually ran: filter state exists for the last rounds
-    val io = new graft.io.TableIO(spark, dirOn)
-    assert((0 until nOn).exists(r => FilterInventory.exists(io.cuckooDir(r),
+    val io = new graft.io.TableIO(spark, dir)
+    assert((0 until job.rounds).exists(r => FilterInventory.exists(io.cuckooDir(r),
       spark.sparkContext.hadoopConfiguration)), "no cuckoo state written")
   }
 
   test("capacity-growth rebuild triggers mid-crawl and keeps row identity") {
     val g = Synth.graph(seed = 77L, hosts = 3, pagesPerHost = 16)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    def runWith(cuckoo: Boolean) = {
-      val dir = java.nio.file.Files.createTempDirectory(s"ck-grow-$cuckoo").toString
-      // ONE bucket + capacity 1: cap = sizedFor(1, frontierCount) crosses a
-      // doubling boundary as soon as the frontier widens past the seeds, so
-      // the cap > cuckooCap rebuild branch runs mid-crawl (and again as the
-      // frontier keeps growing)
-      val cfg = CrawlConfig(maxDepth = 5, hostQuotaPerRound = 2, runId = "t",
-        seenBuckets = 1, useCuckooFrontier = cuckoo, cuckooExpectedPerBucket = 1L)
-      val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
-      job.results.select("round", "url", "http_code", "crawl_status", "depth")
-        .collect().map(_.toString).sorted.toSeq
-    }
-    assert(runWith(true) == runWith(false))
+    val dir = java.nio.file.Files.createTempDirectory("ck-grow").toString
+    // ONE bucket + capacity 1: cap = sizedFor(1, frontierCount) crosses a
+    // doubling boundary as soon as the frontier widens past the seeds, so
+    // the cap > cuckooCap rebuild branch runs mid-crawl (and again as the
+    // frontier keeps growing)
+    val cfg = CrawlConfig(maxDepth = 5, hostQuotaPerRound = 2, runId = "t",
+      seenBuckets = 1, useCuckooFrontier = true, cuckooExpectedPerBucket = 1L)
+    assertMatchesSim(g, cfg,
+      CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir))
   }
 
   test("resume repairs missing cuckoo files from the frontier and stays exact") {
@@ -278,8 +274,6 @@ class CuckooFilterSpec extends AnyFunSuite {
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
     val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 2, runId = "t",
       useCuckooFrontier = true)
-    val fullDir = java.nio.file.Files.createTempDirectory("ck-full").toString
-    val full = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, fullDir)
     val partDir = java.nio.file.Files.createTempDirectory("ck-part").toString
     CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg.copy(maxRounds = 2), partDir)
@@ -288,9 +282,6 @@ class CuckooFilterSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(s"$partDir/cuckoo"), true)
     val resumed = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg, partDir, resume = true)
-    def rows(r: org.apache.spark.sql.DataFrame) = r
-      .select("round", "url", "http_code", "crawl_status", "depth")
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows(resumed.results) == rows(full.results))
+    assertMatchesSim(g, cfg, resumed)
   }
 }

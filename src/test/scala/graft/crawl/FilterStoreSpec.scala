@@ -49,6 +49,27 @@ class FilterStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("a stale .dead marker from a crashed attempt never kills a bucket the redo writes live") {
+    val base = java.nio.file.Files.createTempDirectory("store-stale").toString
+    SeenFilter.writeMergedBlooms((0 until 800).map(i => s"u$i").toDF("url"), 8, 512, None,
+      s"$base/round=0")
+    val slice = bucketed((1000 until 1100).map(i => s"u$i"), 8)
+    val victim = slice.head._2
+    // a crashed attempt at round 1 left a dead marker for the victim and no
+    // inventory; the redo of round 1 touches the victim and writes it live
+    val fs = new HPath(base).getFileSystem(conf)
+    fs.create(new HPath(s"$base/round=1/bucket=$victim.dead"), true).close()
+    SeenFilter.writeMergedBlooms(slice.take(4).map(_._1).toDF("url"), 8, 512,
+      Some(s"$base/round=0"), s"$base/round=1")
+    assert(FilterInventory.read(s"$base/round=1", conf).get.contains(victim))
+    // round 2 merges into round 1: the victim must stay live, not go dead
+    SeenFilter.writeMergedBlooms(slice.slice(4, 8).map(_._1).toDF("url"), 8, 512,
+      Some(s"$base/round=1"), s"$base/round=2")
+    assert(FilterInventory.read(s"$base/round=2", conf).get.contains(victim),
+      s"bucket $victim went dead in round 2")
+    assert(!fs.exists(new HPath(s"$base/round=2/bucket=$victim.dead")))
+  }
+
   test("a relative state dir: GC keeps every file the live inventories reference, resume is exact") {
     val g = SimCrawler.deepCrawlWeb(2)
     val (pagesDf, robotsDf, redirectsDf) = graft.synth.Synth.toDfs(spark, g)

@@ -8,14 +8,13 @@ import graft.model.CrawlConfig
 
 /** Pins for the politeness scheduler's mega-host split (A1/A3).
   *
-  * The salted two-phase path must yield the SAME exact per-host top-k no
-  * matter how the mega set is supplied: as a host-list literal (test
-  * overload, `isin`), as a (host) DataFrame (production overload, broadcast
-  * semi/anti split — the shape `CrawlJob.run` builds from
-  * [[FrontierRound.findMegaHostsDf]]), or not at all (single window).
-  * Mega-ness is a pure performance heuristic, so all three must agree with
-  * a plain per-host `row_number` oracle row-for-row, including the
-  * `host_slot` calendar positions. */
+  * The salted two-phase path must yield the SAME exact per-host top-k as a
+  * plain per-host `row_number` window, whichever hosts the (host) mega
+  * DataFrame names: a hand-picked set, the set `CrawlJob.run` builds with
+  * [[FrontierRound.findMegaHostsDf]], or a set with duplicate hosts.
+  * Mega-ness is a pure performance heuristic, so every split must agree
+  * with the plain-window oracle row-for-row, including the `host_slot`
+  * calendar positions. */
 class SchedulerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -42,25 +41,26 @@ class SchedulerSpec extends AnyFunSuite {
         if (r.isNullAt(2)) None else Some(r.getInt(2))))
       .toSet
 
-  test("DataFrame overload == Seq overload == plain-window oracle (rows, flags, slots)") {
-    val f = frontier
-    val oracle = f.withColumn("__rn", row_number().over(
+  private def oracle(f: org.apache.spark.sql.DataFrame) =
+    f.withColumn("__rn", row_number().over(
         Window.partitionBy(col("host"))
           .orderBy(col("depth"), col("priority"), col("url"))))
       .withColumn("is_scheduled", col("__rn") <= cfg.hostQuotaPerRound)
       .withColumn("host_slot",
         when(col("__rn") <= cfg.hostQuotaPerRound, col("__rn")))
       .drop("__rn")
-    val viaSeq = FrontierRound.scheduleFlagged(f, cfg, megaHosts = Seq("mega.test"))
+
+  test("salted split == plain-window oracle (rows, flags, slots)") {
+    val f = frontier
+    val want = oracle(f)
     val viaDf = FrontierRound.scheduleFlagged(f, cfg,
       megaHostsDf = Seq("mega.test").toDF("host"))
     val found = FrontierRound.scheduleFlagged(f, cfg,
       megaHostsDf = FrontierRound.findMegaHostsDf(f, cfg.megaHostThreshold))
-    assert(key(oracle) == key(viaSeq))
-    assert(key(oracle) == key(viaDf))
-    assert(key(oracle) == key(found))
-    // schema parity between the overloads (column names AND order)
-    assert(viaSeq.columns.toSeq == viaDf.columns.toSeq)
+    assert(key(want) == key(viaDf))
+    assert(key(want) == key(found))
+    // schema parity with the oracle (column names AND order)
+    assert(viaDf.columns.toSeq == want.columns.toSeq)
   }
 
   test("duplicate hosts in the mega DataFrame never duplicate frontier rows") {
@@ -68,7 +68,7 @@ class SchedulerSpec extends AnyFunSuite {
     val dupMega = Seq("mega.test", "mega.test", "mega.test").toDF("host")
     val out = FrontierRound.scheduleFlagged(f, cfg, megaHostsDf = dupMega)
     assert(out.count() == f.count())
-    assert(key(out) == key(FrontierRound.scheduleFlagged(f, cfg, Seq("mega.test"))))
+    assert(key(out) == key(oracle(f)))
   }
 
   test("findMegaHostsDf finds exactly the over-threshold hosts") {

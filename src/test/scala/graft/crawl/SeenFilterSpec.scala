@@ -8,12 +8,20 @@ class SeenFilterSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString + "/round=0"
+
+  private def bucketed(urls: Seq[String], buckets: Int): Array[(Long, Long)] =
+    urls.toDF("url").select(SeenFilter.bucketOf(col("url"), buckets).as("bucket"),
+      xxhash64(col("url")).as("h")).as[(Long, Long)].collect()
+
   test("bloom anti-join is exactly the plain anti-join (no false negatives)") {
+    val dir = tmpDir("blooms-aj")
     val seen = (0 until 3000).map(i => s"https://h${i % 7}.test/p/$i").toDF("url")
     val candidates = (1500 until 4500).map(i => s"https://h${i % 7}.test/p/$i")
       .toDF("url").withColumn("depth", lit(1))
-    val blooms = SeenFilter.broadcastBlooms(spark, 16,
-      SeenFilter.buildBlooms(seen, 16, 1024))
+    SeenFilter.writeMergedBlooms(seen, 16, 1024, None, dir)
+    val blooms = SeenFilter.broadcastFileBlooms(spark, 16, dir)
     val withBloom = SeenFilter.bloomAntiJoin(candidates, seen, blooms)
       .select("url").as[String].collect().sorted
     val plain = candidates.join(seen, Seq("url"), "left_anti")
@@ -24,16 +32,16 @@ class SeenFilterSpec extends AnyFunSuite {
   }
 
   test("merge unions filters: everything inserted in either is might-contained") {
+    val base = java.nio.file.Files.createTempDirectory("blooms-merge").toString
     val a = (0 until 500).map(i => s"u$i").toDF("url")
     val b = (400 until 900).map(i => s"u$i").toDF("url")
-    val merged = SeenFilter.merge(
-      SeenFilter.buildBlooms(a, 4, 512), SeenFilter.buildBlooms(b, 4, 512))
-    val blooms = new SeenFilter.SeenBlooms(4, merged)
-    val probe = (0 until 900).map(i => s"u$i").toDF("url")
-      .select(SeenFilter.bucketOf(col("url"), 4).as("bucket"),
-        xxhash64(col("url")).as("h"))
-      .as[(Long, Long)].collect()
-    probe.foreach { case (bkt, h) => assert(blooms.mightContain(bkt.toInt, h)) }
+    SeenFilter.writeMergedBlooms(a, 4, 512, None, s"$base/round=0")
+    SeenFilter.writeMergedBlooms(b, 4, 512, Some(s"$base/round=0"), s"$base/round=1")
+    val blooms = SeenFilter.broadcastFileBlooms(spark, 4, s"$base/round=1")
+    bucketed((0 until 900).map(i => s"u$i"), 4).foreach { case (bkt, h) =>
+      assert(blooms.value.mightContain(bkt.toInt, h))
+    }
+    blooms.destroy()
   }
 
   test("dynamic sizing keeps fpp bounded as the seen set grows 100×") {
@@ -45,27 +53,31 @@ class SeenFilterSpec extends AnyFunSuite {
     // sizedFor-derived width the fpp stays at the design level
     val base = 256L
     val urls = (0 until 25600).map(i => s"https://h.test/p/$i").toDF("url")
-    val fixed = new SeenFilter.SeenBlooms(1, SeenFilter.buildBlooms(urls, 1, base))
-    val grown = new SeenFilter.SeenBlooms(1,
-      SeenFilter.buildBlooms(urls, 1, SeenFilter.sizedFor(base, 25600)))
-    val probes = (0 until 5000).map(i => s"https://other.test/x/$i").toDF("url")
-      .select(SeenFilter.bucketOf(col("url"), 1).as("b"), xxhash64(col("url")).as("h"))
-      .as[(Long, Long)].collect()
-    def fpp(b: SeenFilter.SeenBlooms): Double =
-      probes.count { case (bk, h) => b.mightContain(bk.toInt, h) }.toDouble / probes.length
+    def built(cap: Long) = {
+      val dir = tmpDir(s"blooms-fpp-$cap")
+      SeenFilter.writeMergedBlooms(urls, 1, cap, None, dir)
+      SeenFilter.broadcastFileBlooms(spark, 1, dir)
+    }
+    val fixed = built(base)
+    val grown = built(SeenFilter.sizedFor(base, 25600))
+    val probes = bucketed((0 until 5000).map(i => s"https://other.test/x/$i"), 1)
+    def fpp(b: org.apache.spark.broadcast.Broadcast[FilterInventory.FileProbe[_]]): Double =
+      probes.count { case (bk, h) => b.value.mightContain(bk.toInt, h) }.toDouble / probes.length
     assert(fpp(fixed) > 0.5, "fixed-width filter must be visibly saturated at 100× load")
     assert(fpp(grown) < 0.05, "sizedFor-width filter must hold the design fpp")
+    fixed.destroy(); grown.destroy()
   }
 
   test("empty blooms pass everything straight through") {
+    val dir = tmpDir("blooms-empty")
+    val none = spark.emptyDataset[String].toDF("url")
+    assert(SeenFilter.writeMergedBlooms(none, 4, 512, None, dir) == 0)
     val cand = Seq("a", "b").toDF("url")
-    val blooms = SeenFilter.broadcastBlooms(spark, 4, Map.empty)
-    val out = SeenFilter.bloomAntiJoin(cand, spark.emptyDataset[String].toDF("url"), blooms)
+    val blooms = SeenFilter.broadcastFileBlooms(spark, 4, dir)
+    val out = SeenFilter.bloomAntiJoin(cand, none, blooms)
     assert(out.count() == 2)
     blooms.destroy()
   }
-
-  // ---------- file-backed probe (the persistent-loop scale path) ----------
 
   test("file-backed bloom anti-join is exactly the plain anti-join") {
     val dir = java.nio.file.Files.createTempDirectory("blooms-fb").toString + "/round=0"

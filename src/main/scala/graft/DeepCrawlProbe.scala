@@ -76,20 +76,15 @@ object DeepCrawlProbe {
     // dir listings must be bounded by the compaction cadence (tail rounds
     // since the last sweep + committed snapshots), never by total rounds
     val dirs = Map(
-      "seen_rounds" -> countEntries(s"$stateDir/seen"),
+      "rounds" -> countEntries(s"$stateDir/rounds"),
       "seen_snapshots" -> countEntries(s"$stateDir/seen_compacted"),
-      "results_rounds" -> countEntries(s"$stateDir/results"),
       "results_ranges" -> countEntries(s"$stateDir/results_compacted"),
-      "metrics_rounds" -> countEntries(s"$stateDir/metrics"),
-      "metrics_ranges" -> countEntries(s"$stateDir/metrics_compacted"),
-      "frontier_rounds" -> countEntries(s"$stateDir/frontier"),
       "bloom_rounds" -> countEntries(s"$stateDir/blooms"),
       "cuckoo_rounds" -> countEntries(s"$stateDir/cuckoo"),
       "manifests" -> countEntries(s"$stateDir/manifest"))
     val nSweeps = chainLen / compactEvery
-    Seq("seen_rounds", "results_rounds", "metrics_rounds", "frontier_rounds").foreach { k =>
-      require(dirs(k) <= compactEvery + 1, s"$k=${dirs(k)} not bounded by cadence $compactEvery")
-    }
+    require(dirs("rounds") <= compactEvery + 1,
+      s"rounds=${dirs("rounds")} not bounded by cadence $compactEvery")
     // filter tables are inventory-manifested (r6): untouched buckets are
     // REFERENCED across round dirs instead of copied, so a dir survives GC
     // while any bucket still resolves into it — bounded by the bucket count
@@ -99,12 +94,13 @@ object DeepCrawlProbe {
         s"$k=${dirs(k)} not bounded by buckets ${cfg.seenBuckets} + cadence $compactEvery")
     }
     require(dirs("seen_snapshots") == 1, s"seen keeps ONE snapshot, got ${dirs("seen_snapshots")}")
-    // ×2: the local Hadoop FS pairs every round=N.json with a .crc sidecar
+    // ×2: the local Hadoop FS pairs every round=N.json (and the one
+    // metrics_below=K.jsonl fold) with a .crc sidecar
     require(dirs("manifests") <= 2 * (compactEvery + 1),
       s"manifests=${dirs("manifests")} not bounded by cadence $compactEvery")
-    Seq("results_ranges", "metrics_ranges").foreach { k =>
-      require(dirs(k) == nSweeps, s"$k=${dirs(k)}, expected one range per sweep = $nSweeps")
-    }
+    require(dirs("results_ranges") == nSweeps,
+      s"results_ranges=${dirs("results_ranges")}, expected one range per sweep = $nSweeps")
+    require(res.metrics.count() == res.rounds, "one metrics row per round, folded manifests included")
 
     // flatness: median of the last quarter of rounds vs the second quarter
     // (skips JIT warm-up). Medians dodge both the compaction-round spikes

@@ -8,8 +8,9 @@ import graft.model._
 
 /** The batch-iterative crawl driver (reference lifecycle: SURVEY.md §3.1 →
   * our §3.4 pipeline). Each round is one Dataset job; the driver loop is the
-  * only sequential control. State (frontier / seen / results / metrics) is
-  * checkpointed per round through [[TableIO]]; resume picks up from the last
+  * only sequential control. State (frontier / seen / results, plus the
+  * metrics in the manifest) is checkpointed per round through [[TableIO]],
+  * one write and one commit marker per round; resume picks up from the last
   * committed manifest and produces output identical to an uninterrupted run.
   * [[run]] is the one crawl loop: every caller, the embedded flagship query
   * included, runs it over a state dir.
@@ -60,8 +61,6 @@ object CrawlJob {
       cfg: CrawlConfig,
       stateDir: String,
       resume: Boolean = false): JobResult = {
-    import spark.implicits._
-
     val io = new TableIO(spark, stateDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val runId = resolveRunId(seeds, cfg)
@@ -102,7 +101,7 @@ object CrawlJob {
     if (last >= 0) {
       round = last + 1
       frontier = io.readFrontier(last)
-      seen = io.readSeen(last).map(_.select("url")).getOrElse(emptySeen(spark))
+      seen = io.readSeen(last).select("url")
       // the manifest carries the cumulative count — a resume must not pay a
       // full seen-table scan for a number the commit already knew (older
       // checkpoints without the field fall back to the one-time count)
@@ -171,16 +170,17 @@ object CrawlJob {
       val m = FrontierRound.materialize(out)
       out.release()
 
-      // persist first, commit manifest last (atomic) — exact-resume contract
-      val stamped = FrontierRound.stampTimings(m.results, round, cfg)
-        .withColumn("run_id", lit(runId))
-      io.writeResults(round, stamped)
-      if (cfg.exportJsonl)
+      // persist first, commit manifest last (atomic) — exact-resume
+      // contract. ONE write holds the round's results, next frontier and
+      // new seen slice; the JSONL export is its own write
+      io.writeRound(round, FrontierRound.stampTimings(m.state(cfg.seenBuckets), round, cfg)
+        .withColumn("run_id", when(col("kind") === "r", lit(runId))))
+      if (cfg.exportJsonl) {
+        val stamped = FrontierRound.stampTimings(m.results, round, cfg)
+          .withColumn("run_id", lit(runId))
         io.writeResultsJsonl(round, stamped,
           Some(FrontierRound.exportLinks(stamped, pages)))
-      io.writeSeen(round, m.newSeen
-        .withColumn("bucket", pmod(xxhash64(col("url")), lit(cfg.seenBuckets))))
-      io.writeFrontier(round, m.frontier)
+      }
 
       // the next round reads the written checkpoints (frontier here, seen
       // after compaction below): truncates lineage AND makes each round's
@@ -199,7 +199,7 @@ object CrawlJob {
           // load crossed capacity: rebuild ALL filters wider from the full
           // seen table (amortized by doubling; merge needs equal widths)
           bloomCap = cap
-          SeenFilter.writeMergedBlooms(io.readSeen(round).get.select("url"),
+          SeenFilter.writeMergedBlooms(io.readSeen(round).select("url"),
             cfg.seenBuckets, bloomCap, None, dir)
         } else {
           // incremental: this round's slice folded into the previous round's
@@ -239,9 +239,9 @@ object CrawlJob {
       blooms.foreach(_.unpersist(false))
       cuckoo.foreach(_.unpersist(false))
 
-      val metrics = m.metrics(round, seenTotal)
-      io.writeMetrics(round, Seq(metrics).toDF())
-      io.commitRound(round, RoundManifest.encode(metrics))
+      // the manifest carries the round's metrics: the metrics table is
+      // read from the manifests, never written
+      io.commitRound(round, RoundManifest.encode(m.metrics(round, seenTotal)))
       m.release()
 
       // periodic seen compaction — strictly AFTER the commit marker (only
@@ -249,21 +249,22 @@ object CrawlJob {
       // leave a resumable layout)
       if (cfg.seenCompactEvery > 0 && (round + 1) % cfg.seenCompactEvery == 0) {
         io.compactSeen(round)
-        // results/metrics are append-only: fold the tail rounds into one
-        // committed range dir (bounds the small-files listing the same way
-        // seen compaction does, without re-copying history)
+        // results are append-only: fold the tail rounds into one committed
+        // range dir (bounds the small-files listing the same way seen
+        // compaction does, without re-copying history)
         io.compactResults(round)
-        io.compactMetrics(round)
-        // frontier snapshots are superseded WHOLE each round (only the
-        // latest committed round is ever read back) — GC the history on the
-        // same cadence so the dir listing stays bounded too
-        io.gcRoundDirsBelow("frontier", round)
+        // what is left in older round dirs is their frontier snapshot,
+        // superseded WHOLE each round (only the latest committed round is
+        // ever read back) — GC them on the same cadence so the dir listing
+        // stays bounded too
+        io.gcRoundDirsBelow(round)
         // filter tables are inventory-manifested: keep exactly the files the
         // live round's inventories reference (none when a filter is off)
         io.gcFiltersBelow(round)
+        // manifests below fold their metrics into one file first
         io.gcManifestsBelow(round)
       }
-      seen = io.readSeen(round).map(_.select("url")).getOrElse(emptySeen(spark))
+      seen = io.readSeen(round).select("url")
 
       roundSecs += (System.nanoTime() - roundT0) / 1e9
       round += 1
@@ -272,34 +273,9 @@ object CrawlJob {
     FrontierRound.release(robotsCache)
     FrontierRound.release(resolved)
     // zero rounds executed AND nothing committed earlier (fresh run with an
-    // empty seed list): nothing was ever written, so the append-table reads
-    // would throw. Return the empty-but-correctly-shaped tables instead. A
-    // RESUME that finds no new work still lands in the readers branch
-    // (round = lastCommitted + 1 > 0).
-    if (round == 0) JobResult(0, emptyResults(spark), emptyMetrics(spark), Nil)
-    else JobResult(round, io.readResults(), io.readMetrics(), roundSecs.toSeq)
-  }
-
-  /** Empty results table in the exact shape a populated run yields: the
-    * [[ResultRow]] data columns with `round` moved LAST (the loop attaches
-    * `round` after the round tree as the parquet partition column, so it
-    * trails the data columns). */
-  private def emptyResults(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val base = spark.emptyDataset[ResultRow].toDF()
-    val dataCols = base.columns.filter(_ != "round").map(col)
-    base.select(dataCols.toIndexedSeq :+ col("round").cast("int").as("round"): _*)
-  }
-
-  /** Empty metrics table in the exact shape a populated run yields: like
-    * [[emptyResults]], `round` moves LAST as int (TableIO.writeMetrics drops
-    * the data column; readAppendTable re-materializes it from the partition
-    * dir, appended after the data columns). */
-  private def emptyMetrics(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val base = spark.emptyDataset[RoundMetrics].toDF()
-    val dataCols = base.columns.filter(_ != "round").map(col)
-    base.select(dataCols.toIndexedSeq :+ col("round").cast("int").as("round"): _*)
+    // empty seed list): the readers return the empty tables in the shape a
+    // populated run yields
+    JobResult(round, io.readResults(), io.readMetrics(), roundSecs.toSeq)
   }
 
   /** A static input as a checkpointed leaf. An embedded fixture (every

@@ -191,6 +191,12 @@ object FilterInventory {
 
   // ---------- the writer step ----------
 
+  /** The Hadoop conf every filter writer runs with, on the driver and in
+    * its tasks: the session's, with the engine's own local file system
+    * ([[graft.io.EngineFs]]), so no created file or dir forks a `chmod`. */
+  def writerConf(spark: SparkSession): SerializableHadoopConf =
+    new SerializableHadoopConf(graft.io.EngineFs.conf(spark.sparkContext.hadoopConfiguration))
+
   /** What a writer starts from: the previous round's live files and dead
     * buckets. */
   final case class Prev(live: Map[Int, String], dead: Set[Int])
@@ -233,12 +239,13 @@ object FilterInventory {
       conf: SerializableHadoopConf, rows: Iterator[Row])(
       apply: (Option[F], Row) => Option[F]): Iterator[(Int, Boolean)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
+    lazy val fs = new HPath(outDir).getFileSystem(conf.value)
     var cur = -1
     var filter: Option[F] = None
     var dead = false
     def flush(): Unit = if (cur >= 0) {
       val dst = if (dead) deadPath(outDir, cur) else filePath(outDir, cur, codec.suffix)
-      val os = dst.getFileSystem(conf.value).create(dst, true)
+      val os = fs.create(dst, true)
       try if (!dead) codec.write(filter.get, os) finally os.close()
       out += ((cur, dead))
     }

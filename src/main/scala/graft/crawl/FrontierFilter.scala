@@ -80,7 +80,7 @@ object FrontierFilter {
     * (ints), never filter bytes. Returns the touched-bucket count. */
   def writeFromUrls(urls: DataFrame, buckets: Int, expectedPerBucket: Long,
       outDir: String): Int = {
-    val conf = new SerializableHadoopConf(urls.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = FilterInventory.writerConf(urls.sparkSession)
     val prev = FilterInventory.begin(None, outDir, conf.value)
     val touched = byBucket(hashed(urls, buckets, 1)).rdd
       .mapPartitions(applyOps(expectedPerBucket, prev, outDir, conf)).collect()
@@ -102,7 +102,7 @@ object FrontierFilter {
     * scan, never a full-inventory copy. Returns the touched-bucket count. */
   def writeDeltas(inserts: DataFrame, deletes: DataFrame, buckets: Int,
       expectedPerBucket: Long, prevDir: String, outDir: String): Int = {
-    val conf = new SerializableHadoopConf(inserts.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = FilterInventory.writerConf(inserts.sparkSession)
     val prev = FilterInventory.begin(Some(prevDir), outDir, conf.value)
     val touched = byBucket(hashed(deletes, buckets, 0).unionByName(hashed(inserts, buckets, 1)))
       .rdd.mapPartitions(applyOps(expectedPerBucket, prev, outDir, conf)).collect()

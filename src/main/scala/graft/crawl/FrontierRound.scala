@@ -300,7 +300,6 @@ object FrontierRound {
     private def leg(kind: String): DataFrame = leaf.filter(col("__kind") === kind)
     /** [[RoundOutput.results]] (round-relative timings). */
     def results: DataFrame = leg("r").select(resultCols.map(col): _*)
-    def frontier: DataFrame = leg("f").select(frontierCols.map(col): _*)
     def newSeen: DataFrame = leg("s").select(col("url"))
     def entered: DataFrame = leg("f").filter(col("__entered")).select(col("url"))
     def departed: DataFrame = leg("d").select(col("url"))
@@ -314,6 +313,14 @@ object FrontierRound {
       RoundMetrics(round, scheduled, fetched, scheduled - fetched,
         stat("r", "new_links"), frontierCount, seenTotal, stat("r", "hosts"))
     }
+    /** The round's persistent state as ONE tagged union, for
+      * [[graft.io.TableIO.writeRound]]: `kind` r (the results columns), f
+      * (the frontier columns) and s (new seen urls, with their `bucket`);
+      * the departed rows are not state. */
+    def state(buckets: Int): DataFrame =
+      leaf.filter(col("__kind") =!= "d").select(col("__kind").as("kind") +:
+        when(col("__kind") === "s", SeenFilter.bucketOf(col("url"), buckets)).as("bucket") +:
+        (resultCols ++ frontierCols).distinct.map(col): _*)
     def release(): Unit = FrontierRound.release(leaf)
   }
 
@@ -325,8 +332,8 @@ object FrontierRound {
     * leaf: every leg's count plus the [[graft.model.RoundMetrics]]
     * aggregates of the results leg. The caller may drop the round's
     * intermediate leaves ([[RoundOutput.release]]) right after. The crawl
-    * loop ([[CrawlJob.run]]) writes every table and filter of the round
-    * from this leaf. */
+    * loop ([[CrawlJob.run]]) writes the round's state (one write) and
+    * every filter of the round from this leaf. */
   def materialize(out: RoundOutput): Materialized = {
     def tagged(df: DataFrame, kind: String) = df.withColumn("__kind", lit(kind))
     // the frontier leg flags its entered rows, so the cuckoo inserts ride

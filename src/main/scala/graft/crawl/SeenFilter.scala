@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.util.sketch.BloomFilter
-import graft.util.SerializableHadoopConf
 
 /** The partitioned URL-seen Bloom filter (north_rule: "filters them through
   * a partitioned Bloom/cuckoo URL-seen filter"; SURVEY.md §2.4 J2 / §4).
@@ -63,7 +62,7 @@ object SeenFilter {
     * Returns the touched-bucket count (diagnostic). */
   def writeMergedBlooms(urls: DataFrame, buckets: Int, expectedPerBucket: Long,
       prevDir: Option[String], outDir: String): Int = {
-    val conf = new SerializableHadoopConf(urls.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = FilterInventory.writerConf(urls.sparkSession)
     val prev = FilterInventory.begin(prevDir, outDir, conf.value)
     val touched = bloomAggPlan(urls, buckets, expectedPerBucket)
       .rdd.mapPartitions { rows =>

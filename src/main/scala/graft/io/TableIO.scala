@@ -1,9 +1,12 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, SaveMode}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.ColumnShim
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import graft.model.{FrontierEntry, ResultRow, RoundMetrics}
 
 /** Iceberg-shaped table/checkpoint seam over Parquet (SURVEY.md §7.1.5).
   *
@@ -13,32 +16,43 @@ import org.apache.spark.sql.functions.col
   * with plain Parquet dirs plus an atomically-renamed per-round JSON
   * manifest. A real Iceberg catalog can replace this seam without touching
   * the engine. All filesystem access goes through the Hadoop FileSystem
-  * API, so `root` may be local, HDFS or an object store.
+  * API, so `root` may be local, HDFS or an object store; the engine's own
+  * writes to local paths go through [[EngineFs]].
   *
   * Layout under `root`:
   * {{{
-  *   results/round=N/   part-*.parquet      (append-only, one dir per round)
-  *   seen/round=N/      bucket=B/part-*.parquet (append-only per round)
-  *   seen_compacted/upto=N/ bucket=B/...    (all rounds ≤ N in one dir;
+  *   rounds/round=N/                        ONE write per round (writeRound),
+  *     kind=r/bucket=__HIVE_DEFAULT_PARTITION__/  results
+  *     kind=f/bucket=__HIVE_DEFAULT_PARTITION__/  frontier (full snapshot)
+  *     kind=s/bucket=B/                     seen urls new in the round
+  *   seen_compacted/upto=N/bucket=B/        (all seen urls ≤ N in one dir;
   *                                           committed iff its Spark
   *                                           _SUCCESS marker exists)
-  *   frontier/round=N/  part-*.parquet      (full snapshot per round)
-  *   metrics/round=N/   part-*.parquet
+  *   results_compacted/range=A-B/round=N/   (results of rounds A..B, same
+  *                                           commit rule)
+  *   results_jsonl/round=N/                 (optional JSONL export)
   *   blooms/round=N/, cuckoo/round=N/       (per-bucket filter files; the
   *                                           layout of graft.crawl.FilterInventory)
-  *   manifest/round=N.json                  (commit marker, written LAST)
+  *   manifest/round=N.json                  (commit marker with the round's
+  *                                           metrics, written LAST)
+  *   manifest/metrics_below=K.jsonl         (the metrics of the GC'd
+  *                                           manifests of rounds < K)
   * }}}
   * A round is committed iff its manifest exists; resume reads the highest
   * committed round and ignores any torn later writes (reference has no
   * resume at all — in-memory state dies with the process,
   * task_context.rs:63-66; checkpointing is the north_rule addition).
+  * Every read takes its schema from [[TableIO.ResultsSchema]],
+  * [[TableIO.FrontierSchema]] or [[TableIO.SeenSchema]], so no read infers
+  * one from parquet footers (a Spark job each).
   */
 final class TableIO(spark: SparkSession, root: String) {
+  import TableIO._
 
   private def p(parts: String*): String = (Seq(root) ++ parts).mkString("/")
   private def hp(parts: String*): HPath = new HPath(p(parts: _*))
   private val fs: FileSystem =
-    new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new HPath(root).getFileSystem(EngineFs.conf(spark.sparkContext.hadoopConfiguration))
 
   /** Write small bytes to `dir/name` atomically: temp file + rename.
     * Hadoop FS ops report many failures as `false` instead of throwing —
@@ -57,15 +71,52 @@ final class TableIO(spark: SparkSession, root: String) {
       throw new java.io.IOException(s"rename failed: $tmp -> $dst")
   }
 
-  private def readBytes(f: HPath): Array[Byte] = {
+  private def readText(f: HPath): String = {
     val in = fs.open(f)
-    try in.readAllBytes() finally in.close()
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  // the round=N partition dir re-materializes `round` on read, so the data
-  // column is dropped at write to avoid a partition/data column collision
-  def writeResults(round: Int, df: DataFrame): Unit =
-    df.drop("round").write.mode(SaveMode.Overwrite).parquet(p("results", s"round=$round"))
+  private def list(dir: HPath): Seq[FileStatus] =
+    if (fs.exists(dir)) fs.listStatus(dir).toSeq else Seq.empty
+
+  /** Read parquet `paths` with a known schema (none: an empty frame of
+    * it). Several paths need the `basePath` they share: Spark discovers
+    * partitions below one base only. Partition columns the schema names
+    * take its types; the rest are dropped. */
+  private def read(schema: StructType, paths: Seq[String],
+      basePath: Option[String] = None): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else basePath.foldLeft(spark.read.schema(schema))(_.option("basePath", _))
+      .parquet(paths: _*).select(schema.fieldNames.toIndexedSeq.map(col): _*)
+
+  private def roundDir(round: Int): HPath = hp("rounds", s"round=$round")
+
+  /** The rounds that have a dir under `rounds/`, sorted. The round is
+    * parsed from the dir BASENAME only — matching on the full path would
+    * let a root dir whose name contains `round=<n>` hijack it (e.g. a state
+    * root named `/data/round=7-rerun`). */
+  private def rounds(): Seq[Int] =
+    list(hp("rounds")).flatMap(st => st.getPath.getName match {
+      case RoundRx(r) => Some(r.toInt)
+      case _ => None
+    }).sorted
+
+  /** The existing `kind=` dirs of the rounds in (after, upTo]. */
+  private def kindDirs(kind: String, after: Int, upTo: Int): Seq[String] =
+    rounds().filter(r => r > after && r <= upTo)
+      .map(r => new HPath(roundDir(r), s"kind=$kind")).filter(fs.exists).map(_.toString)
+
+  /** Persist a round's state with ONE write: the tagged union of `kind` r
+    * (results), f (the next frontier) and s (the round's new seen urls,
+    * with their `bucket` = pmod(xxhash64(url), B); null on r and f rows),
+    * partitioned by kind and bucket under `rounds/round=N`. Seen is stored
+    * by bucket so scans parallelize uniformly and per-bucket maintenance
+    * (filter files, compaction) has a natural unit. The round=N dir
+    * re-materializes `round` on read, so the state carries no such
+    * column. */
+  def writeRound(round: Int, state: DataFrame): Unit =
+    state.write.options(EngineFs.options).mode(SaveMode.Overwrite)
+      .partitionBy("kind", "bucket").parquet(roundDir(round).toString)
 
   /** JSONL export of a round's results (S5 parity: the reference POSTs one
     * `PageResponse` JSON per page to the callback url,
@@ -159,25 +210,13 @@ final class TableIO(spark: SparkSession, root: String) {
           timings(concat(lit("PageResponse."), col("url")))
             .as("response_timings"),
           col("run_id").as("task_uuid"))).as("value"))
-        .write.mode(SaveMode.Overwrite).text(p("results_jsonl", s"round=$round"))
+        .write.options(EngineFs.options).mode(SaveMode.Overwrite)
+        .text(p("results_jsonl", s"round=$round"))
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
   def readResultsJsonl(round: Int): DataFrame =
     spark.read.json(p("results_jsonl", s"round=$round"))
-
-  /** Seen urls are stored partitioned by `bucket` = pmod(xxhash64(url), B) so
-    * scans parallelize uniformly and per-bucket maintenance (bloom files,
-    * compaction) has a natural unit. */
-  def writeSeen(round: Int, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(p("seen", s"round=$round"))
-
-  def writeFrontier(round: Int, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(p("frontier", s"round=$round"))
-
-  def writeMetrics(round: Int, df: DataFrame): Unit =
-    df.drop("round").write.mode(SaveMode.Overwrite).parquet(p("metrics", s"round=$round"))
 
   /** The round's seen-Bloom filter dir (cumulative through the round),
     * written executor-side by [[graft.crawl.SeenFilter.writeMergedBlooms]];
@@ -197,25 +236,14 @@ final class TableIO(spark: SparkSession, root: String) {
   /** The committed manifest JSON of `round`, if present. */
   def readManifest(round: Int): Option[String] = {
     val f = hp("manifest", s"round=$round.json")
-    if (!fs.exists(f)) None
-    else Some(new String(readBytes(f), StandardCharsets.UTF_8))
+    if (!fs.exists(f)) None else Some(readText(f))
   }
 
   /** Highest committed round, or -1 if none. */
-  def lastCommittedRound(): Int = {
-    val dir = hp("manifest")
-    if (!fs.exists(dir)) return -1
-    val rx = "round=(\\d+)\\.json".r
-    fs.listStatus(dir).foldLeft(-1) { (best, st) =>
-      st.getPath.getName match {
-        case rx(n) => math.max(best, n.toInt)
-        case _ => best
-      }
-    }
-  }
+  def lastCommittedRound(): Int = manifests()._1.foldLeft(-1)(math.max)
 
-  def readFrontier(round: Int): DataFrame =
-    spark.read.parquet(p("frontier", s"round=$round"))
+  /** The frontier snapshot committed by `round`. */
+  def readFrontier(round: Int): DataFrame = read(FrontierSchema, kindDirs("f", round - 1, round))
 
   private val uptoRx = "upto=(\\d+)".r
 
@@ -223,28 +251,21 @@ final class TableIO(spark: SparkSession, root: String) {
     * `_SUCCESS` marker exists). The marker IS the commit point — a
     * separate watermark file would need delete-then-rename to update,
     * whose crash window silently un-compacts the table. */
-  private def snapshotRounds(): Seq[Int] = {
-    val dir = hp("seen_compacted")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st =>
+  private def snapshotRounds(): Seq[Int] =
+    list(hp("seen_compacted")).flatMap { st =>
       st.getPath.getName match {
-        case uptoRx(n) if fs.exists(new HPath(st.getPath, "_SUCCESS")) =>
-          Some(n.toInt)
+        case uptoRx(n) if fs.exists(new HPath(st.getPath, "_SUCCESS")) => Some(n.toInt)
         case _ => None
       }
     }
-  }
 
   /** The round whose compaction snapshot covers all seen slices ≤ it, or
     * -1 when the seen table has never been compacted. */
   def compactionWatermark(): Int = snapshotRounds().foldLeft(-1)(math.max)
 
-  /** All committed seen urls up to `round` (inclusive), as (url, bucket):
-    * the latest compaction snapshot plus the per-round tail slices after
-    * it. Without compaction the union grows one directory per round — a
-    * listing/small-files problem at thousands of rounds — which is exactly
-    * what [[compactSeen]] bounds. */
-  def readSeen(upToRound: Int): Option[DataFrame] = {
+  /** The dirs that hold the seen urls up to `round`: the latest compaction
+    * snapshot, if any, plus the per-round slices after it. */
+  private def seenDirs(upToRound: Int): (Option[String], Seq[String]) = {
     val snaps = snapshotRounds()
     // any view older than the NEWEST snapshot may need per-round slices the
     // compaction already garbage-collected (even when an older snapshot
@@ -256,73 +277,60 @@ final class TableIO(spark: SparkSession, root: String) {
       s"seen table is compacted beyond round $upToRound " +
         s"(snapshots at ${snaps.sorted.mkString(",")}) — slices for this view are gone")
     val w = snaps.foldLeft(-1)(math.max)
-    val useCompacted = w >= 0
-    val compacted =
-      if (useCompacted)
-        Seq(spark.read.option("basePath", p("seen_compacted", s"upto=$w"))
-          .parquet(p("seen_compacted", s"upto=$w")).select("url", "bucket"))
-      else Seq.empty
-    val tailStart = if (useCompacted) w + 1 else 0
-    // bucket= presence, not bare dir existence: a zero-new-seen round
-    // writes only _SUCCESS, and schema inference over such a dir throws
-    val dirs = (tailStart to upToRound).map(r => p("seen", s"round=$r"))
-      .filter(d => hasBuckets(new HPath(d)))
-    val tails =
-      if (dirs.isEmpty) Seq.empty
-      else Seq(spark.read.option("basePath", p("seen")).parquet(dirs: _*)
-        .select("url", "bucket"))
-    (compacted ++ tails).reduceOption(_.union(_))
+    (Some(p("seen_compacted", s"upto=$w")).filter(_ => w >= 0),
+      kindDirs("s", w, upToRound))
   }
 
-  /** Does the dir hold at least one bucket= partition (i.e. actual rows)? */
-  private def hasBuckets(dir: HPath): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists(_.getPath.getName.startsWith("bucket="))
+  /** All committed seen urls up to `round` (inclusive), as (url, bucket).
+    * Without compaction the read grows one directory per round — a
+    * listing/small-files problem at thousands of rounds — which is exactly
+    * what [[compactSeen]] bounds. */
+  def readSeen(upToRound: Int): DataFrame = {
+    val (snapshot, tails) = seenDirs(upToRound)
+    read(SeenSchema, snapshot.toSeq).union(read(SeenSchema, tails, Some(p("rounds"))))
+  }
 
   /** Rewrite every seen slice ≤ `upToRound` (including any previous
-    * compaction snapshot) into ONE bucket-partitioned dir, then publish the
-    * `_watermark` atomically and drop the superseded per-round dirs. Must
-    * only be called for a COMMITTED round. Crash-safe at every step:
-    * before the watermark rename, readers still see the per-round layout;
-    * after it, they ignore slices ≤ watermark, so the trailing deletes are
-    * pure garbage collection. Callers holding a pre-compaction seen
+    * compaction snapshot) into ONE bucket-partitioned dir, then drop the
+    * superseded slices and snapshots. Must only be called for a COMMITTED
+    * round. Crash-safe at every step: the snapshot's `_SUCCESS` marker is
+    * its commit point; before it, readers still see the per-round layout;
+    * after it, they ignore slices ≤ the snapshot, so the trailing deletes
+    * are pure garbage collection. Callers holding a pre-compaction seen
     * DataFrame must re-read it afterwards (the old dirs are gone). */
   def compactSeen(upToRound: Int): Unit = {
     if (compactionWatermark() >= upToRound) return // nothing newer to fold in
-    readSeen(upToRound).foreach { df =>
-      // the parquet write's _SUCCESS marker is the snapshot's commit point;
-      // everything after is pure garbage collection (readers already ignore
-      // per-round slices ≤ upToRound and any older/partial snapshot).
-      // Hash-repartition on bucket first: without it the snapshot holds up
-      // to shuffle.partitions part-files PER bucket — more small files
-      // than the tail dirs it replaced, so every later round's seen scan
-      // pays more planning than before the sweep (measured: per-round cost
-      // failed to drop back after compaction until this repartition). With
-      // it, each bucket lands whole in one task → one sized file per
-      // bucket, and the per-round cost sawtooths back down as designed.
-      df.repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-        .parquet(p("seen_compacted", s"upto=$upToRound"))
-      (0 to upToRound).foreach(r => fs.delete(hp("seen", s"round=$r"), true))
-      // sweep EVERY superseded upto=* dir (committed or partial), not just
-      // the immediately-previous one — orphans from earlier crashes are
-      // collected here instead of accumulating full seen-table copies
-      fs.listStatus(hp("seen_compacted")).foreach { st =>
-        st.getPath.getName match {
-          case uptoRx(n) if n.toInt != upToRound => fs.delete(st.getPath, true)
-          case _ =>
-        }
+    val (snapshot, tails) = seenDirs(upToRound)
+    if (snapshot.isEmpty && tails.isEmpty) return
+    // Hash-repartition on bucket first: without it the snapshot holds up
+    // to shuffle.partitions part-files PER bucket — more small files
+    // than the tail dirs it replaced, so every later round's seen scan
+    // pays more planning than before the sweep (measured: per-round cost
+    // failed to drop back after compaction until this repartition). With
+    // it, each bucket lands whole in one task → one sized file per
+    // bucket, and the per-round cost sawtooths back down as designed.
+    readSeen(upToRound).repartition(col("bucket"))
+      .write.options(EngineFs.options).mode(SaveMode.Overwrite).partitionBy("bucket")
+      .parquet(p("seen_compacted", s"upto=$upToRound"))
+    rounds().filter(_ <= upToRound).foreach(r => fs.delete(new HPath(roundDir(r), "kind=s"), true))
+    // sweep EVERY superseded upto=* dir (committed or partial), not just
+    // the immediately-previous one — orphans from earlier crashes are
+    // collected here instead of accumulating full seen-table copies
+    list(hp("seen_compacted")).foreach { st =>
+      st.getPath.getName match {
+        case uptoRx(n) if n.toInt != upToRound => fs.delete(st.getPath, true)
+        case _ =>
       }
     }
   }
 
-  // ---------- append-only table compaction (results, metrics) ----------
+  // ---------- results: an append-only table ----------
   //
-  // Results and metrics are APPEND-ONLY: one immutable dir per round, never
+  // Results are APPEND-ONLY: one immutable kind=r dir per round, never
   // rewritten. Without maintenance that is the same small-files/listing
-  // problem the seen table had — thousands of `round=N` dirs × up to
-  // `shuffle.partitions` part files each. But unlike seen (a mutable set
-  // that wants one merged layout), history never changes, so compaction
-  // here folds only the TAIL — rounds since the last snapshot — into one
+  // problem the seen table had. But unlike seen (a mutable set that wants
+  // one merged layout), history never changes, so compaction here folds
+  // only the TAIL — rounds since the last snapshot — into one
   // `range=A-B/round=N/` dir and leaves older snapshots untouched: each
   // sweep touches ≤ compactEvery round dirs (no quadratic re-copying of
   // all history), and the listing grows 1 dir per compactEvery rounds.
@@ -331,123 +339,127 @@ final class TableIO(spark: SparkSession, root: String) {
   // committed watermark, so the trailing deletes are pure GC.
 
   private val rangeRx = "range=(\\d+)-(\\d+)".r
-  private val roundRx = "round=(\\d+)".r
 
-  /** Committed (from, to) snapshot ranges for an append-only table. */
-  private def committedRanges(table: String): Seq[(Int, Int)] = {
-    val dir = hp(s"${table}_compacted")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st =>
+  /** Committed (from, to) snapshot ranges of the results table. */
+  private def committedRanges(): Seq[(Int, Int)] =
+    list(hp("results_compacted")).flatMap { st =>
       st.getPath.getName match {
         case rangeRx(a, b) if fs.exists(new HPath(st.getPath, "_SUCCESS")) =>
           Some((a.toInt, b.toInt))
         case _ => None
       }
     }
-  }
 
-  /** Highest round covered by a committed snapshot range, or -1. */
-  def appendCompactionWatermark(table: String): Int =
-    committedRanges(table).foldLeft(-1)((m, r) => math.max(m, r._2))
+  /** Highest round covered by a committed results range, or -1. */
+  def resultsCompactionWatermark(): Int =
+    committedRanges().foldLeft(-1)((m, r) => math.max(m, r._2))
 
-  /** (round, path) of per-round dirs past `afterRound`, sorted by round.
-    * The round is parsed from the dir BASENAME only — matching on the full
-    * path would let a root dir whose name contains `round=<n>` hijack the
-    * bound (e.g. a state root named `/data/round=7-rerun`). */
-  private def tailRoundDirs(table: String, afterRound: Int): Seq[(Int, String)] = {
-    val dir = hp(table)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case roundRx(r) if r.toInt > afterRound => Some(r.toInt)
-        case _ => None
-      }
-    }.sorted.map(r => r -> p(table, s"round=$r"))
-  }
+  /** Fold the results of the rounds after the last snapshot into one
+    * committed `range=A-B` dir, one part file per round. Crash-safe: an
+    * uncommitted range dir is invisible to readers and swept on the next
+    * attempt; after the `_SUCCESS` commit, readers already ignore the tail
+    * dirs being GC'd. */
+  def compactResults(upToRound: Int): Unit = compactAppendTable(upToRound)
 
-  /** Fold the per-round dirs of `table` newer than the last snapshot into
-    * one committed `range=A-B` dir (coalesced to `filesPerRound` part files
-    * per round — round dirs written at full shuffle parallelism usually
-    * hold many near-empty parts). Crash-safe: an uncommitted range dir is
-    * invisible to readers and swept on the next attempt; after the
-    * `_SUCCESS` commit, readers already ignore the tail dirs being GC'd. */
-  def compactAppendTable(table: String, upToRound: Int, filesPerRound: Int = 1): Unit = {
-    val w = appendCompactionWatermark(table)
+  private def compactAppendTable(upToRound: Int): Unit = {
+    val w = resultsCompactionWatermark()
     if (w >= upToRound) return
     // sweep orphaned UNcommitted ranges from earlier crashed attempts
-    val cdir = hp(s"${table}_compacted")
-    if (fs.exists(cdir)) fs.listStatus(cdir).foreach { st =>
+    list(hp("results_compacted")).foreach { st =>
       st.getPath.getName match {
         case rangeRx(_, _) if !fs.exists(new HPath(st.getPath, "_SUCCESS")) =>
           fs.delete(st.getPath, true)
         case _ =>
       }
     }
-    val dirs = tailRoundDirs(table, w).collect { case (r, d) if r <= upToRound => d }
+    val dirs = kindDirs("r", w, upToRound)
     if (dirs.isEmpty) return
-    spark.read.option("basePath", p(table)).parquet(dirs: _*)
-      .repartition(math.max(1, filesPerRound * dirs.size), col("round"))
-      .write.mode(SaveMode.Overwrite).partitionBy("round")
-      .parquet(p(s"${table}_compacted", s"range=${w + 1}-$upToRound"))
+    // `round` comes back from the round dirs
+    read(ResultsSchema, dirs, Some(p("rounds"))).repartition(dirs.size, col("round"))
+      .write.options(EngineFs.options).mode(SaveMode.Overwrite).partitionBy("round")
+      .parquet(p("results_compacted", s"range=${w + 1}-$upToRound"))
     // GC: the folded dirs, plus any stale tail dir ≤ the old watermark
     // resurfaced by an interrupted earlier GC (readers already ignore both)
-    tailRoundDirs(table, -1).collect { case (r, d) if r <= upToRound => d }
-      .foreach(d => fs.delete(new HPath(d), true))
+    rounds().filter(_ <= upToRound).foreach(r => fs.delete(new HPath(roundDir(r), "kind=r"), true))
   }
 
-  /** Full view of an append-only table: committed snapshot ranges plus the
-    * per-round tail dirs past the watermark, `round` re-materialized from
-    * the partition dirs everywhere. */
-  private def readAppendTable(table: String): DataFrame = {
-    val ranges = committedRanges(table).sortBy(_._1)
+  /** Full results table: committed snapshot ranges plus the per-round
+    * tail dirs past the watermark, `round` re-materialized from the
+    * partition dirs everywhere (last column). Empty, in the same shape,
+    * when nothing is committed. */
+  private def readAppendTable(): DataFrame = {
+    val ranges = committedRanges()
     val w = ranges.foldLeft(-1)((m, r) => math.max(m, r._2))
-    val snaps = ranges.map { case (a, b) =>
-      val d = p(s"${table}_compacted", s"range=$a-$b")
-      spark.read.option("basePath", d).parquet(d)
-    }
-    val tailDirs = tailRoundDirs(table, w).map(_._2)
-    val tails =
-      if (tailDirs.isEmpty) Seq.empty
-      else Seq(spark.read.option("basePath", p(table)).parquet(tailDirs: _*))
-    (snaps ++ tails).reduceOption(_.unionByName(_)).getOrElse(
-      throw new IllegalStateException(s"append table '$table' has no committed data under $root"))
+    read(ResultsSchema, ranges.sortBy(_._1).map { case (a, b) =>
+      p("results_compacted", s"range=$a-$b")
+    }, Some(p("results_compacted")))
+      .union(read(ResultsSchema, kindDirs("r", w, Int.MaxValue), Some(p("rounds"))))
   }
 
-  def compactResults(upToRound: Int): Unit = compactAppendTable("results", upToRound)
-  def compactMetrics(upToRound: Int): Unit = compactAppendTable("metrics", upToRound)
+  def readResults(): DataFrame = readAppendTable()
 
-  /** GC manifest files strictly below `keepRound`. Resume reads only the
-    * HIGHEST committed round (`lastCommittedRound` = max over the listing),
-    * so deleting lower manifests never moves the resume point; run on the
-    * compaction cadence to keep the manifest listing bounded. */
+  // ---------- the manifests: commit markers and the metrics table ----------
+
+  /** The manifest dir's entries: committed round manifests and the folded
+    * metrics files of earlier GCs. */
+  private def manifests(): (Seq[Int], Seq[Int]) = {
+    val names = list(hp("manifest")).map(_.getPath.getName)
+    (names.collect { case ManifestRx(r) => r.toInt }, names.collect { case FoldRx(k) => k.toInt })
+  }
+
+  private def foldName(below: Int) = s"metrics_below=$below.jsonl"
+
+  /** The metrics of every committed round, one per round: the newest
+    * metrics fold plus the live manifests. */
+  private def roundMetrics(): Seq[RoundMetrics] = {
+    val (live, folds) = manifests()
+    val folded = folds.maxOption.toSeq.flatMap(k =>
+      readText(hp("manifest", foldName(k))).linesIterator)
+    (folded ++ live.flatMap(readManifest)).flatMap(RoundManifest.metrics)
+      .map(m => m.round -> m).toMap.values.toSeq.sortBy(_.round)
+  }
+
+  /** The metrics table, built on the driver from the manifests (no Spark
+    * job): [[graft.model.RoundMetrics]] with `round` moved LAST as int, the
+    * shape of the results table's `round`. */
+  def readMetrics(): DataFrame = {
+    import spark.implicits._
+    val df = roundMetrics().toDF()
+    df.select((df.columns.filter(_ != "round") :+ "round").toIndexedSeq.map(col): _*)
+  }
+
+  /** GC manifest files strictly below `keepRound`, after folding their
+    * metrics into one atomically written `metrics_below=K.jsonl` (the
+    * previous fold plus these manifests), so the listing stays bounded and
+    * [[readMetrics]] still sees every round. Resume reads only the HIGHEST
+    * committed round (`lastCommittedRound` = max over the listing), so
+    * deleting lower manifests never moves the resume point. Crash-safe: a
+    * torn fold leaves the previous fold and every manifest in place; a fold
+    * for K already covers every round < K (those rounds were committed
+    * before it was written), so it is never rewritten; readers take the
+    * newest fold and dedupe its rounds against the live manifests. Runs on
+    * the compaction cadence. */
   def gcManifestsBelow(keepRound: Int): Unit = {
-    val dir = hp("manifest")
-    if (!fs.exists(dir)) return
-    val rx = "round=(\\d+)\\.json".r
-    fs.listStatus(dir).foreach { st =>
-      st.getPath.getName match {
-        case rx(r) if r.toInt < keepRound => fs.delete(st.getPath, false)
-        case _ =>
-      }
-    }
+    val (live, folds) = manifests()
+    val below = live.filter(_ < keepRound)
+    if (below.isEmpty) return
+    if (!folds.contains(keepRound))
+      atomicWrite(hp("manifest"), foldName(keepRound),
+        roundMetrics().filter(_.round < keepRound).map(RoundManifest.encode)
+          .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    folds.filter(_ < keepRound).foreach(k => fs.delete(hp("manifest", foldName(k)), false))
+    below.foreach(r => fs.delete(hp("manifest", s"round=$r.json"), false))
   }
 
-  /** GC per-round dirs of `table` strictly below `keepRound` — for tables
-    * where only the LATEST committed round is ever read back (frontier
-    * snapshots): older rounds are superseded whole, so this is pure garbage
-    * collection, run on the compaction cadence to bound the dir listing.
-    * Crash-safe trivially: resume reads only `round=lastCommitted`, which is
+  /** GC the round dirs strictly below `keepRound` — what is left in them
+    * is the frontier snapshot, and only the LATEST committed round's is
+    * ever read back; older rounds are superseded whole. Run on the
+    * compaction cadence, AFTER [[compactSeen]] and [[compactResults]] up to
+    * ≥ keepRound - 1 have folded those rounds' seen and results. Crash-safe
+    * trivially: resume reads only `round=lastCommitted`, which is
     * ≥ `keepRound` at every call site. */
-  def gcRoundDirsBelow(table: String, keepRound: Int): Unit = {
-    val dir = hp(table)
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir).foreach { st =>
-      st.getPath.getName match {
-        case roundRx(r) if r.toInt < keepRound => fs.delete(st.getPath, true)
-        case _ =>
-      }
-    }
-  }
+  def gcRoundDirsBelow(keepRound: Int): Unit =
+    rounds().filter(_ < keepRound).foreach(r => fs.delete(roundDir(r), true))
 
   /** GC the blooms and cuckoo filter tables below `keepRound`: keep exactly
     * the files `keepRound`'s inventories reference
@@ -455,23 +467,39 @@ final class TableIO(spark: SparkSession, root: String) {
   def gcFiltersBelow(keepRound: Int): Unit =
     Seq("blooms", "cuckoo").foreach(t =>
       graft.crawl.FilterInventory.gcBelow(p(t), keepRound, spark.sparkContext.hadoopConfiguration))
+}
 
-  def readResults(): DataFrame = readAppendTable("results")
+object TableIO {
+  private val RoundRx = "round=(\\d+)".r
+  private val ManifestRx = "round=(\\d+)\\.json".r
+  private val FoldRx = "metrics_below=(\\d+)\\.jsonl".r
 
-  def readMetrics(): DataFrame = readAppendTable("metrics")
+  /** The read schemas, derived once from the model, as a file-source read
+    * reports them (all nullable). Results: [[graft.model.ResultRow]] with
+    * `round` LAST (the partition column trails the data columns). */
+  val ResultsSchema: StructType = {
+    val s = ColumnShim.nullable(Encoders.product[ResultRow].schema)
+    StructType(s.filterNot(_.name == "round") :+ s("round"))
+  }
+  val FrontierSchema: StructType = ColumnShim.nullable(Encoders.product[FrontierEntry].schema)
+  /** Seen: (url, bucket); `bucket` comes back from its partition dirs as int. */
+  val SeenSchema: StructType =
+    StructType(Seq(StructField("url", StringType), StructField("bucket", IntegerType)))
 }
 
 /** The per-round commit manifest (`manifest/round=N.json`, written LAST by
-  * [[TableIO.commitRound]]): one JSON object of the round's counts. Written
-  * and read with Jackson, so a reader keys on field names — never on field
-  * order or spacing. */
+  * [[TableIO.commitRound]]): one JSON object carrying every
+  * [[graft.model.RoundMetrics]] field. Written and read with Jackson, so a
+  * reader keys on field names — never on field order or spacing. */
 object RoundManifest {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  def encode(m: graft.model.RoundMetrics): String =
+  def encode(m: RoundMetrics): String =
     mapper.writeValueAsString(mapper.createObjectNode()
       .put("round", m.round).put("scheduled", m.scheduled).put("fetched", m.fetched)
-      .put("frontier", m.newFrontier).put("seen_total", m.seenTotal))
+      .put("status_rows", m.statusRows).put("new_links", m.newLinks)
+      .put("frontier", m.newFrontier).put("seen_total", m.seenTotal)
+      .put("distinct_hosts", m.distinctHosts))
 
   /** The manifest's top-level integer fields; empty if it does not parse. */
   def fields(json: String): Map[String, Long] =
@@ -484,4 +512,15 @@ object RoundManifest {
     }.getOrElse(Map.empty)
 
   def seenTotal(json: String): Option[Long] = fields(json).get("seen_total")
+
+  /** The round's metrics; None unless every field is present. */
+  def metrics(json: String): Option[RoundMetrics] = {
+    val f = fields(json)
+    Seq("round", "scheduled", "fetched", "status_rows", "new_links", "frontier",
+      "seen_total", "distinct_hosts").map(f.get) match {
+      case Seq(Some(r), Some(s), Some(fe), Some(st), Some(nl), Some(fr), Some(se), Some(h)) =>
+        Some(RoundMetrics(r.toInt, s, fe, st, nl, fr, se, h))
+      case _ => None
+    }
+  }
 }

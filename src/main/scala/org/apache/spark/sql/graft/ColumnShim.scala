@@ -21,4 +21,9 @@ object ColumnShim {
   def bloomAgg(child: Column, expectedItems: Long): Column =
     column(new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
       expression(child), expectedItems).toAggregateExpression())
+
+  /** `s` with every field, element and map value nullable — the schema a
+    * file-source read reports (`asNullable` is private[spark]). */
+  def nullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 }

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local SparkSession for specs (one JVM-wide, forked by sbt). */
 object SparkTestBase {
@@ -15,5 +17,30 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Temp dirs owned by a suite: [[tempDir]] creates one, and every one is
+    * deleted, contents included, after the suite's last test. */
+  trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+    private val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+    def tempDir(prefix: String): String = dirs.synchronized {
+      val d = Files.createTempDirectory(prefix)
+      dirs += d
+      d.toString
+    }
+
+    override def afterAll(): Unit =
+      try super.afterAll()
+      finally dirs.synchronized {
+        dirs.foreach { d =>
+          if (Files.exists(d)) {
+            val paths = Files.walk(d)
+            try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+            finally paths.close()
+          }
+        }
+        dirs.clear()
+      }
   }
 }

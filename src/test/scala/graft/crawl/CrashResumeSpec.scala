@@ -65,12 +65,13 @@ object CrashFs {
 /** Crash-point resume matrix over the benchmark's deep-crawl shape in
   * miniature (2 hosts, chains of 2, quota 1, cuckoo on, compaction and GC
   * every round, JSONL export on): a crash at every write point of round 1 —
-  * each table, each filter write and inventory, the commit manifest, each
-  * compaction and GC step — and lost filter files between rounds. After
+  * the round's one state write, the export, each filter write and
+  * inventory, the commit manifest, each compaction and GC step, the
+  * metrics fold — and lost filter files between rounds. After
   * every one, a resume must equal the uninterrupted run: rows, the
   * `orderedResults` order, the final seen set, the JSONL export and the
   * metrics table. */
-class CrashResumeSpec extends AnyFunSuite {
+class CrashResumeSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   private lazy val spark = {
     val s = SparkTestBase.spark
     s.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
@@ -88,7 +89,7 @@ class CrashResumeSpec extends AnyFunSuite {
   }
 
   private def newRoot(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"crash-$tag").toString
+    tempDir(s"crash-$tag")
 
   private def outcome(root: String, job: CrawlJob.JobResult): CrashResumeSpec.Outcome = {
     def strings(df: DataFrame) = df.collect().map(_.toString).toSeq
@@ -99,7 +100,7 @@ class CrashResumeSpec extends AnyFunSuite {
         col("text"), col("fetch_start_ms"), col("fetch_end_ms"), col("run_id"))).sorted,
       strings(CrawlJob.orderedResults(job.results).orderBy("schedule_rank")
         .select(col("schedule_rank"), col("url"))),
-      strings(io.readSeen(job.rounds - 1).get.select("url")).sorted,
+      strings(io.readSeen(job.rounds - 1).select("url")).sorted,
       strings(spark.read.text(s"crashfs://$root/results_jsonl")).sorted,
       strings(job.metrics).sorted)
   }
@@ -152,27 +153,23 @@ class CrashResumeSpec extends AnyFunSuite {
     }
 
   // the round's write points, in write order
-  crashAt("results", "create", "results/round=1/")
+  crashAt("the round state", "create", "rounds/round=1/")
   crashAt("the JSONL export", "create", "results_jsonl/round=1/")
-  crashAt("seen", "create", "seen/round=1/")
-  crashAt("frontier", "create", "frontier/round=1/")
   crashAt("the bloom files", "create", "blooms/round=1/")
   crashAt("the bloom inventory", "create", "blooms/round=1/_inventory.tmp")
   crashAt("the cuckoo files", "create", "cuckoo/round=1/")
   crashAt("the cuckoo inventory", "create", "cuckoo/round=1/_inventory.tmp")
-  crashAt("metrics", "create", "metrics/round=1/")
   crashAt("the manifest", "create", "manifest/round=1.json.tmp")
   // compaction and GC after the round-1 commit
   crashAt("seen compaction", "create", "seen_compacted/upto=1/")
-  crashAt("the folded seen slice GC", "delete", "seen/round=1")
+  crashAt("the folded seen slice GC", "delete", "rounds/round=1/kind=s")
   crashAt("the old seen snapshot GC", "delete", "seen_compacted/upto=0")
   crashAt("results compaction", "create", "results_compacted/range=1-1/")
-  crashAt("the folded results GC", "delete", "results/round=1")
-  crashAt("metrics compaction", "create", "metrics_compacted/range=1-1/")
-  crashAt("the folded metrics GC", "delete", "metrics/round=1")
-  crashAt("the frontier GC", "delete", "frontier/round=0")
+  crashAt("the folded results GC", "delete", "rounds/round=1/kind=r")
+  crashAt("the frontier GC", "delete", "rounds/round=0")
   crashAt("the bloom GC", "delete", "blooms/round=0/")
   crashAt("the cuckoo GC", "delete", "cuckoo/round=0/")
+  crashAt("the metrics fold", "create", "manifest/metrics_below=1.jsonl.tmp")
   crashAt("the manifest GC", "delete", "manifest/round=0.json")
 
   test("lost bloom and cuckoo files between rounds: resume equals the uninterrupted run") {

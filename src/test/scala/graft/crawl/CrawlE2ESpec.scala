@@ -10,7 +10,7 @@ import graft.synth.Synth
   * SimCrawler oracle on the same synthesized graph — final URL-seen set,
   * canonical crawl ordering, per-row statuses, byte-identical text, robots
   * compliance, and exact resume (FIXTURES.md §7; north_rule invariants). */
-class CrawlE2ESpec extends AnyFunSuite {
+class CrawlE2ESpec extends AnyFunSuite with SparkTestBase.TempDirs {
   private lazy val spark = SparkTestBase.spark
 
   private def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
@@ -58,7 +58,7 @@ class CrawlE2ESpec extends AnyFunSuite {
 
   private def runBoth(g: Synth.Graph, cfg: CrawlConfig, tag: String) = {
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = java.nio.file.Files.createTempDirectory(s"crawl-$tag").toString
+    val dir = tempDir(s"crawl-$tag")
     val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
     val sim = SimCrawler.run(g.pages, g.robots, g.redirects, g.seeds, cfg)
     (job, sim, dir)
@@ -78,7 +78,7 @@ class CrawlE2ESpec extends AnyFunSuite {
 
     // final URL-seen set parity
     val io = new graft.io.TableIO(spark, dir)
-    val sparkSeen = io.readSeen(job.rounds - 1).get
+    val sparkSeen = io.readSeen(job.rounds - 1)
       .select("url").collect().map(_.getString(0)).toSet
     assert(sparkSeen == sim.seen)
 
@@ -248,11 +248,11 @@ class CrawlE2ESpec extends AnyFunSuite {
     val cfg = CrawlConfig(maxDepth = 3, hostQuotaPerRound = 2)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
 
-    val fullDir = java.nio.file.Files.createTempDirectory("crawl-full").toString
+    val fullDir = tempDir("crawl-full")
     val full = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, fullDir)
 
     // interrupted: run with maxRounds=2, then resume from checkpoint
-    val partDir = java.nio.file.Files.createTempDirectory("crawl-part").toString
+    val partDir = tempDir("crawl-part")
     CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg.copy(maxRounds = 2), partDir)
     val resumed = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
@@ -270,25 +270,28 @@ class CrawlE2ESpec extends AnyFunSuite {
     val cfg = CrawlConfig(maxDepth = 3, hostQuotaPerRound = 2, seenCompactEvery = 2)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
 
-    val fullDir = java.nio.file.Files.createTempDirectory("crawl-cfull").toString
+    val fullDir = tempDir("crawl-cfull")
     val full = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg.copy(seenCompactEvery = 0), fullDir) // compaction-free reference
 
-    val partDir = java.nio.file.Files.createTempDirectory("crawl-cpart").toString
+    val partDir = tempDir("crawl-cpart")
     CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg.copy(maxRounds = 2), partDir)
     val io = new graft.io.TableIO(spark, partDir)
     assert(io.compactionWatermark() == 1, "round-1 compaction must have run")
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$partDir/seen/round=0")),
-      "compaction must drop superseded per-round dirs")
-    // results/metrics ride the same cadence: tail rounds folded into a
-    // committed range dir, per-round dirs GC'd
-    assert(io.appendCompactionWatermark("results") == 1)
-    assert(io.appendCompactionWatermark("metrics") == 1)
+      java.nio.file.Paths.get(s"$partDir/rounds/round=1/kind=s")),
+      "compaction must drop superseded per-round slices")
+    // results ride the same cadence: tail rounds folded into a committed
+    // range dir, per-round dirs GC'd; the manifests below the sweep are
+    // folded into one metrics file
+    assert(io.resultsCompactionWatermark() == 1)
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$partDir/results/round=0")),
-      "results compaction must drop folded per-round dirs")
+      java.nio.file.Paths.get(s"$partDir/rounds/round=0")),
+      "the frontier GC must drop round dirs below the sweep")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$partDir/manifest/round=0.json")))
+    assert(io.readMetrics().select("round").collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
     val resumed = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg, partDir, resume = true)
 
@@ -296,9 +299,9 @@ class CrawlE2ESpec extends AnyFunSuite {
     assert(sparkRows(resumed.results) == sparkRows(full.results))
     // final seen set identical whether or not any compaction ever ran
     val fullSeen = new graft.io.TableIO(spark, fullDir).readSeen(full.rounds - 1)
-      .get.select("url").collect().map(_.getString(0)).toSet
+      .select("url").collect().map(_.getString(0)).toSet
     val compSeen = io.readSeen(resumed.rounds - 1)
-      .get.select("url").collect().map(_.getString(0)).toSet
+      .select("url").collect().map(_.getString(0)).toSet
     assert(compSeen == fullSeen)
   }
 
@@ -306,7 +309,7 @@ class CrawlE2ESpec extends AnyFunSuite {
     val g = Synth.graph(seed = 42L, hosts = 2, pagesPerHost = 8)
     val cfg = CrawlConfig(maxDepth = 2, hostQuotaPerRound = 4, exportJsonl = true)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = java.nio.file.Files.createTempDirectory("crawl-jsonl").toString
+    val dir = tempDir("crawl-jsonl")
     // seed host0's redirect chain head directly so at least one exported
     // row deterministically carries redirect hops (in-page /r/ entry links
     // are probabilistic in the fixture). host0 is the right host: host1 is
@@ -321,7 +324,7 @@ class CrawlE2ESpec extends AnyFunSuite {
     var scopedOutSeen = 0L
     var fullSchemaSeen = false
     (0 until job.rounds).foreach { r =>
-      val pq = spark.read.parquet(s"$dir/results/round=$r")
+      val pq = io.readResults().filter(col("round") === r)
       if (pq.count() > 0) {
         val js = io.readResultsJsonl(r)
         assert(js.count() == pq.count(), s"round $r row count")
@@ -453,7 +456,7 @@ class CrawlE2ESpec extends AnyFunSuite {
 
   test("differential parity THROUGH the compaction cadence (persistent, seenCompactEvery=2)") {
     // every other round triggers the full maintenance sweep (seen snapshot,
-    // results/metrics range fold, frontier/bloom/manifest GC), so the final
+    // results range fold, frontier/bloom/manifest GC), so the final
     // readResults() view — committed ranges unioned with the tail — is
     // row-compared against the independent sequential oracle, not just
     // against another spark run
@@ -464,9 +467,9 @@ class CrawlE2ESpec extends AnyFunSuite {
     assert(job.rounds > 2, "fixture must cross at least one compaction sweep")
     assert(sparkRows(job.results) == simRows(sim.results))
     val io = new graft.io.TableIO(spark, dir)
-    assert(io.appendCompactionWatermark("results") >= 0,
+    assert(io.resultsCompactionWatermark() >= 0,
       "at least one committed results range must exist")
-    val sparkSeen = io.readSeen(job.rounds - 1).get
+    val sparkSeen = io.readSeen(job.rounds - 1)
       .select("url").collect().map(_.getString(0)).toSet
     assert(sparkSeen == sim.seen)
   }
@@ -475,7 +478,7 @@ class CrawlE2ESpec extends AnyFunSuite {
     val g = Synth.graph(seed = 42L, hosts = 2, pagesPerHost = 8)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
     val cfg = CrawlConfig(maxDepth = 2, hostQuotaPerRound = 3)
-    val dir = java.nio.file.Files.createTempDirectory("crawl-empty").toString
+    val dir = tempDir("crawl-empty")
     val job = CrawlJob.run(spark, Seq.empty, pagesDf, robotsDf, redirectsDf, cfg, dir)
     assert(job.rounds == 0)
     assert(job.results.count() == 0L && job.metrics.count() == 0L)
@@ -484,7 +487,7 @@ class CrawlE2ESpec extends AnyFunSuite {
     // one. The populated path drops `round` at write and re-materializes it
     // LAST from the partition dir — the zero-round branch must emit the same
     // order (ADVICE r4)
-    val popDir = java.nio.file.Files.createTempDirectory("crawl-pop").toString
+    val popDir = tempDir("crawl-pop")
     val popJob = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       CrawlConfig(maxDepth = 1, hostQuotaPerRound = 1, maxRounds = 1), popDir)
     assert(popJob.results.count() > 0 && popJob.metrics.count() > 0)

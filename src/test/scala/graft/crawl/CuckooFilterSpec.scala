@@ -6,7 +6,7 @@ import graft.SparkTestBase
 import graft.model.CrawlConfig
 import graft.synth.Synth
 
-class CuckooFilterSpec extends AnyFunSuite {
+class CuckooFilterSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -63,7 +63,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("file-backed probe: anti-join parity with the plain join (build from urls)") {
-    val dir = java.nio.file.Files.createTempDirectory("cuckoo-build").toString
+    val dir = tempDir("cuckoo-build")
     val frontier = (0 until 3000).map(i => s"https://h${i % 13}.test/f/$i").toDF("url")
     val kids = (1500 until 4500).map(i => s"https://h${i % 13}.test/f/$i")
       .toDF("url").withColumn("depth", lit(2))
@@ -80,7 +80,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("delta maintenance tracks a churning frontier exactly across rounds") {
-    val base = java.nio.file.Files.createTempDirectory("cuckoo-delta").toString
+    val base = tempDir("cuckoo-delta")
     def urlsDf(s: Set[String]) = s.toSeq.sorted.toDF("url")
     // round 0 state
     var live: Set[String] = (0 until 1200).map(i => s"https://h$i.test/r0/$i").toSet
@@ -117,7 +117,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("saturated buckets go .dead, stay dead through deltas, and never break exactness") {
-    val base = java.nio.file.Files.createTempDirectory("cuckoo-dead").toString
+    val base = tempDir("cuckoo-dead")
     val frontier = (0 until 2000).map(i => s"https://h.test/$i").toDF("url")
     // expectedPerBucket=4 ⇒ every populated bucket overflows at 2000/4 urls
     FrontierFilter.writeFromUrls(frontier, 4, 4, s"$base/round=0")
@@ -145,7 +145,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("delta write references untouched buckets through the inventory; GC keeps exactly the reachable files") {
-    val base = java.nio.file.Files.createTempDirectory("cuckoo-inv").toString
+    val base = tempDir("cuckoo-inv")
     val conf = spark.sparkContext.hadoopConfiguration
     val live0 = (0 until 1000).map(i => s"https://h$i.test/a/$i")
     FrontierFilter.writeFromUrls(live0.toDF("url"), 8, 512, s"$base/cuckoo/round=0")
@@ -186,7 +186,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   }
 
   test("resumedCap re-derives the grown per-bucket capacity from a checkpointed file header") {
-    val dir = java.nio.file.Files.createTempDirectory("cuckoo-cap").toString
+    val dir = tempDir("cuckoo-cap")
     val urls = (0 until 64).map(i => s"https://h.test/$i").toDF("url")
     FrontierFilter.writeFromUrls(urls, 4, 5000L, dir)
     val cap = FrontierFilter.resumedCap(dir, spark).get
@@ -212,7 +212,7 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(job.rounds == sim.rounds)
     assert(rows == simRows)
     seenDir.foreach { dir =>
-      val seen = new graft.io.TableIO(spark, dir).readSeen(job.rounds - 1).get
+      val seen = new graft.io.TableIO(spark, dir).readSeen(job.rounds - 1)
         .select("url").as[String].collect().toSet
       assert(seen == sim.seen)
     }
@@ -221,7 +221,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   test("auto-enable gate: engages above the frontier threshold, disengages below, rows identical") {
     val g = Synth.graph(seed = 55L, hosts = 3, pagesPerHost = 14)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = java.nio.file.Files.createTempDirectory("ck-auto").toString
+    val dir = tempDir("ck-auto")
     // threshold 4: off for the seed rounds (frontier = 3), on as the BFS
     // widens, off again as the frontier collapses at the end
     val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
@@ -239,7 +239,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   test("persistent crawl with the cuckoo frontier gate is row-identical to without") {
     val g = Synth.graph(seed = 99L, hosts = 3, pagesPerHost = 14)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = java.nio.file.Files.createTempDirectory("crawl-ck").toString
+    val dir = tempDir("crawl-ck")
     val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
       useCuckooFrontier = true,
       // tiny per-bucket capacity so saturation/dead-bucket handling runs
@@ -258,7 +258,7 @@ class CuckooFilterSpec extends AnyFunSuite {
   test("capacity-growth rebuild triggers mid-crawl and keeps row identity") {
     val g = Synth.graph(seed = 77L, hosts = 3, pagesPerHost = 16)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = java.nio.file.Files.createTempDirectory("ck-grow").toString
+    val dir = tempDir("ck-grow")
     // ONE bucket + capacity 1: cap = sizedFor(1, frontierCount) crosses a
     // doubling boundary as soon as the frontier widens past the seeds, so
     // the cap > cuckooCap rebuild branch runs mid-crawl (and again as the
@@ -274,7 +274,7 @@ class CuckooFilterSpec extends AnyFunSuite {
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
     val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 2, runId = "t",
       useCuckooFrontier = true)
-    val partDir = java.nio.file.Files.createTempDirectory("ck-part").toString
+    val partDir = tempDir("ck-part")
     CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg.copy(maxRounds = 2), partDir)
     // simulate a checkpoint written without (or having lost) the filter dirs

@@ -10,7 +10,7 @@ import graft.model.CrawlConfig
 /** The file-backed filter store ([[FilterInventory]]) under lost files,
   * relative state dirs and inventory-only round dirs: each may cost time,
   * never rows. */
-class FilterStoreSpec extends AnyFunSuite {
+class FilterStoreSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -21,7 +21,7 @@ class FilterStoreSpec extends AnyFunSuite {
       xxhash64(col("url"))).as[(String, Int, Long)].collect().toSeq
 
   test("bloom merge: a lost referenced file makes its bucket dead, and it stays dead") {
-    val base = java.nio.file.Files.createTempDirectory("store-lost").toString
+    val base = tempDir("store-lost")
     val r0 = (0 until 800).map(i => s"u$i")
     SeenFilter.writeMergedBlooms(r0.toDF("url"), 8, 512, None, s"$base/round=0")
     val (victim, lost) = FilterInventory.read(s"$base/round=0", conf).get.minBy(_._1)
@@ -50,7 +50,7 @@ class FilterStoreSpec extends AnyFunSuite {
   }
 
   test("a stale .dead marker from a crashed attempt never kills a bucket the redo writes live") {
-    val base = java.nio.file.Files.createTempDirectory("store-stale").toString
+    val base = tempDir("store-stale")
     SeenFilter.writeMergedBlooms((0 until 800).map(i => s"u$i").toDF("url"), 8, 512, None,
       s"$base/round=0")
     val slice = bucketed((1000 until 1100).map(i => s"u$i"), 8)
@@ -79,7 +79,7 @@ class FilterStoreSpec extends AnyFunSuite {
       df.select("round", "url", "crawl_status", "depth", "final_url", "text")
         .collect().map(_.toString).sorted.toSeq
     val full = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg,
-      java.nio.file.Files.createTempDirectory("store-abs").toString)
+      tempDir("store-abs"))
     // relative to the working directory; target/ is build output
     val rel = s"target/filter-store-spec/rel-${java.util.UUID.randomUUID()}"
     val io = new TableIO(spark, rel)
@@ -110,7 +110,7 @@ class FilterStoreSpec extends AnyFunSuite {
   }
 
   test("resumedCap resolves through the inventory: a round dir holding no .cf file of its own") {
-    val base = java.nio.file.Files.createTempDirectory("store-cap").toString
+    val base = tempDir("store-cap")
     val urls = (0 until 64).map(i => s"https://h.test/$i").toDF("url")
     FrontierFilter.writeFromUrls(urls, 4, 5000L, s"$base/round=0")
     // an empty delta: round 1 references every live file in round 0

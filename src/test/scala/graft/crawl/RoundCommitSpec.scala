@@ -7,11 +7,12 @@ import graft.io.{RoundManifest, TableIO}
 import graft.model._
 import graft.synth.Synth
 
-/** The persistent loop's one-action commit: every round's metrics row and
-  * manifest come from the action that materializes the round, so they are
-  * pinned here against the tables the round committed. Also the manifest
-  * decoder and the static-input leaf gate. */
-class RoundCommitSpec extends AnyFunSuite {
+/** The persistent loop's one-action commit: every round's manifest — the
+  * metrics table's only store — comes from the action that materializes
+  * the round, so every manifest field is pinned here against the tables
+  * the round committed. Also the manifest decoder and the static-input
+  * leaf gate. */
+class RoundCommitSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   private lazy val spark = SparkTestBase.spark
 
   /** Run a persistent crawl one round per call (each call resumes the
@@ -21,7 +22,7 @@ class RoundCommitSpec extends AnyFunSuite {
   private def crawlCheckingEveryRound(g: Synth.Graph, cfg: CrawlConfig, tag: String,
       beforeResume: (TableIO, Int) => Unit = (_, _) => ()): Int = {
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = java.nio.file.Files.createTempDirectory(s"commit-$tag").toString
+    val dir = tempDir(s"commit-$tag")
     val io = new TableIO(spark, dir)
     var round = 0
     var more = true
@@ -46,13 +47,20 @@ class RoundCommitSpec extends AnyFunSuite {
           "newLinks" -> Option(agg.get(2)).fold(0L)(_.asInstanceOf[Long]),
           "distinctHosts" -> agg.getLong(3),
           "newFrontier" -> io.readFrontier(round).count(),
-          "seenTotal" -> io.readSeen(round).fold(0L)(_.count()))
+          "seenTotal" -> io.readSeen(round).count())
         want.foreach { case (k, v) => assert(metric(k) == v, s"$tag round $round: $k") }
         assert(metric("statusRows") == want("scheduled") - want("fetched"))
+        // the manifest carries every metric, and the metrics table is read
+        // from it
         val manifest = RoundManifest.fields(io.readManifest(round).get)
-        assert(manifest == Map("round" -> round.toLong, "scheduled" -> metric("scheduled"),
-          "fetched" -> metric("fetched"), "frontier" -> metric("newFrontier"),
-          "seen_total" -> metric("seenTotal")), s"$tag round $round: manifest")
+        assert(manifest == Map("round" -> round.toLong, "scheduled" -> want("scheduled"),
+          "fetched" -> want("fetched"), "status_rows" -> (want("scheduled") - want("fetched")),
+          "new_links" -> want("newLinks"), "frontier" -> want("newFrontier"),
+          "seen_total" -> want("seenTotal"), "distinct_hosts" -> want("distinctHosts")),
+          s"$tag round $round: manifest")
+        // every earlier round keeps its one metrics row, folded or not
+        assert(io.readMetrics().select("round").collect().map(_.getInt(0)).toSeq ==
+          (0 to round), s"$tag round $round: metrics rounds")
         round += 1
       }
     }
@@ -67,8 +75,10 @@ class RoundCommitSpec extends AnyFunSuite {
       val f = RoundManifest.fields(io.readManifest(last).get)
       io.commitRound(last,
         s"""{ "note": {"seen_total":999999}, "seen_total" : ${f("seen_total")},
+           |  "distinct_hosts": ${f("distinct_hosts")}, "new_links" :${f("new_links")},
            |  "frontier": ${f("frontier")}, "extra": [1, 2], "fetched": ${f("fetched")},
-           |  "scheduled": ${f("scheduled")}, "round": $last }""".stripMargin)
+           |  "status_rows": ${f("status_rows")}, "scheduled": ${f("scheduled")},
+           |  "round": $last }""".stripMargin)
     }
     val rounds = crawlCheckingEveryRound(SimCrawler.deepCrawlWeb(3),
       CrawlConfig(maxDepth = 8, hostQuotaPerRound = 1, useCuckooFrontier = true,
@@ -86,8 +96,15 @@ class RoundCommitSpec extends AnyFunSuite {
   test("manifest decoder keys on field names, not order or spacing") {
     val m = RoundMetrics(4, 12L, 9L, 3L, 40L, 17L, 123L, 5L)
     val json = RoundManifest.encode(m)
-    assert(json == """{"round":4,"scheduled":12,"fetched":9,"frontier":17,"seen_total":123}""")
+    assert(json == """{"round":4,"scheduled":12,"fetched":9,"status_rows":3,"new_links":40,""" +
+      """"frontier":17,"seen_total":123,"distinct_hosts":5}""")
     assert(RoundManifest.seenTotal(json).contains(123L))
+    assert(RoundManifest.metrics(json).contains(m))
+    assert(RoundManifest.metrics(
+      """{"distinct_hosts":5, "seen_total" : 123, "x": {"round": 9}, "frontier":17,
+        |"new_links":40,"status_rows":3,"fetched":9,"scheduled":12,"round":4}""".stripMargin)
+      .contains(m))
+    assert(RoundManifest.metrics("""{"round":4,"seen_total":123}""").isEmpty)
     assert(RoundManifest.seenTotal(
       """{"x": {"seen_total": 7}, "frontier":1, "seen_total" : 123, "y": "z"}""").contains(123L))
     assert(RoundManifest.seenTotal("""{"round":4}""").isEmpty)
@@ -99,7 +116,7 @@ class RoundCommitSpec extends AnyFunSuite {
     val g = Synth.graph(42L, hosts = 2, pagesPerHost = 8)
     val local = g.pages.toDF()
     assert(CrawlJob.staticLeaf(local).rdd.getNumPartitions == 1)
-    val dir = java.nio.file.Files.createTempDirectory("static-leaf").toString
+    val dir = tempDir("static-leaf")
     local.repartition(3).write.mode("overwrite").parquet(dir)
     val table = spark.read.parquet(dir)
     val parts = table.rdd.getNumPartitions

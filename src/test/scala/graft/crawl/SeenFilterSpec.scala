@@ -4,12 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
-class SeenFilterSpec extends AnyFunSuite {
+class SeenFilterSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/round=0"
+    tempDir(tag) + "/round=0"
 
   private def bucketed(urls: Seq[String], buckets: Int): Array[(Long, Long)] =
     urls.toDF("url").select(SeenFilter.bucketOf(col("url"), buckets).as("bucket"),
@@ -32,7 +32,7 @@ class SeenFilterSpec extends AnyFunSuite {
   }
 
   test("merge unions filters: everything inserted in either is might-contained") {
-    val base = java.nio.file.Files.createTempDirectory("blooms-merge").toString
+    val base = tempDir("blooms-merge")
     val a = (0 until 500).map(i => s"u$i").toDF("url")
     val b = (400 until 900).map(i => s"u$i").toDF("url")
     SeenFilter.writeMergedBlooms(a, 4, 512, None, s"$base/round=0")
@@ -80,7 +80,7 @@ class SeenFilterSpec extends AnyFunSuite {
   }
 
   test("file-backed bloom anti-join is exactly the plain anti-join") {
-    val dir = java.nio.file.Files.createTempDirectory("blooms-fb").toString + "/round=0"
+    val dir = tempDir("blooms-fb") + "/round=0"
     val seen = (0 until 3000).map(i => s"https://h${i % 7}.test/p/$i").toDF("url")
     val candidates = (1500 until 4500).map(i => s"https://h${i % 7}.test/p/$i")
       .toDF("url").withColumn("depth", lit(1))
@@ -99,7 +99,7 @@ class SeenFilterSpec extends AnyFunSuite {
   }
 
   test("incremental merged write: new slice folded in, untouched buckets referenced (never copied)") {
-    val base = java.nio.file.Files.createTempDirectory("blooms-inc").toString
+    val base = tempDir("blooms-inc")
     // round 0: urls spread over all 8 buckets
     val r0 = (0 until 800).map(i => s"u$i").toDF("url")
     SeenFilter.writeMergedBlooms(r0, 8, 512, None, s"$base/round=0")
@@ -133,7 +133,7 @@ class SeenFilterSpec extends AnyFunSuite {
   }
 
   test("file-backed probe ships no filter bytes; a missing bucket file falls back to the exact join") {
-    val dir = java.nio.file.Files.createTempDirectory("blooms-miss").toString + "/round=0"
+    val dir = tempDir("blooms-miss") + "/round=0"
     val seen = (0 until 4000).map(i => s"https://h.test/p/$i").toDF("url")
     SeenFilter.writeMergedBlooms(seen, 8, 1024, None, dir)
     // the broadcast handle is CONSTANT-SIZE in the seen set — a path, a
@@ -148,7 +148,7 @@ class SeenFilterSpec extends AnyFunSuite {
       oos.writeObject(handle); oos.close()
       bos.size()
     }
-    val small = java.nio.file.Files.createTempDirectory("blooms-sm").toString + "/round=0"
+    val small = tempDir("blooms-sm") + "/round=0"
     SeenFilter.writeMergedBlooms(Seq("one").toDF("url"), 8, 16, None, small)
     val overSmall = handleBytes(small)
     val overBig = handleBytes(dir)

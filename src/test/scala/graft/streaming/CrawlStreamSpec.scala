@@ -7,7 +7,7 @@ import graft.SparkTestBase
 import graft.model.Page
 import graft.synth.Synth
 
-class CrawlStreamSpec extends AnyFunSuite {
+class CrawlStreamSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
@@ -23,7 +23,7 @@ class CrawlStreamSpec extends AnyFunSuite {
       .format("memory").queryName("deduped_links")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cs-ckpt").toString)
+        tempDir("cs-ckpt"))
       .start()
     try {
       val ps = pagesFixture
@@ -53,7 +53,7 @@ class CrawlStreamSpec extends AnyFunSuite {
       .format("memory").queryName("host_rates")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cs-ckpt2").toString)
+        tempDir("cs-ckpt2"))
       .start()
     try {
       input.addData(pagesFixture: _*)
@@ -81,7 +81,7 @@ class CrawlStreamSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("fetch_calendar")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cs-ckpt4").toString)
+        tempDir("cs-ckpt4"))
       .start()
     try {
       input.addData(
@@ -135,7 +135,7 @@ class CrawlStreamSpec extends AnyFunSuite {
       .format("memory").queryName("deduped_docs")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cs-ckpt3").toString)
+        tempDir("cs-ckpt3"))
       .start()
     try {
       val t0 = 1700000000000L
@@ -160,7 +160,7 @@ class CrawlStreamSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("fetch_calendar_capped")
       .outputMode("append")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("cs-ckpt5").toString)
+        tempDir("cs-ckpt5"))
       .start()
     try {
       input.addData((1 to 4).map(i => FetchRequest(s"https://m.test/$i", "m.test", t0)): _*)

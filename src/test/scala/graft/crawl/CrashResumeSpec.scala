@@ -65,9 +65,10 @@ object CrashFs {
 /** Crash-point resume matrix over the benchmark's deep-crawl shape in
   * miniature (2 hosts, chains of 2, quota 1, cuckoo on, compaction and GC
   * every round, JSONL export on): a crash at every write point of round 1 —
-  * the round's one state write, the export, each filter write and
-  * inventory, the commit manifest, each compaction and GC step, the
-  * metrics fold — and lost filter files between rounds. After
+  * each kind of the round's one state write, the export, each filter write
+  * and inventory, the commit manifest, each compaction and GC step, the
+  * metrics fold — and in round 2's GC of the superseded metrics fold, and
+  * lost filter files between rounds. After
   * every one, a resume must equal the uninterrupted run: rows, the
   * `orderedResults` order, the final seen set, the JSONL export and the
   * metrics table. */
@@ -135,25 +136,29 @@ class CrashResumeSpec extends AnyFunSuite with SparkTestBase.TempDirs {
     root
   }
 
-  /** Resume the round-0 state and crash round 1 at the first `op` on `rel`
-    * (below the state root; a trailing `/` also matches anything under
-    * it), then resume to the end. */
-  private def crashAt(point: String, op: String, rel: String): Unit =
+  /** Resume the round-0 state and crash it in `round` at the first `op` on
+    * `rel` (below the state root; a trailing `/` also matches anything
+    * under it) whose path contains `within`, then resume to the end. */
+  private def crashAt(point: String, op: String, rel: String, within: String = "",
+      round: Int = 1): Unit =
     test(s"crash at $point, then resume: equals the uninterrupted run") {
       val want = reference
       val root = copyOfRound0(point.replaceAll("\\W+", "-"))
       val target = s"$root/$rel"
-      CrashFs.arm((o, p) => o == op && (p == target.stripSuffix("/") ||
+      CrashFs.arm((o, p) => o == op && p.contains(within) && (p == target.stripSuffix("/") ||
         rel.endsWith("/") && p.startsWith(target)))
       val e = try intercept[Exception](crawl(root, resume = true)) finally CrashFs.disarm()
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(x => Option(x.getMessage).exists(_.contains("injected crash"))), e)
-      assert(new TableIO(spark, s"crashfs://$root").lastCommittedRound() <= 1)
+      assert(new TableIO(spark, s"crashfs://$root").lastCommittedRound() <= round)
       assert(outcome(root, crawl(root, resume = true)) == want)
     }
 
-  // the round's write points, in write order
-  crashAt("the round state", "create", "rounds/round=1/")
+  // the round's write points, in write order; the one round-state write
+  // creates a file in each kind's partition
+  crashAt("results", "create", "rounds/round=1/", within = "/kind=r/")
+  crashAt("seen", "create", "rounds/round=1/", within = "/kind=s/")
+  crashAt("frontier", "create", "rounds/round=1/", within = "/kind=f/")
   crashAt("the JSONL export", "create", "results_jsonl/round=1/")
   crashAt("the bloom files", "create", "blooms/round=1/")
   crashAt("the bloom inventory", "create", "blooms/round=1/_inventory.tmp")
@@ -169,8 +174,10 @@ class CrashResumeSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   crashAt("the frontier GC", "delete", "rounds/round=0")
   crashAt("the bloom GC", "delete", "blooms/round=0/")
   crashAt("the cuckoo GC", "delete", "cuckoo/round=0/")
-  crashAt("the metrics fold", "create", "manifest/metrics_below=1.jsonl.tmp")
+  crashAt("metrics compaction", "create", "manifest/metrics_below=1.jsonl.tmp")
   crashAt("the manifest GC", "delete", "manifest/round=0.json")
+  // round 2's GC deletes the metrics fold that its own fold supersedes
+  crashAt("the folded metrics GC", "delete", "manifest/metrics_below=1.jsonl", round = 2)
 
   test("lost bloom and cuckoo files between rounds: resume equals the uninterrupted run") {
     val want = reference

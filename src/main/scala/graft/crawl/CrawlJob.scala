@@ -28,11 +28,13 @@ object CrawlJob {
     * uuid, page_response.rs:20, minted per PUT /crawl). Batch analog: a
     * DETERMINISTIC name-based UUID over the task identity (seed list +
     * config), so replays and resumes of the same task agree on it while two
-    * different tasks appended to one warehouse stay distinguishable. */
+    * different tasks appended to one warehouse stay distinguishable. How a
+    * round executes (interpreted or compiled) is not part of the task. */
   def resolveRunId(seeds: Seq[String], cfg: CrawlConfig): String =
     if (cfg.runId.nonEmpty) cfg.runId
     else java.util.UUID.nameUUIDFromBytes(
-      (seeds.sorted.mkString("\n") + "\u0000" + cfg.copy(runId = "").toString)
+      (seeds.sorted.mkString("\n") + "\u0000" +
+        cfg.copy(runId = "", interpretRoundsUpTo = 0L).toString)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
 
   /** Seed intake (reference: PUT /crawl, server/src/http.rs:24-29 — seed urls
@@ -141,7 +143,10 @@ object CrawlJob {
 
     var frontierCount = frontier.count()
     val roundSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    while (frontierCount > 0 && round < cfg.maxRounds) {
+    // a round small enough runs without generated code (see
+    // [[CrawlConfig.interpretRoundsUpTo]]); rows are the same either way
+    while (frontierCount > 0 && round < cfg.maxRounds)
+      withInterpretedCode(spark, frontierCount <= cfg.interpretRoundsUpTo) {
       val roundT0 = System.nanoTime()
       // broadcast payload: a path + bucket count + Hadoop conf, constant
       // size at any scale; bloomDir empty (fresh round 0) ⇒ seen is empty ⇒
@@ -277,6 +282,25 @@ object CrawlJob {
     // populated run yields
     JobResult(round, io.readResults(), io.readMetrics(), roundSecs.toSeq)
   }
+
+  /** Runs `body` with Spark's generated code off when `on`: no whole-stage
+    * codegen, and every projection, predicate and ordering built by its
+    * interpreted factory (`factoryMode` is an internal conf, but no public
+    * one stops per-operator compilation). Restores exactly what the caller
+    * had, set or unset. The session confs reach executor tasks as SQL
+    * local properties, so tasks interpret too. */
+  private def withInterpretedCode[T](spark: SparkSession, on: Boolean)(body: => T): T =
+    if (!on) body
+    else {
+      val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      val prev = spark.conf.getAll
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally confs.foreach { case (k, _) =>
+        prev.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
+    }
 
   /** A static input as a checkpointed leaf. An embedded fixture (every
     * leaf of its analyzed plan is a LocalRelation) parallelizes

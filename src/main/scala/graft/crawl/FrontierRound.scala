@@ -250,8 +250,11 @@ object FrontierRound {
     * the absolute virtual-clock stamps of [[graft.model.ResultRow]]
     * (`fetch_start_ms`/`fetch_end_ms`). Applied by the crawl loop ABOVE the
     * round's materialized leaf ([[materialize]]): `round` is a changing
-    * literal, and embedding it inside the otherwise identically-shaped
-    * round tree would bust the generated-code cache every round. */
+    * literal, kept out so the round tree has the same shape every round.
+    * That shape alone does not make generated code reusable: a round's
+    * plans need ~150 distinct classes against Spark's 100-entry codegen
+    * cache, so a compiled round recompiles them all; small rounds run
+    * interpreted instead (`CrawlConfig.interpretRoundsUpTo`). */
   def stampTimings(results: DataFrame, round: Int, cfg: CrawlConfig): DataFrame = {
     val slotMs = cfg.crawlDelayMs.toLong + 1L
     val roundBase = cfg.virtualEpochMs + round.toLong * cfg.hostQuotaPerRound * slotMs
@@ -590,8 +593,9 @@ object FrontierRound {
     // round opens (+1 = the reference's strictly-greater gate, is_blocked
     // holds while elapsed <= rate_limiting_ms, http_client.rs:79-83).
     // [[stampTimings]] adds the round's absolute base — `round` is a
-    // changing literal and must stay OUT of this (identically-shaped,
-    // codegen-cached) round tree.
+    // changing literal and stays OUT of this identically-shaped round tree
+    // (whose generated classes still outnumber the codegen cache, see
+    // [[stampTimings]]).
     val fetchOffset = ((col("host_slot") - 1).cast("long") *
       (cfg.crawlDelayMs.toLong + 1L)).as("fetch_offset_ms")
     // status rows (depth / robots / connection error) carry no HTTP

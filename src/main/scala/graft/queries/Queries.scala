@@ -716,11 +716,10 @@ object Queries {
     // blooms off: at 30 urls the per-round bloom build jobs cost more than
     // they save (the bloom path is covered by SeenFilterSpec + CrawlE2ESpec).
     // Shuffle partitions scaled to the data for the loop's internal actions
-    // (30-row rounds do not want 32-task shuffles), and whole-stage codegen
-    // off (Janino-compiling every stage of every round costs far more than
-    // interpreting 30 rows); both restored after.
+    // (30-row rounds do not want 32-task shuffles), restored after. The
+    // loop itself runs rounds this small interpreted
+    // (`CrawlConfig.interpretRoundsUpTo`).
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevCodegen = s.conf.get("spark.sql.codegen.wholeStage")
     val prevConstr = s.conf.get("spark.sql.constraintPropagation.enabled")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     val prevExcl = s.conf.getOption("spark.sql.optimizer.excludedRules")
@@ -728,7 +727,6 @@ object Queries {
       val results =
         try {
           s.conf.set("spark.sql.shuffle.partitions", "1")
-          s.conf.set("spark.sql.codegen.wholeStage", "false")
           s.conf.set("spark.sql.constraintPropagation.enabled", "false")
           s.conf.set("spark.sql.adaptive.enabled", "false")
           // ConvertToLocalRelation eagerly evaluates projections over the
@@ -754,7 +752,6 @@ object Queries {
               useBloomSeen = false), stateDir).results
         } finally {
           s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          s.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
           s.conf.set("spark.sql.constraintPropagation.enabled", prevConstr)
           s.conf.set("spark.sql.adaptive.enabled", prevAqe)
           prevExcl match {

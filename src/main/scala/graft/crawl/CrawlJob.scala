@@ -28,13 +28,11 @@ object CrawlJob {
     * uuid, page_response.rs:20, minted per PUT /crawl). Batch analog: a
     * DETERMINISTIC name-based UUID over the task identity (seed list +
     * config), so replays and resumes of the same task agree on it while two
-    * different tasks appended to one warehouse stay distinguishable. How a
-    * round executes (interpreted or compiled) is not part of the task. */
+    * different tasks appended to one warehouse stay distinguishable. */
   def resolveRunId(seeds: Seq[String], cfg: CrawlConfig): String =
     if (cfg.runId.nonEmpty) cfg.runId
     else java.util.UUID.nameUUIDFromBytes(
-      (seeds.sorted.mkString("\n") + "\u0000" +
-        cfg.copy(runId = "", interpretRoundsUpTo = 0L).toString)
+      (seeds.sorted.mkString("\n") + "\u0000" + cfg.copy(runId = "").toString)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
 
   /** Seed intake (reference: PUT /crawl, server/src/http.rs:24-29 — seed urls
@@ -54,6 +52,43 @@ object CrawlJob {
     spark.emptyDataset[String].toDF("url")
   }
 
+  /** A round whose driver-known frontier count at round start is at most
+    * this runs WITHOUT generated code ([[withInterpretedCode]]). A round's
+    * plans need ~150 distinct generated classes and Spark's JVM-wide
+    * codegen cache holds 100, so compiled rounds recompile nearly all of
+    * them, warm or not (~366 compiles per 3-round `deep_crawl` unit of
+    * `crawlbench`); interpreting is cheaper until a round is large
+    * enough to pay compilation back. Rows, files, filters and manifests are
+    * identical either way. The value is the largest measured size at which
+    * interpreted was no slower: round 1 of a 2-round chain crawl
+    * (`Synth.chainGraph(N, 3)`: frontier N, pages 3N; quota 1, cuckoo on,
+    * compaction every round, local[4], 4 cores), seconds per rep,
+    * interpreted vs compiled, interleaved in one warm JVM:
+    *   2^10  4.34 4.27 4.19            vs 5.79 5.69 5.28
+    *   2^11  3.86 3.90 4.09 3.68 3.72  vs 4.82 5.14 4.62 5.20 5.12
+    *   2^12  4.32 4.04 4.13            vs 5.67 5.26 5.47
+    *   2^13  4.50 4.46 4.61 4.51 4.49  vs 5.36 5.59 5.71 5.58 5.25
+    *   2^14  5.68 5.48 5.75            vs 6.38 6.15 6.41
+    *   2^15  7.54 7.56 7.51 6.87 6.85  vs 6.32 6.86 8.02 6.86 6.13
+    *   2^16  11.74 12.06 11.42         vs 9.90 10.02 9.87
+    * Every round also joins the whole pages table, so the same round 1 was
+    * timed over chain webs of N hosts with L pages each, far more pages
+    * than frontier (same setup, 3 reps each):
+    *   N 2^10, pages 2^12  3.31 3.02 3.01  vs 4.14 4.37 3.95
+    *   N 2^10, pages 2^19  3.69 3.59 3.15  vs 4.82 4.77 4.33
+    *   N 2^10, pages 2^21  6.59 5.96 5.89  vs 7.54 7.46 6.20
+    *   N 2^14, pages 2^19  5.05 6.55 6.13  vs 5.79 6.67 6.54
+    *   N 2^14, pages 2^21  8.52 8.90 9.88  vs 8.43 9.70 9.46
+    * The pages scan costs both modes about the same, but at the gate with
+    * 2^21 pages the modes are even: pages tables above 2^21 rows are not
+    * measured, and there the gate may interpret rounds that compiled code
+    * would run faster. */
+  private[crawl] val InterpretRoundsUpTo = 16384L
+
+  /** Runs the crawl over `stateDir` (resuming from its last committed round
+    * when `resume`). Rounds of at most [[InterpretRoundsUpTo]] frontier urls
+    * set the session's codegen confs for their duration, so `spark` must not
+    * run other queries concurrently with a crawl. */
   def run(
       spark: SparkSession,
       seeds: Seq[String],
@@ -62,7 +97,21 @@ object CrawlJob {
       redirects: DataFrame,
       cfg: CrawlConfig,
       stateDir: String,
-      resume: Boolean = false): JobResult = {
+      resume: Boolean = false): JobResult =
+    run(spark, seeds, pages, robots, redirects, cfg, stateDir, resume, InterpretRoundsUpTo)
+
+  /** [[run]] with the interpreted-round gate given (0 = compile every
+    * round, `Long.MaxValue` = interpret every round). */
+  private[crawl] def run(
+      spark: SparkSession,
+      seeds: Seq[String],
+      pages: DataFrame,
+      robots: DataFrame,
+      redirects: DataFrame,
+      cfg: CrawlConfig,
+      stateDir: String,
+      resume: Boolean,
+      interpretRoundsUpTo: Long): JobResult = {
     val io = new TableIO(spark, stateDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val runId = resolveRunId(seeds, cfg)
@@ -144,9 +193,9 @@ object CrawlJob {
     var frontierCount = frontier.count()
     val roundSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
     // a round small enough runs without generated code (see
-    // [[CrawlConfig.interpretRoundsUpTo]]); rows are the same either way
+    // [[InterpretRoundsUpTo]]); rows are the same either way
     while (frontierCount > 0 && round < cfg.maxRounds)
-      withInterpretedCode(spark, frontierCount <= cfg.interpretRoundsUpTo) {
+      withInterpretedCode(spark, frontierCount <= interpretRoundsUpTo) {
       val roundT0 = System.nanoTime()
       // broadcast payload: a path + bucket count + Hadoop conf, constant
       // size at any scale; bloomDir empty (fresh round 0) ⇒ seen is empty ⇒

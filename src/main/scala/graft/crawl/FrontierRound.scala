@@ -254,7 +254,7 @@ object FrontierRound {
     * That shape alone does not make generated code reusable: a round's
     * plans need ~150 distinct classes against Spark's 100-entry codegen
     * cache, so a compiled round recompiles them all; small rounds run
-    * interpreted instead (`CrawlConfig.interpretRoundsUpTo`). */
+    * interpreted instead (`CrawlJob.InterpretRoundsUpTo`). */
   def stampTimings(results: DataFrame, round: Int, cfg: CrawlConfig): DataFrame = {
     val slotMs = cfg.crawlDelayMs.toLong + 1L
     val roundBase = cfg.virtualEpochMs + round.toLong * cfg.hostQuotaPerRound * slotMs

@@ -108,26 +108,6 @@ final case class CrawlConfig(
       * A re-enable after an off stretch rebuilds the filters from the full
       * frontier (stale filters are never probed). */
     cuckooAutoEnableAt: Long = 0L,
-    /** Run a round WITHOUT generated code (whole-stage codegen off,
-      * expressions interpreted) when its driver-known frontier count at
-      * round start is at most this (0 = always compile, `Long.MaxValue` =
-      * never). A small round's plans need ~150 distinct generated classes
-      * and Spark's JVM-wide codegen cache holds 100, so compiled rounds
-      * recompile ~366 classes each, warm or not; interpreting is cheaper
-      * until a round is large enough to pay compilation back. Rows, files,
-      * filters and manifests are identical either way. The default is the
-      * largest measured size at which interpreted was no slower: round 1
-      * of a 2-round chain crawl (N hosts, quota 1, cuckoo on, compaction
-      * every round, local[4], 4 cores), seconds per rep, interpreted vs
-      * compiled, interleaved in one warm JVM:
-      *   2^10  4.34 4.27 4.19            vs 5.79 5.69 5.28
-      *   2^11  3.86 3.90 4.09 3.68 3.72  vs 4.82 5.14 4.62 5.20 5.12
-      *   2^12  4.32 4.04 4.13            vs 5.67 5.26 5.47
-      *   2^13  4.50 4.46 4.61 4.51 4.49  vs 5.36 5.59 5.71 5.58 5.25
-      *   2^14  5.68 5.48 5.75            vs 6.38 6.15 6.41
-      *   2^15  7.54 7.56 7.51 6.87 6.85  vs 6.32 6.86 8.02 6.86 6.13
-      *   2^16  11.74 12.06 11.42         vs 9.90 10.02 9.87 */
-    interpretRoundsUpTo: Long = 16384L,
     /** Cuckoo sizing: expected frontier urls per bucket (the filter is
       * created with ~19% slot headroom; a bucket loaded past capacity goes
       * dead = exact-join fallback until the next growth rebuild, which

@@ -718,7 +718,7 @@ object Queries {
     // Shuffle partitions scaled to the data for the loop's internal actions
     // (30-row rounds do not want 32-task shuffles), restored after. The
     // loop itself runs rounds this small interpreted
-    // (`CrawlConfig.interpretRoundsUpTo`).
+    // (`CrawlJob.InterpretRoundsUpTo`).
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevConstr = s.conf.get("spark.sql.constraintPropagation.enabled")
     val prevAqe = s.conf.get("spark.sql.adaptive.enabled")

@@ -10,7 +10,7 @@ import graft.io.TableIO
 import graft.model.CrawlConfig
 import graft.synth.Synth
 
-/** `CrawlConfig.interpretRoundsUpTo`: a round run without generated code
+/** `CrawlJob.InterpretRoundsUpTo`: a round run without generated code
   * gives exactly what a compiled round gives (rows, order, seen set,
   * manifests, filter files), compiles nothing once warm, and leaves the
   * caller's codegen settings as it found them, on success and on a crash. */
@@ -29,9 +29,11 @@ class InterpretedRoundSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   private val deepCfg = CrawlConfig(hostQuotaPerRound = 1, useCuckooFrontier = true,
     seenCompactEvery = 1, runId = "interpreted-deep")
 
-  private def crawl(g: Synth.Graph, cfg: CrawlConfig, root: String) = {
+  /** A fresh crawl with the interpreted-round gate at `gate`. */
+  private def crawl(g: Synth.Graph, cfg: CrawlConfig, root: String, gate: Long) = {
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, root)
+    CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, root,
+      resume = false, gate)
   }
 
   /** Every file under `root/sub` but the `.crc` sidecars, by relative
@@ -70,7 +72,7 @@ class InterpretedRoundSpec extends AnyFunSuite with SparkTestBase.TempDirs {
     test(s"parity, $name: interpreted rounds equal compiled rounds") {
       val outcomes = Seq(Interpreted, Compiled).map { gate =>
         val root = tempDir(s"interpreted-$gate")
-        val job = crawl(g, cfg.copy(interpretRoundsUpTo = gate), root)
+        val job = crawl(g, cfg, root, gate)
         assert(job.rounds >= minRounds)
         outcome(root, job)
       }
@@ -87,7 +89,7 @@ class InterpretedRoundSpec extends AnyFunSuite with SparkTestBase.TempDirs {
   test("compile pin: a warm interpreted crawl compiles nothing, a compiled one does") {
     def compiles(gate: Long): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      assert(crawl(deepWeb, deepCfg.copy(interpretRoundsUpTo = gate), tempDir("pin")).rounds == 3)
+      assert(crawl(deepWeb, deepCfg, tempDir("pin"), gate).rounds == 3)
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     }
     compiles(Interpreted) // warm: the pre-loop plans compile once
@@ -112,13 +114,11 @@ class InterpretedRoundSpec extends AnyFunSuite with SparkTestBase.TempDirs {
       "set" -> Seq(Some("true"), Some("FALLBACK")))) {
     test(s"restore: the caller's codegen confs ($label) survive a run and a crashed run") {
       asCaller(caller) {
-        assert(crawl(deepWeb, deepCfg.copy(interpretRoundsUpTo = Interpreted),
-          tempDir("restore")).rounds == 3)
+        assert(crawl(deepWeb, deepCfg, tempDir("restore"), Interpreted).rounds == 3)
         assert(callerConfs == caller)
         val root = s"crashfs://${tempDir("restore-crash")}"
         CrashFs.arm((op, p) => op == "create" && p.contains("/rounds/round=1/"))
-        val e = try intercept[Exception](crawl(deepWeb,
-          deepCfg.copy(interpretRoundsUpTo = Interpreted), root))
+        val e = try intercept[Exception](crawl(deepWeb, deepCfg, root, Interpreted))
         finally CrashFs.disarm()
         assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
           .exists(x => Option(x.getMessage).exists(_.contains("injected crash"))), e)

@@ -273,7 +273,7 @@ object Bench {
     // (N → 4N executors). Two cores per executor is the realistic node
     // shape — a fleet of 1-core JVMs pays a per-process tax (GC/JIT pools
     // sized for the host, no executor-local shuffle) that measures the JVM,
-    // not the engine. ScaleProbe r2 data: 12M urls, full round — 1×2:
+    // not the engine. Scaling-probe r2 data: 12M urls, full round — 1×2:
     // 54.0s → 4×2: 16.4s (eff 0.83); the same round at 2×1 → 8×1 lands at
     // 0.76 for identical plans.
     val nExec = sys.env.getOrElse("SPARK_GRAFT_N_EXEC", "1").toInt

@@ -12,7 +12,7 @@ import graft.synth.Synth
   * the scale story: per-round cost must stay FLAT (no listing/lineage cost
   * growing with round number) and every state table's dir listing must stay
   * BOUNDED by the compaction cadence, not by total rounds. Not part of the
-  * driver contract — a measurement tool like [[ScaleProbe]]; results are
+  * driver contract — a measurement tool; results are
   * recorded in BASELINE.md.
   *
   * Usage: DeepCrawlProbe [chainLen] [hosts] [compactEvery] [--cuckoo]

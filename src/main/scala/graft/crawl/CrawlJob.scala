@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.{RoundManifest, TableIO}
 import graft.model._
+import graft.util.SessionConfs
 
 /** The batch-iterative crawl driver (reference lifecycle: SURVEY.md §3.1 →
   * our §3.4 pipeline). Each round is one Dataset job; the driver loop is the
@@ -24,11 +25,12 @@ object CrawlJob {
   final case class JobResult(rounds: Int, results: DataFrame, metrics: DataFrame,
       roundSecs: Seq[Double] = Nil)
 
-  /** The crawl task's id (reference: every response carries the task's
-    * uuid, page_response.rs:20, minted per PUT /crawl). Batch analog: a
-    * DETERMINISTIC name-based UUID over the task identity (seed list +
-    * config), so replays and resumes of the same task agree on it while two
-    * different tasks appended to one warehouse stay distinguishable. */
+  /** The id of a fresh crawl task (reference: every response carries the
+    * task's uuid, page_response.rs:20, minted per PUT /crawl). Batch analog:
+    * a DETERMINISTIC name-based UUID over the task identity (seed list +
+    * config), so replays of the same task agree on it while two different
+    * tasks appended to one warehouse stay distinguishable. A resume does
+    * not call this: it keeps the id its committed results carry. */
   def resolveRunId(seeds: Seq[String], cfg: CrawlConfig): String =
     if (cfg.runId.nonEmpty) cfg.runId
     else java.util.UUID.nameUUIDFromBytes(
@@ -114,7 +116,6 @@ object CrawlJob {
       interpretRoundsUpTo: Long): JobResult = {
     val io = new TableIO(spark, stateDir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val runId = resolveRunId(seeds, cfg)
     // static per-job tables as checkpointed leaves (not just cached), so
     // every round's plan embeds a LogicalRDD leaf instead of re-analyzing
     // their plans (resolveRedirects checkpoints internally)
@@ -134,21 +135,20 @@ object CrawlJob {
     // table is never rescanned for a metric) + the bloom capacity derived
     // from it (filters are rebuilt wider when the load crosses capacity)
     var seenTotal = 0L
-    var bloomCap = cfg.bloomExpectedPerBucket
+    var bloomCap = SeenFilter.BloomExpectedPerBucket
     // frontier cuckoo state (opt-in): like the blooms, the driver tracks
     // only the latest committed filter DIRECTORY — the per-bucket files are
     // written and delta-updated executor-side ([[FrontierFilter]])
     var cuckooDir: Option[String] = None
     var cuckooCap = cfg.cuckooExpectedPerBucket
-    // the cuckoo gate: forced on by config, or auto-engaged when the
-    // driver-known frontier count crosses the threshold (below it the
-    // O(|delta|) update costs more than the exact join it accelerates).
-    // Rows are identical either way — the probe only short-circuits.
-    def cuckooOn(frontierN: Long): Boolean = cfg.useCuckooFrontier ||
-      (cfg.cuckooAutoEnableAt > 0 && frontierN > cfg.cuckooAutoEnableAt)
-    val cuckooConfigured = cfg.useCuckooFrontier || cfg.cuckooAutoEnableAt > 0
 
     val last = if (resume) io.lastCommittedRound() else -1
+    // a resume keeps the id its committed rows carry, so a resume that
+    // changes the config (say `maxRounds`) does not give one task two ids
+    val runId =
+      if (last < 0 || cfg.runId.nonEmpty) resolveRunId(seeds, cfg)
+      else io.readResults().select("run_id").head(1).headOption
+        .map(_.getString(0)).getOrElse(resolveRunId(seeds, cfg))
     if (last >= 0) {
       round = last + 1
       frontier = io.readFrontier(last)
@@ -158,25 +158,16 @@ object CrawlJob {
       // checkpoints without the field fall back to the one-time count)
       seenTotal = io.readManifest(last).flatMap(RoundManifest.seenTotal)
         .getOrElse(seen.count())
+      // a missing filter is only an accelerator gap, for either filter: the
+      // first resumed round runs the exact join, then its round-end filter
+      // write builds the whole filter from the committed table (the
+      // `isEmpty` branches below)
       if (cfg.useBloomSeen) {
-        bloomCap = SeenFilter.sizedFor(cfg.bloomExpectedPerBucket,
+        bloomCap = SeenFilter.sizedFor(SeenFilter.BloomExpectedPerBucket,
           seenTotal / math.max(cfg.seenBuckets, 1))
         bloomDir = Some(io.bloomsDir(last)).filter(FilterInventory.exists(_, conf))
-        // exact-resume guard: a checkpoint written pre-bloom (or partially
-        // restored) has seen rows but no bloom inventory — rebuild the filter
-        // files from the seen table (distributed; no driver bytes). A
-        // missing-file probe falls back to the exact join, so this guard is
-        // an accelerator repair, never a correctness one.
-        if (bloomDir.isEmpty && seenTotal > 0) {
-          SeenFilter.writeMergedBlooms(seen.select("url"), cfg.seenBuckets,
-            bloomCap, None, io.bloomsDir(last))
-          bloomDir = Some(io.bloomsDir(last))
-        }
       }
-      // missing cuckoo files are only an accelerator gap: the first resumed
-      // round runs the exact join, then the round-end write rebuilds them
-      // from the full frontier (the cuckooDir.isEmpty branch below)
-      if (cuckooConfigured) {
+      if (cfg.useCuckooFrontier) {
         cuckooDir = Some(io.cuckooDir(last)).filter(FilterInventory.exists(_, conf))
         // derive the resumed cap from the live files' actual width:
         // the pre-crash run may have GROWN past the config default, and a
@@ -198,9 +189,9 @@ object CrawlJob {
       withInterpretedCode(spark, frontierCount <= interpretRoundsUpTo) {
       val roundT0 = System.nanoTime()
       // broadcast payload: a path + bucket count + Hadoop conf, constant
-      // size at any scale; bloomDir empty (fresh round 0) ⇒ seen is empty ⇒
-      // the plain anti-join is already trivial, no probe needed
-      val blooms = bloomDir.filter(_ => cfg.useBloomSeen).map(d =>
+      // size at any scale; bloomDir empty (fresh round 0, or a resume
+      // without a filter) ⇒ the plain anti-join, no probe
+      val blooms = bloomDir.map(d =>
         SeenFilter.broadcastFileBlooms(spark, cfg.seenBuckets, d))
       // salted scheduling only when some host CAN exceed the threshold —
       // the driver-known frontier total gates it. The mega set stays a
@@ -210,12 +201,10 @@ object CrawlJob {
         if (frontierCount > cfg.megaHostThreshold)
           Some(FrontierRound.findMegaHostsDf(frontier, cfg.megaHostThreshold))
         else None
-      // frontier-membership probe (configured or auto-engaged): same
-      // constant-size broadcast shape as the blooms — a directory path +
-      // bucket count. cuckooDir is only ever non-empty when last round's
-      // write gate was on, so the files always cover the round-start
-      // frontier exactly.
-      val cuckoo = cuckooDir.filter(_ => cuckooOn(frontierCount)).map(d =>
+      // frontier-membership probe: same constant-size broadcast shape as
+      // the blooms — a directory path + bucket count. cuckooDir is the last
+      // round's write, so the files cover the round-start frontier exactly.
+      val cuckoo = cuckooDir.map(d =>
         FrontierFilter.broadcastFileCuckoos(spark, cfg.seenBuckets, d))
       val out = FrontierRound.run(spark, round, frontier, seen, pages, robotsCache, resolved, cfg, blooms, megaHosts, cuckoo)
       // ONE action materializes results, next frontier, new-seen and the
@@ -246,39 +235,35 @@ object CrawlJob {
       seenTotal += m.newSeenCount
 
       if (cfg.useBloomSeen) {
-        val cap = SeenFilter.sizedFor(cfg.bloomExpectedPerBucket,
+        val cap = SeenFilter.sizedFor(SeenFilter.BloomExpectedPerBucket,
           seenTotal / math.max(cfg.seenBuckets, 1))
         val dir = io.bloomsDir(round)
-        if (cap > bloomCap) {
-          // load crossed capacity: rebuild ALL filters wider from the full
-          // seen table (amortized by doubling; merge needs equal widths)
+        if (cap > bloomCap || (bloomDir.isEmpty && seenTotal > m.newSeenCount)) {
+          // load crossed capacity (amortized by doubling; merge needs equal
+          // widths), or a resume found no filter for the seen urls of
+          // earlier rounds: build ALL filters from the full seen table
           bloomCap = cap
           SeenFilter.writeMergedBlooms(io.readSeen(round).select("url"),
             cfg.seenBuckets, bloomCap, None, dir)
         } else {
           // incremental: this round's slice folded into the previous round's
-          // files (touched buckets merged executor-side, the rest referenced)
+          // files (touched buckets merged executor-side, the rest
+          // referenced); a fresh round 0 has no previous files
           SeenFilter.writeMergedBlooms(m.newSeen, cfg.seenBuckets,
             bloomCap, bloomDir, dir)
         }
         bloomDir = Some(dir)
       }
-      if (cuckooConfigured && !cuckooOn(frontierCount)) {
-        // gate off for the NEXT round (frontier below the auto threshold):
-        // stop maintaining the filters and forget the inventory — a later
-        // re-enable must rebuild from the then-current frontier, never
-        // probe stale files (stale filters could return false negatives)
-        cuckooDir = None
-      } else if (cuckooOn(frontierCount)) {
+      if (cfg.useCuckooFrontier) {
         val cap = SeenFilter.sizedFor(cfg.cuckooExpectedPerBucket,
           frontierCount / math.max(cfg.seenBuckets, 1))
         val dir = io.cuckooDir(round)
         if (cuckooDir.isEmpty || cap > cuckooCap) {
-          // fresh init / resume repair / the frontier outgrew capacity:
-          // build all filters from the full frontier table (distributed,
-          // no driver bytes; amortized by capacity doubling). `frontier`
-          // is already the re-read post-round table, exactly the set the
-          // delta path would have maintained.
+          // fresh init / resume without a filter / the frontier outgrew
+          // capacity: build all filters from the full frontier table
+          // (distributed, no driver bytes; amortized by capacity doubling).
+          // `frontier` is already the re-read post-round table, exactly the
+          // set the delta path would have maintained.
           cuckooCap = math.max(cuckooCap, cap)
           FrontierFilter.writeFromUrls(frontier.select("url"), cfg.seenBuckets,
             cuckooCap, dir)
@@ -335,21 +320,13 @@ object CrawlJob {
   /** Runs `body` with Spark's generated code off when `on`: no whole-stage
     * codegen, and every projection, predicate and ordering built by its
     * interpreted factory (`factoryMode` is an internal conf, but no public
-    * one stops per-operator compilation). Restores exactly what the caller
-    * had, set or unset. The session confs reach executor tasks as SQL
-    * local properties, so tasks interpret too. */
+    * one stops per-operator compilation). The confs are scoped
+    * ([[SessionConfs.scoped]]), so tasks interpret too and the caller's
+    * settings come back as they were. */
   private def withInterpretedCode[T](spark: SparkSession, on: Boolean)(body: => T): T =
     if (!on) body
-    else {
-      val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-      val prev = spark.conf.getAll
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally confs.foreach { case (k, _) =>
-        prev.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
-    }
+    else SessionConfs.scoped(spark, "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
 
   /** A static input as a checkpointed leaf. An embedded fixture (every
     * leaf of its analyzed plan is a LocalRelation) parallelizes

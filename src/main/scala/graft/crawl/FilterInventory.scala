@@ -96,18 +96,10 @@ object FilterInventory {
     * agree on it whatever the working directory. */
   private def write(dir: String, conf: Configuration, entries: Map[Int, String]): Unit = {
     val d = new HPath(dir)
-    val fs = d.getFileSystem(conf)
-    val tmp = new HPath(d, s"$FileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.toSeq.sortBy(_._1).map { case (b, p) =>
-      s"$b\t${qualify(new HPath(p), conf)}\n"
-    }.mkString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new HPath(d, FileName)
-    if (fs.exists(dst) && !fs.delete(dst, false))
-      throw new java.io.IOException(s"delete failed: $dst")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename failed: $tmp -> $dst")
+    graft.io.EngineFs.atomicWrite(d.getFileSystem(conf), d, FileName,
+      entries.toSeq.sortBy(_._1).map { case (b, p) =>
+        s"$b\t${qualify(new HPath(p), conf)}\n"
+      }.mkString.getBytes(StandardCharsets.UTF_8))
   }
 
   /** Does `dir` hold a committed filter (its manifest)? */

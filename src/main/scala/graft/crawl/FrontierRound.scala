@@ -113,6 +113,17 @@ object FrontierRound {
     "start_url string, final_url string, n_redirects int, terminal_is_redirect boolean, " +
       s"terminal_status int, redirects $chainType")
 
+  /** Redirect-closure join strategy threshold: when the redirects fixture
+    * holds at most this many rows (known exactly — the closure build
+    * counts its hop cache anyway), each hop of the closure's semi-naive
+    * walk joins the still-redirecting chains against a broadcast of the
+    * hop table (one broadcast per hop, each its own job): a map-side
+    * BroadcastHashJoin, no shuffle or sort of the chains. Above it the
+    * hops keep shuffle joins (a huge redirects table must never be
+    * broadcast). Purely a join-strategy heuristic: either path computes
+    * the same closure. */
+  val RedirectBroadcastMaxRows = 1L << 20
+
   /** Transitive closure of the redirects fixture, bounded by maxRedirects —
     * computed ONCE per job (redirect chains are static), so each round pays a
     * single join instead of maxRedirects+1 iterative ones
@@ -158,7 +169,7 @@ object FrontierRound {
     // otherwise checkpoints at ~one partition per row, and every round's
     // redirect join then dispatches that many near-empty tasks.
     val nHops = r.count()
-    val smallHopTable = nHops <= cfg.redirectBroadcastMaxRows
+    val smallHopTable = nHops <= RedirectBroadcastMaxRows
     // an empty hop table has nothing to materialize: an empty local
     // relation lets every round's optimizer drop the redirect join outright
     if (nHops == 0) {
@@ -436,8 +447,7 @@ object FrontierRound {
       cfg: CrawlConfig): DataFrame = {
     val k = cfg.hostQuotaPerRound
     val whost = Window.partitionBy(col("host")).orderBy(prioOrder: _*)
-    val normal = slotted(normalRows
-      .withColumn("__rn", row_number().over(whost)), col("__rn"), k).drop("__rn")
+    val normal = scheduleSingle(normalRows, cfg)
     val p1 = megaRows
       .withColumn("__salt", pmod(xxhash64(col("url")), lit(cfg.saltBuckets.toLong)))
       .withColumn("__rn1", row_number().over(

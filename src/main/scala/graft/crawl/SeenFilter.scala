@@ -37,6 +37,11 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object SeenFilter {
 
+  /** Bloom sizing: expected urls per bucket (3% fpp at this load), the
+    * base capacity [[sizedFor]] doubles. At 10^10 urls raise
+    * `CrawlConfig.seenBuckets` so this stays ≤ ~4M per bucket. */
+  val BloomExpectedPerBucket = 4096L
+
   def bucketOf(url: Column, buckets: Int): Column =
     pmod(xxhash64(url), lit(buckets.toLong))
 

@@ -3,7 +3,7 @@ package graft.io
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, RawLocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's raw local file system with `setPermission` through `java.nio`.
@@ -43,5 +43,22 @@ object EngineFs {
     val c = new Configuration(base)
     options.foreach { case (k, v) => c.set(k, v) }
     c
+  }
+
+  /** Write small bytes to `dir/name` atomically: temp file + rename.
+    * Hadoop FS ops report many failures as `false` instead of throwing —
+    * every boolean is checked so a failed marker write can never be
+    * mistaken for a commit. */
+  def atomicWrite(fs: FileSystem, dir: HPath, name: String, bytes: Array[Byte]): Unit = {
+    if (!fs.mkdirs(dir))
+      throw new java.io.IOException(s"mkdirs failed: $dir")
+    val tmp = new HPath(dir, s"$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    val dst = new HPath(dir, name)
+    if (fs.exists(dst) && !fs.delete(dst, false))
+      throw new java.io.IOException(s"delete failed: $dst")
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"rename failed: $tmp -> $dst")
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnShim
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.model.{FrontierEntry, ResultRow, RoundMetrics}
+import graft.util.SessionConfs
 
 /** Iceberg-shaped table/checkpoint seam over Parquet (SURVEY.md §7.1.5).
   *
@@ -53,23 +54,6 @@ final class TableIO(spark: SparkSession, root: String) {
   private def hp(parts: String*): HPath = new HPath(p(parts: _*))
   private val fs: FileSystem =
     new HPath(root).getFileSystem(EngineFs.conf(spark.sparkContext.hadoopConfiguration))
-
-  /** Write small bytes to `dir/name` atomically: temp file + rename.
-    * Hadoop FS ops report many failures as `false` instead of throwing —
-    * every boolean is checked so a failed marker write can never be
-    * mistaken for a commit. */
-  private def atomicWrite(dir: HPath, name: String, bytes: Array[Byte]): Unit = {
-    if (!fs.mkdirs(dir))
-      throw new java.io.IOException(s"mkdirs failed: $dir")
-    val tmp = new HPath(dir, s"$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    val dst = new HPath(dir, name)
-    if (fs.exists(dst) && !fs.delete(dst, false))
-      throw new java.io.IOException(s"delete failed: $dst")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename failed: $tmp -> $dst")
-  }
 
   private def readText(f: HPath): String = {
     val in = fs.open(f)
@@ -160,9 +144,7 @@ final class TableIO(spark: SparkSession, root: String) {
     // seam: an embedding session on a non-UTC zone would export local wall
     // time under the hardcoded 'UTC' label. Pin the session zone to UTC for
     // the plan build + write (the expression captures the zone at analysis)
-    val prevTz = spark.conf.get("spark.sql.session.timeZone")
-    try {
-      spark.conf.set("spark.sql.session.timeZone", "UTC")
+    SessionConfs.scoped(spark, "spark.sql.session.timeZone" -> "UTC") {
       val joined = links.map(l =>
         df.join(l.withColumnRenamed("url", "__links_url"),
           col("url") === col("__links_url"), "left"))
@@ -212,7 +194,7 @@ final class TableIO(spark: SparkSession, root: String) {
           col("run_id").as("task_uuid"))).as("value"))
         .write.options(EngineFs.options).mode(SaveMode.Overwrite)
         .text(p("results_jsonl", s"round=$round"))
-    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+    }
   }
 
   def readResultsJsonl(round: Int): DataFrame =
@@ -230,7 +212,7 @@ final class TableIO(spark: SparkSession, root: String) {
 
   /** Atomic commit marker: write to a temp file, then rename into place. */
   def commitRound(round: Int, manifestJson: String): Unit =
-    atomicWrite(hp("manifest"), s"round=$round.json",
+    EngineFs.atomicWrite(fs, hp("manifest"), s"round=$round.json",
       manifestJson.getBytes(StandardCharsets.UTF_8))
 
   /** The committed manifest JSON of `round`, if present. */
@@ -444,7 +426,7 @@ final class TableIO(spark: SparkSession, root: String) {
     val below = live.filter(_ < keepRound)
     if (below.isEmpty) return
     if (!folds.contains(keepRound))
-      atomicWrite(hp("manifest"), foldName(keepRound),
+      EngineFs.atomicWrite(fs, hp("manifest"), foldName(keepRound),
         roundMetrics().filter(_.round < keepRound).map(RoundManifest.encode)
           .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     folds.filter(_ < keepRound).foreach(k => fs.delete(hp("manifest", foldName(k)), false))

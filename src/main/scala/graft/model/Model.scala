@@ -73,23 +73,14 @@ final case class CrawlConfig(
     /** Also export each round's results as JSONL (S5 parity path). */
     exportJsonl: Boolean = false,
     /** Crawl-task id stamped on every [[ResultRow.run_id]] (reference
-      * task_uuid, page_response.rs:20). Empty = derive a deterministic UUID
-      * from seeds + config at job entry (replay- and resume-stable); set it
-      * explicitly for per-launch uniqueness. */
+      * task_uuid, page_response.rs:20). Empty = a resume keeps the id its
+      * checkpoint's results carry, and a fresh crawl derives a
+      * deterministic UUID from seeds + config (replay-stable). The derived
+      * id hashes the config's string form, so it changes whenever a field
+      * is added to or removed from this class: a fresh crawl of the same
+      * task gets a new id then, a resumed one does not. Set it explicitly
+      * for per-launch uniqueness. */
     runId: String = "",
-    /** Bloom sizing: expected urls per bucket (3% fpp at this load). At
-      * 10^10 urls raise seenBuckets so this stays ≤ ~4M per bucket. */
-    bloomExpectedPerBucket: Long = 4096L,
-    /** Redirect-closure join strategy threshold: when the redirects fixture
-      * holds at most this many rows (known exactly — the closure build
-      * counts its hop cache anyway), each hop of the closure's semi-naive
-      * walk joins the still-redirecting chains against a broadcast of the
-      * hop table (one broadcast per hop, each its own job): a map-side
-      * BroadcastHashJoin, no shuffle or sort of the chains. Above it the
-      * hops keep shuffle joins (a huge redirects table must never be
-      * broadcast). Purely a join-strategy heuristic: either path computes
-      * the same closure. */
-    redirectBroadcastMaxRows: Long = 1L << 20,
     /** Accelerate the enqueue-time still-queued anti-join with per-bucket
       * CUCKOO filters mirroring the frontier (north_rule "Bloom/cuckoo" —
       * the deletable half: urls leave the frontier when scheduled, which a
@@ -98,16 +89,6 @@ final case class CrawlConfig(
       * bucket files probe all-true). See
       * [[graft.crawl.FrontierFilter]]. */
     useCuckooFrontier: Boolean = false,
-    /** Auto-engage the cuckoo frontier gate when the driver-known frontier
-      * count exceeds this (0 = never auto-engage; `useCuckooFrontier=true`
-      * forces it on regardless). Below the threshold the per-round delta
-      * update costs more than the exact join it accelerates (BASELINE.md
-      * crossover ~15M urls locally), so at the design point the gate flips
-      * itself on as the frontier widens and off if it collapses — rows are
-      * identical either way (the probe only short-circuits the exact join).
-      * A re-enable after an off stretch rebuilds the filters from the full
-      * frontier (stale filters are never probed). */
-    cuckooAutoEnableAt: Long = 0L,
     /** Cuckoo sizing: expected frontier urls per bucket (the filter is
       * created with ~19% slot headroom; a bucket loaded past capacity goes
       * dead = exact-join fallback until the next growth rebuild, which

@@ -7,6 +7,7 @@ import graft.crawl.{CrawlJob, FrontierRound}
 import graft.model.CrawlConfig
 import graft.pipeline.{CorpusOps, DedupOps, MediaOps, SimOps, TextOps}
 import graft.synth.Synth
+import graft.util.SessionConfs
 
 /** The driver-contract query inventory: every operator from SURVEY.md §2
   * (crawl-engine ops, expressed over the driver's TPC-H-ish tables where
@@ -719,46 +720,33 @@ object Queries {
     // (30-row rounds do not want 32-task shuffles), restored after. The
     // loop itself runs rounds this small interpreted
     // (`CrawlJob.InterpretRoundsUpTo`).
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevConstr = s.conf.get("spark.sql.constraintPropagation.enabled")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-    val prevExcl = s.conf.getOption("spark.sql.optimizer.excludedRules")
     try {
-      val results =
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "1")
-          s.conf.set("spark.sql.constraintPropagation.enabled", "false")
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-          // ConvertToLocalRelation eagerly evaluates projections over the
-          // embedded fixture LocalRelations ON THE DRIVER during every
-          // optimizer pass (UDF canonicalization included) — measured ~1.1 s
-          // of rule time per flagship run for zero plan benefit on a 30-row
-          // fixture. Semantics are unaffected (optimizer rules are
-          // semantics-preserving; exclusion only skips the fold).
-          s.conf.set("spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
-          // shuffle.partitions=1: a 30-row loop wants exactly one task per
-          // shuffle stage, statically. AQE OFF: with the round folded into
-          // ONE action (results ∪ frontier ∪ newSeen tagged-union
-          // checkpoint, r5), AQE's per-exchange stage-materialization jobs
-          // are the dominant remaining driver cost on a high-dispatch-latency
-          // host — an interleaved A/B of this fixture's crawl (4 reps,
-          // min/median, taken on the checkpoint-only loop this query ran
-          // before): parts=1+AQE 9.7/9.9 s vs parts=1 no-AQE 7.3/7.3 s,
-          // parts=4 no-AQE 7.1/7.5 s. parts=1 no-AQE is chosen for the best
-          // median (most stable).
-          CrawlJob.run(s, g.seeds, pages, robots, redirects,
-            CrawlConfig(maxDepth = 3, hostQuotaPerRound = 4, maxRounds = 12,
-              useBloomSeen = false), stateDir).results
-        } finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          s.conf.set("spark.sql.constraintPropagation.enabled", prevConstr)
-          s.conf.set("spark.sql.adaptive.enabled", prevAqe)
-          prevExcl match {
-            case Some(v) => s.conf.set("spark.sql.optimizer.excludedRules", v)
-            case None => s.conf.unset("spark.sql.optimizer.excludedRules")
-          }
-        }
+      val results = SessionConfs.scoped(s,
+        // shuffle.partitions=1: a 30-row loop wants exactly one task per
+        // shuffle stage, statically. AQE OFF: with the round folded into
+        // ONE action (results ∪ frontier ∪ newSeen tagged-union
+        // checkpoint, r5), AQE's per-exchange stage-materialization jobs
+        // are the dominant remaining driver cost on a high-dispatch-latency
+        // host — an interleaved A/B of this fixture's crawl (4 reps,
+        // min/median, taken on the checkpoint-only loop this query ran
+        // before): parts=1+AQE 9.7/9.9 s vs parts=1 no-AQE 7.3/7.3 s,
+        // parts=4 no-AQE 7.1/7.5 s. parts=1 no-AQE is chosen for the best
+        // median (most stable).
+        "spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.constraintPropagation.enabled" -> "false",
+        "spark.sql.adaptive.enabled" -> "false",
+        // ConvertToLocalRelation eagerly evaluates projections over the
+        // embedded fixture LocalRelations ON THE DRIVER during every
+        // optimizer pass (UDF canonicalization included) — measured ~1.1 s
+        // of rule time per flagship run for zero plan benefit on a 30-row
+        // fixture. Semantics are unaffected (optimizer rules are
+        // semantics-preserving; exclusion only skips the fold).
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") {
+        CrawlJob.run(s, g.seeds, pages, robots, redirects,
+          CrawlConfig(maxDepth = 3, hostQuotaPerRound = 4, maxRounds = 12,
+            useBloomSeen = false), stateDir).results
+      }
       // driver-output rule: every column SCALAR — the driver harness
       // canonicalizes with a pandas sort that cannot hash array/map/binary
       // cells (the r2 q_crawl_e2e crash), so the typed `redirects` chain and

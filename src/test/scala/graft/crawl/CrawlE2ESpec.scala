@@ -253,13 +253,59 @@ class CrawlE2ESpec extends AnyFunSuite with SparkTestBase.TempDirs {
 
     // interrupted: run with maxRounds=2, then resume from checkpoint
     val partDir = tempDir("crawl-part")
-    CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
-      cfg.copy(maxRounds = 2), partDir)
+    def runIds(job: CrawlJob.JobResult) =
+      job.results.select("run_id").distinct().collect().map(_.getString(0)).toSeq
+    val cutIds = runIds(CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
+      cfg.copy(maxRounds = 2), partDir))
+    assert(cutIds.size == 1)
     val resumed = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
       cfg, partDir, resume = true)
 
     assert(resumed.rounds == full.rounds)
     assert(sparkRows(resumed.results) == sparkRows(full.results))
+    // no runId set, and the resume's config differs (maxRounds): its rows
+    // still carry the cut run's id, one id for the whole task
+    assert(runIds(resumed) == cutIds)
+  }
+
+  test("exact resume without Bloom files: the first resumed round rebuilds them from the seen table") {
+    // a web whose later rounds rediscover urls seen before the cut: a
+    // filter built from the resumed round's slice alone would pass those
+    // as never-seen, and they would be crawled twice
+    val g = Synth.graph(seed = 42L, hosts = 3, pagesPerHost = 10)
+    val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 2, runId = "bloom-resume")
+    val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
+    val fullDir = tempDir("bloom-full")
+    val full = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, fullDir)
+
+    val cut = 2
+    val partDir = tempDir("bloom-part")
+    CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg.copy(maxRounds = cut), partDir)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$partDir/blooms"), true))
+    val resumed = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf,
+      cfg, partDir, resume = true)
+
+    assert(resumed.rounds == full.rounds)
+    assert(resumed.rounds - cut >= 2, "the rebuilt filter must be probed by a later round")
+    assert(sparkRows(resumed.results) == sparkRows(full.results))
+    def seenOf(dir: String) = new graft.io.TableIO(spark, dir).readSeen(full.rounds - 1)
+      .select("url").collect().map(_.getString(0)).toSet
+    assert(seenOf(partDir) == seenOf(fullDir))
+  }
+
+  test("q_crawl_e2e returns its pinned rows and leaves the session's confs as it found them") {
+    val before = spark.conf.getAll
+    val rows = graft.queries.Queries.crawlE2E(spark, "").collect()
+    // confs the caller never set stay unset, set ones keep their values
+    assert(spark.conf.getAll == before)
+    // ordered-row hash: fields String.valueOf'd and joined by U+0001, each
+    // row ended by a newline, SHA-256, first 16 hex digits
+    val text = rows.map(r => r.toSeq.map(x => String.valueOf(x.asInstanceOf[AnyRef]))
+      .mkString("\u0001")).mkString("", "\n", "\n")
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString.take(16)
+    assert((rows.length, hash) == ((27, "0606a1dc1c1d3abd")))
   }
 
   test("exact resume across a seen-compaction boundary") {

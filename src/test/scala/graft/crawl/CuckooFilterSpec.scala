@@ -218,24 +218,6 @@ class CuckooFilterSpec extends AnyFunSuite with SparkTestBase.TempDirs {
     }
   }
 
-  test("auto-enable gate: engages above the frontier threshold, disengages below, rows identical") {
-    val g = Synth.graph(seed = 55L, hosts = 3, pagesPerHost = 14)
-    val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)
-    val dir = tempDir("ck-auto")
-    // threshold 4: off for the seed rounds (frontier = 3), on as the BFS
-    // widens, off again as the frontier collapses at the end
-    val cfg = CrawlConfig(maxDepth = 4, hostQuotaPerRound = 3, runId = "t",
-      cuckooAutoEnableAt = 4L)
-    val job = CrawlJob.run(spark, g.seeds, pagesDf, robotsDf, redirectsDf, cfg, dir)
-    assertMatchesSim(g, cfg, job)
-    val io = new graft.io.TableIO(spark, dir)
-    val states = (0 until job.rounds).map(r => FilterInventory.exists(io.cuckooDir(r),
-      spark.sparkContext.hadoopConfiguration))
-    assert(states.exists(identity), "the gate must have engaged mid-crawl")
-    assert(!states.head || !states.last,
-      "the gate must have been off at the narrow end(s) of the crawl")
-  }
-
   test("persistent crawl with the cuckoo frontier gate is row-identical to without") {
     val g = Synth.graph(seed = 99L, hosts = 3, pagesPerHost = 14)
     val (pagesDf, robotsDf, redirectsDf) = Synth.toDfs(spark, g)

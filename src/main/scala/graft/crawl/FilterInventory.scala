@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
+import graft.io.EngineFs
 import graft.util.SerializableHadoopConf
 
 /** How one filter kind reads, writes and tests a per-bucket filter file. */
@@ -96,7 +97,7 @@ object FilterInventory {
     * agree on it whatever the working directory. */
   private def write(dir: String, conf: Configuration, entries: Map[Int, String]): Unit = {
     val d = new HPath(dir)
-    graft.io.EngineFs.atomicWrite(d.getFileSystem(conf), d, FileName,
+    EngineFs.atomicWrite(d.getFileSystem(conf), d, FileName,
       entries.toSeq.sortBy(_._1).map { case (b, p) =>
         s"$b\t${qualify(new HPath(p), conf)}\n"
       }.mkString.getBytes(StandardCharsets.UTF_8))
